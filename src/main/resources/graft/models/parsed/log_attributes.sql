@@ -1,3 +1,3 @@
--- materialized: table
--- Port of bread dbt/models/parsed/log_attributes.sql:1.
-select * from parquet.`{{ var('parsed_root') }}/log_attributes`
+-- materialized: view
+-- Port of bread dbt/models/parsed/log_attributes.sql:1 (DIVERGENCES.md #9).
+select * from {{ source("parsed", "log_attributes") }}

@@ -1,3 +1,3 @@
--- materialized: table
--- Port of bread dbt/models/parsed/tx_result.sql:1.
-select * from parquet.`{{ var('parsed_root') }}/tx_result`
+-- materialized: view
+-- Port of bread dbt/models/parsed/tx_result.sql:1 (DIVERGENCES.md #9).
+select * from {{ source("parsed", "tx_result") }}

@@ -4,7 +4,7 @@ import scala.io.Source
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The reference's 13 dbt models (4 parsed parquet scans + 9 analytics
+/** The reference's 13 dbt models (4 parsed-zone views + 9 analytics
   * models, bread dbt/models + dbt/old_models), ported to Spark SQL and
   * bundled as classpath resources under graft/models/.
   *
@@ -13,9 +13,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    views with the old-postgres schema (FIXTURES.md §3) — `txs(txhash,
   *    height, gas_used, gas_wanted, timestamp)`, `logs(txhash, msg_index,
   *    parsed map<string,array<string>>)`;
-  *  - vars: "parsed_root" → root directory holding the four
-  *    hive-partitioned parquet table dirs (only needed for the four
-  *    parsed models).
+  *  - sources: ("parsed", t) for t in blocks, tx_result, log_attributes,
+  *    events → registered views of the four parsed tables (only needed
+  *    for the four parsed models; `Pipeline.runModels` binds them to the
+  *    zone's files as of that run).
   */
 object BreadModels {
 

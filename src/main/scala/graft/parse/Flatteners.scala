@@ -170,6 +170,9 @@ object Flatteners {
     table.join(if (hintBroadcast) broadcast(b) else b, Seq("height"), "left")
   }
 
+  /** The hive partition columns of every parsed table, outermost first. */
+  val partitionCols: Seq[String] = Seq("year", "month", "day")
+
   /** Hive-partitioned parquet sink (parse.py:182-200): append-mode,
     * year/month/day layout — downstream scans get partition pruning.
     *
@@ -179,6 +182,6 @@ object Flatteners {
     * partition it holds rows for — tasks × days small files at scale.
     * With it, a quiet day is one file and a heavy day still fans out. */
   def writePartitioned(df: DataFrame, dir: String): Unit =
-    df.hint("rebalance", col("year"), col("month"), col("day"))
-      .write.mode("append").partitionBy("year", "month", "day").parquet(dir)
+    df.hint("rebalance", partitionCols.map(col): _*)
+      .write.mode("append").partitionBy(partitionCols: _*).parquet(dir)
 }

@@ -4,8 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, to_timestamp}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.ingest.{Fetch, HeightChunk, Manifest, RangePlanner, WatermarkStore}
 import graft.models.{Model, ModelRunner}
@@ -281,8 +282,7 @@ final class Pipeline(
           val raw = rawAll.filter(col("hash").isNotNull).dropDuplicates("hash")
             .unionByName(rawAll.filter(col("hash").isNull))
           def land(df: DataFrame, table: String): Unit =
-            Flatteners.enrichTime(df, blocks, hintBroadcast = span.isDefined)
-              .drop("ts")
+            enrich(df, blocks, hintBroadcast = span.isDefined)
               .hint("rebalance", col("year"), col("month"), col("day"))
               .write.mode("overwrite")
               .partitionBy("year", "month", "day")
@@ -349,12 +349,6 @@ final class Pipeline(
       // pushes down to the parquet scan (row-group pruning).
       val txSpan = Pipeline.fileHeightSpan(txFiles)
       val allBlocks = enrichmentBlocks(txSpan)
-      // if no filename bounded the span (foreign files in the raw dir),
-      // the blocks side is the whole zone — skip the broadcast hint and
-      // let AQE pick the strategy from the real size
-      def enrich(df: DataFrame) =
-        Flatteners.enrichTime(df, allBlocks,
-          hintBroadcast = txSpan.isDefined).drop("ts")
       // per-TABLE manifest keys ("txs:<table>") make the three appends
       // retry-idempotent as a group: Flow retries parse() whole, and
       // with one umbrella record after all three writes, a crash
@@ -364,18 +358,18 @@ final class Pipeline(
       // finish; the legacy umbrella "txs" record (kept for the
       // manifest's what-is-parsed surface and old manifests) lands
       // only after all three.
-      val txTables: Seq[(String, DataFrame => DataFrame)] = Seq(
-        "tx_result" -> (Flatteners.parseTxResult(_)),
-        "log_attributes" -> (Flatteners.parseLogAttributes(_)),
-        "events" -> (Flatteners.parseEventsWide(_)))
-      txTables.foreach { case (table, parseF) =>
+      Pipeline.txTables.foreach { case (table, parseF) =>
         val pending = manifest.newFiles(txFiles, s"txs:$table")
         if (pending.nonEmpty) {
           val rawTxs = spark.read.schema(Flatteners.txSchema)
             .option("multiLine", "true")
             .json(pending.map(f => s"${rawDir("txs")}/$f"): _*)
+          // if no filename bounded the span (foreign files in the raw
+          // dir), the blocks side is the whole zone — skip the broadcast
+          // hint and let AQE pick the strategy from the real size
           Flatteners.writePartitioned(
-            enrich(parseF(rawTxs)), s"$parsedRoot/$table")
+            enrich(parseF(rawTxs), allBlocks, hintBroadcast = txSpan.isDefined),
+            s"$parsedRoot/$table")
           manifest.record(pending, s"txs:$table")
         }
       }
@@ -383,59 +377,70 @@ final class Pipeline(
     }
   }
 
+  /** A parse-stage output as landed: time-enriched, without `ts`. */
+  private def enrich(table: DataFrame, blocks: DataFrame,
+      hintBroadcast: Boolean = true): DataFrame =
+    Flatteners.enrichTime(table, blocks, hintBroadcast).drop("ts")
+
+  /** The schema each static parsed table reads back with: the frame
+    * parse() lands, hive partition columns last, as strings (partition
+    * type inference is off). Derived by analysing the flatteners over
+    * empty frames, so reading a zone needs no footer-inference job.
+    * `events` has none: its pivot columns depend on the data. */
+  private[graft] lazy val zoneSchemas: Map[String, StructType] = {
+    def empty(schema: StructType) = spark.createDataFrame(java.util.List.of[Row](), schema)
+    val blocks = Flatteners.parseBlocks(empty(Flatteners.blockSchema))
+    val txs = empty(Flatteners.txSchema)
+    val landed = ("blocks" -> blocks.drop("ts")) +: Pipeline.txTables
+      .filter { case (t, _) => Pipeline.staticTables.contains(t) }
+      .map { case (t, parseF) => t -> enrich(parseF(txs), blocks) }
+    landed.map { case (t, df) =>
+      val data = df.schema.filterNot(f => Flatteners.partitionCols.contains(f.name))
+      val parts = Flatteners.partitionCols.map(StructField(_, StringType))
+      t -> StructType((data ++ parts).map(_.copy(nullable = true)))
+    }.toMap
+  }
+
+  /** A static parsed table as of this call, read with its known schema:
+    * the frame's file list is fixed here, so files a later parse()
+    * appends stay invisible to it. Empty while the zone doesn't exist,
+    * and for a zone dir with no parquet files yet (a zero-row write
+    * leaves only `_SUCCESS`): nothing is inferred from footers. */
+  private def readZone(table: String, dir: String): DataFrame = {
+    val schema = zoneSchemas(table)
+    val path = s"$parsedRoot/$dir"
+    if (Files.isDirectory(Paths.get(path))) spark.read.schema(schema).parquet(path)
+    else spark.createDataFrame(java.util.List.of[Row](), schema)
+  }
+
   /** The blocks frame the time-enrichment joins: the parsed blocks zone
-    * pruned to the tx batch's height span (pushed to the parquet scan),
-    * or an empty typed frame when the zone doesn't exist yet.
+    * pruned to the tx batch's height span (pushed to the parquet scan).
     * Package-visible so PipelineSpec can audit the pruning. */
   private[graft] def enrichmentBlocks(txSpan: Option[(Long, Long)],
       zoneName: String = "blocks"): DataFrame = {
-    val blocksZone = Paths.get(s"$parsedRoot/$zoneName")
-    // an EMPTY zone dir (a zero-row write leaves only _SUCCESS — e.g.
-    // every block chunk of a batch quarantined) must behave like a
-    // missing one: parquet schema inference over no files throws
-    def hasParquet(p: java.nio.file.Path): Boolean = {
-      val s = Files.walk(p)
-      try s.iterator().asScala.exists(_.getFileName.toString.endsWith(".parquet"))
-      finally s.close()
-    }
-    if (Files.isDirectory(blocksZone) && hasParquet(blocksZone)) {
-      val zone = spark.read.parquet(blocksZone.toString)
-        .withColumn("ts", to_timestamp(col("time")))
-      txSpan match {
-        case Some((lo, hi)) => zone.filter(col("height").between(lo, hi))
-        case None           => zone
-      }
-    } else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("height", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("day", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("month", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("year", org.apache.spark.sql.types.StringType))))
+    val zone = readZone("blocks", zoneName).withColumn("ts", to_timestamp(col("time")))
+    txSpan.fold(zone) { case (lo, hi) => zone.filter(col("height").between(lo, hi)) }
   }
 
-  /** Model stage (dbt run analog): build the given SQL model DAG against
-    * the parsed zone; parsed tables are registered as temp views first. */
+  /** Model stage (dbt run analog): build the given SQL model DAG over the
+    * parsed zone. Each parsed table registers as a temp view of the
+    * zone's files as of this call, and `{{ source("parsed", t) }}` binds
+    * to it: the bundled parsed models are views over these snapshots,
+    * not copies of the zone (DIVERGENCES.md #9). */
   def runModels(models: Seq[Model]): Map[String, DataFrame] = {
-    Seq("blocks", "tx_result", "log_attributes", "events").foreach { t =>
-      val dir = Paths.get(s"$parsedRoot/$t")
-      if (Files.isDirectory(dir)) {
-        // events' pivot columns are data-dependent (parse.py:177-179):
-        // each appended batch may carry a different column set, so the
-        // scan must union footers (mergeSchema) or a later batch's new
-        // event types silently vanish behind one file's schema
-        val reader =
-          if (t == "events") spark.read.option("mergeSchema", "true")
-          else spark.read
-        // a table whose every batch was empty has no footers to read —
-        // skip it (same visible behavior as dbt with zero-row sources)
-        try reader.parquet(dir.toString).createOrReplaceTempView(t)
-        catch { case _: org.apache.spark.sql.AnalysisException => () }
-      }
-    }
-    new ModelRunner(spark).run(models)
+    Pipeline.staticTables.foreach(t => readZone(t, t).createOrReplaceTempView(t))
+    // events' pivot columns are data-dependent (parse.py:177-179): each
+    // appended batch may carry a different column set, so the read must
+    // union footers (mergeSchema) or a later batch's new event types
+    // silently vanish behind one file's schema. A zone whose every batch
+    // was empty has no footers to merge — it stays unregistered.
+    val events = s"$parsedRoot/events"
+    if (Files.isDirectory(Paths.get(events)))
+      try spark.read.option("mergeSchema", "true").parquet(events)
+        .createOrReplaceTempView("events")
+      catch { case _: AnalysisException => () }
+    val sources = (Pipeline.staticTables :+ "events").map(t => ("parsed", t) -> t).toMap
+    new ModelRunner(spark, sources).run(models)
   }
 
   /** Gap-fill stage (Q3 — left dormant in the reference,
@@ -516,9 +521,9 @@ final class Pipeline(
     val flow = new Flow(retries, backoffMs)
     val blocksWs = new WatermarkStore(rawDir("blocks"))
 
-    val (syncStart, syncEnd) = flow.task("determine_sync_range")(
+    val (syncStart, syncEnd) = stage(flow, "determine_sync_range")(
       RangePlanner.syncRange(tip, chainFloor, blocksWs.maxHeightFromFiles, numBlocks))
-    flow.task("extract_sync") {
+    stage(flow, "extract_sync") {
       // an unchanged tip yields an inverted (start > end) plan — a
       // no-op sync, NOT a fetch: extracting it would write a junk
       // `{tip+1}_{tip}.json` pair per idle run and feed pointless RPC
@@ -529,9 +534,9 @@ final class Pipeline(
           extractRange("txs", syncStart, syncEnd)))
     }
 
-    val (bfStart, bfEnd) = flow.task("determine_backfill_range")(
+    val (bfStart, bfEnd) = stage(flow, "determine_backfill_range")(
       RangePlanner.backfillRange(chainFloor, blocksWs.minHeightFromFiles, numBlocks))
-    flow.task("extract_backfill") {
+    stage(flow, "extract_backfill") {
       noteExtracts(flow,
         RangePlanner.backfillChunks(bfStart, bfEnd, numBlocks).flatMap {
           case (s, e) => Seq(
@@ -540,11 +545,22 @@ final class Pipeline(
         })
     }
 
-    flow.task("gap_fill")(gapFill(Some(flow)))
+    stage(flow, "gap_fill")(gapFill(Some(flow)))
 
-    flow.task("parse_data")(parse())
-    (flow.task("run_models")(runModels(models)), flow)
+    stage(flow, "parse_data")(parse())
+    (stage(flow, "run_models")(runModels(models)), flow)
   }
+
+  /** A [[Flow]] task whose Spark jobs carry `pipeline.<name>` as their
+    * job description, so the UI and any listener can tell which stage
+    * ran a job. */
+  private def stage[T](flow: Flow, name: String)(body: => T): T =
+    flow.task(name) {
+      val sc = spark.sparkContext
+      val outer = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"pipeline.$name")
+      try body finally sc.setJobDescription(outer)
+    }
 
   /** Quarantine accounting for an extract stage: counts into the flow
     * report, and a LOUD failure when EVERY planned chunk quarantined —
@@ -570,6 +586,15 @@ final class Pipeline(
 }
 
 object Pipeline {
+  /** The tx-derived parsed tables in landing order, with their flatteners. */
+  private val txTables: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "tx_result" -> (Flatteners.parseTxResult(_)),
+    "log_attributes" -> (Flatteners.parseLogAttributes(_)),
+    "events" -> (Flatteners.parseEventsWide(_)))
+
+  /** The parsed tables whose columns are fixed by their flattener. */
+  val staticTables: Seq[String] = Seq("blocks", "tx_result", "log_attributes")
+
   /** Outcome of one raw-zone extract: the landed `{start}_{end}.json`
     * path plus quarantine accounting. A run with quarantined chunks is
     * still a "successful" write (the heights are ledgered for gap-fill),

@@ -167,10 +167,9 @@ class ModelRunnerSpec extends SparkSpec {
       (11L, "akashnet-2", "2023-08-02T10:00:00Z", "BBB", "2023-08-02", "2023-08", "2023"))
       .toDF("height", "chain_id", "time", "proposer_address", "day", "month", "year")
       .write.partitionBy("year", "month", "day").parquet(s"$root/blocks")
-    val runner = new ModelRunner(
-      spark,
-      vars = Map("parsed_root" -> root),
-      workDir = Some(Files.createTempDirectory("graft-warehouse").toString))
+    spark.read.parquet(s"$root/blocks").createOrReplaceTempView("zone_blocks")
+    val runner = new ModelRunner(spark,
+      sources = Map(("parsed", "blocks") -> "zone_blocks"))
     val out = runner.run(Seq(BreadModels.load("blocks")))
     val blocks = out("blocks")
     assert(blocks.count() === 2)

@@ -4,9 +4,13 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.Base64
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.models.Model
+import graft.models.{BreadModels, Model}
 import graft.pipeline.Pipeline
 
 /** End-to-end: fake node → raw zone → flatteners → hive-partitioned
@@ -41,6 +45,24 @@ object FakeNode extends Serializable {
       s"""{"result":{"total_count":"${hs.size}","txs":[${hs.map(tx).mkString(",")}]}}"""
     }
   }
+}
+
+/** FakeNode whose txs from height 4 up carry a `mint` event keyed
+  * `supply` instead of `transfer`/`amount`: parse batches split at
+  * height 4 pivot to disjoint events columns. */
+object MintNode extends Serializable {
+  private val from = "height>=(\\d+)".r.unanchored
+
+  def fetch(url: String): String = {
+    val body = FakeNode.fetch(url)
+    val late = from.findFirstMatchIn(url).exists(_.group(1).toLong >= 4)
+    if (url.contains("block_search") || !late) body
+    else body.replace("\"type\":\"transfer\"", "\"type\":\"mint\"")
+      .replace(b64("amount"), b64("supply"))
+  }
+
+  private def b64(s: String): String =
+    Base64.getEncoder.encodeToString(s.getBytes(StandardCharsets.UTF_8))
 }
 
 /** FakeNode as a named RpcFetcher: the DSv2 path carries the fetcher by
@@ -353,6 +375,85 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     val txr = spark.read.parquet(s"$root/parsed/tx_result")
     assert(txr.filter("height = 3").head().getAs[String]("day") == "2023-08-03")
     assert(txr.filter("day IS NULL").count() == 0)
+  }
+
+  test("events model keeps pivot columns that first appear in a later parse batch") {
+    val root = Files.createTempDirectory("graft-events-merge").toString
+    val pipe = new Pipeline(spark, root, MintNode.fetch)
+    pipe.extractRange("blocks", 1, 5)
+    pipe.extractRange("txs", 1, 3)
+    pipe.parse() // transfer_amount only
+    pipe.extractRange("txs", 4, 5)
+    pipe.parse() // mint_supply only
+    val events = pipe.runModels(BreadModels.parsedModels)("events")
+    assert(Set("transfer_amount", "mint_supply").subsetOf(events.columns.toSet),
+      events.columns.mkString(", "))
+    val byHeight: Map[Long, (String, String)] = events.collect().map { r =>
+      r.getAs[Long]("height") -> (r.getAs[String]("transfer_amount"), r.getAs[String]("mint_supply"))
+    }.toMap
+    assert(byHeight == Map(1L -> ("100uakt", null), 3L -> ("300uakt", null),
+      5L -> (null, "500uakt")))
+  }
+
+  test("zone schemas: each static parsed table's known schema is what a footer read infers") {
+    val root = Files.createTempDirectory("graft-zone-schema").toString
+    val pipe = new Pipeline(spark, root, FakeNode.fetch)
+    Seq("blocks", "txs").foreach(pipe.extractRange(_, 1, 5))
+    pipe.parse()
+    Pipeline.staticTables.foreach { t =>
+      val inferred = spark.read.parquet(s"$root/parsed/$t").schema
+      assert(pipe.zoneSchemas(t) == inferred,
+        s"$t known:\n${pipe.zoneSchemas(t).treeString}inferred:\n${inferred.treeString}")
+    }
+  }
+
+  test("model views are snapshots: rows a later parse lands stay invisible until the next runModels") {
+    val root = Files.createTempDirectory("graft-snapshot").toString
+    val pipe = new Pipeline(spark, root, FakeNode.fetch)
+    def counts(out: Map[String, DataFrame]): Seq[Long] =
+      BreadModels.parsedModelNames.map(out(_).count())
+    Seq("blocks", "txs").foreach(pipe.extractRange(_, 1, 3))
+    pipe.parse()
+    val first = pipe.runModels(BreadModels.parsedModels)
+    assert(counts(first) == Seq(3L, 2L, 2L, 2L)) // blocks 1-3, txs at 1 and 3
+    Seq("blocks", "txs").foreach(pipe.extractRange(_, 4, 5))
+    pipe.parse()
+    assert(counts(first) == Seq(3L, 2L, 2L, 2L))
+    assert(spark.table("tx_result").count() == 2)
+    assert(counts(pipe.runModels(BreadModels.parsedModels)) == Seq(5L, 3L, 3L, 3L))
+  }
+
+  test("job budget: an incremental run's models cost one schema merge, its parse no footer read") {
+    val root = Files.createTempDirectory("graft-job-budget").toString
+    val pipe = new Pipeline(spark, root, FakeNode.fetch)
+    pipe.run(tip = 3, chainFloor = 1, numBlocks = 2, models = BreadModels.parsedModels)
+    // (job description, ran inside a SQL execution): a job outside any
+    // execution is a metadata job — a footer read or schema merge
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((String.valueOf(e.properties.getProperty("spark.job.description")),
+          e.properties.getProperty("spark.sql.execution.id") != null))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val out = try {
+      val (built, _) = pipe.runWithReport(tip = 5, chainFloor = 1, numBlocks = 2,
+        models = BreadModels.parsedModels)
+      // listener events arrive in order: once the barrier job shows up,
+      // every job of the run has been seen
+      sc.setJobDescription("barrier")
+      try sc.parallelize(Seq(1)).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.asScala.exists(_._1 == "barrier") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      built
+    } finally sc.removeSparkListener(listener)
+    def stage(name: String) = jobs.asScala.filter(_._1 == s"pipeline.$name").toSeq
+    assert(stage("run_models").size <= 1, stage("run_models"))
+    assert(stage("parse_data").nonEmpty, "the parse stage's writes were not seen")
+    assert(stage("parse_data").forall(_._2), stage("parse_data"))
+    assert(out("blocks").count() == 5 && out("tx_result").count() == 3)
   }
 
   test("error-height ledger appends are idempotent under batch replay") {

@@ -138,8 +138,7 @@ object ClusterSmoke {
         emb.filter(col("vec_id") % 2 === 0), anchors, "vec_id", model,
         "smoke_life.pq_v1", numBuckets = 8)
       graft.operators.Similarity.ivfPqIndexAppend(
-        emb.filter(col("vec_id") % 2 =!= 0), anchors, "vec_id", model,
-        "smoke_life.pq_v1", numBuckets = 8)
+        emb.filter(col("vec_id") % 2 =!= 0), "vec_id", "smoke_life.pq_v1")
       val drift = graft.operators.Similarity.pqDriftStats(
         spark, "smoke_life.pq_v1", emb, "vec_id")
       require(drift.count() == 4L, "drift probe must report every subspace")

@@ -531,7 +531,7 @@ object Stress {
       val batch = embs.filter(col("vec_id") >= cut)
       time("ivf_index_append") {
         graft.operators.Similarity.ivfIndexAppend(
-          batch, anchors8, "vec_id", s"$db.emb_ivf", numBuckets = 8)
+          batch, "vec_id", s"$db.emb_ivf")
         batch.count()
       }
       // Recall eval against the PERSISTED ×N index (now holding the

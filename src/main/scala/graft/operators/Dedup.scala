@@ -124,12 +124,11 @@ object Dedup {
 
   /** [[bandedSignatures]] over a full [[indexDocs]] frame, carrying the
     * shingle-hash SET through the band explode: one row per (doc, band)
-    * with (sig, hs) — what the `__bands` twin stores since round 15.
-    * The hs array is duplicated `bands`× on disk; that is the deliberate
-    * trade that lets an append's exact-Jaccard verification read ONLY
+    * with (sig, hs) — the `__bands` twin's row shape. The hs array is
+    * duplicated `bands`× on disk; that is the deliberate trade that lets
+    * a trickle append's exact-Jaccard verification read ONLY
     * bucket-pruned twin rows (collision-bounded) instead of the main
-    * table's hs column mass — the one read that still grew with the
-    * index (and rode the page cache) on the round-14 append path. */
+    * table's hs column, whose mass grows with the index. */
   private[graft] def bandedWithSets(index: DataFrame, id: String,
       k: Int, bands: Int): DataFrame = {
     require(bands >= 1 && k >= bands && k % bands == 0,
@@ -328,9 +327,10 @@ object Dedup {
     * rows are ALSO persisted, as the `<table>__bands` twin bucketed on
     * a (band, sig) hash key, so appends read only the buckets the batch
     * collides into instead of re-banding the whole store (see
-    * [[storedBandsPruned]]).
+    * [[storedBandsPrunedByKeys]]). This is the only writer of the store
+    * layout every append assumes: the twin exists and carries `hs`.
     *
-    * Ordering contract (the round-12 crash rule shared with
+    * Ordering contract (the crash rule shared with
     * `Similarity.ivfBuildIndex`): the parameter stamp is the LAST build
     * step, so a crash mid-build leaves a table [[lshIndexAppend]]
     * REFUSES (no params = half-built) instead of one it would silently
@@ -397,11 +397,11 @@ object Dedup {
 
   /** The banded-rows twin of a [[lshBuildIndex]] store: one row per
     * (doc, band) with the bucket signature precomputed — what appends
-    * scan instead of re-banding every stored signature. Since round 15
-    * each row also carries the doc's shingle-hash set (`hs`, duplicated
-    * bands× on disk) so a FILE-PRUNED append's verification never
-    * reads the main table; batches too large to prune fall back to the
-    * single-copy main-table read (see [[storedBandsPruned]]). */
+    * scan instead of re-banding every stored signature. Each row also
+    * carries the doc's shingle-hash set (`hs`, duplicated bands× on
+    * disk) so a FILE-PRUNED append's verification never reads the main
+    * table; batches too large to prune fall back to the single-copy
+    * main-table read (see [[storedBandsPrunedByKeys]]). */
   def lshBandsTableName(table: String): String = s"${table}__bands"
 
   /** Bucket-key domain of the `__bands` twin. The table is BUCKETED on
@@ -419,24 +419,6 @@ object Dedup {
 
   private def withBandsKey(banded: DataFrame): DataFrame =
     banded.withColumn("bkey", bandsKey)
-
-  /** The stored `__bands` rows that can collide with a batch — the
-    * batch-proportional read at the heart of [[lshIndexAppend]]:
-    * (1) the batch's ≤[[BandsKeyDomain]] distinct bucket keys are
-    * driver-collected and pushed as `bkey IN (...)` into the bucketed
-    * scan (file pruning, SelectedBucketsCount — pinned by
-    * IncrementalLshSpec); (2) an exact broadcast semi-join on the
-    * batch's (band, sig) keys prunes the surviving rows map-side;
-    * (3) `dropDuplicates` over the collision-bounded remainder makes
-    * the read immune to the one crash-replay window that can append a
-    * batch's band rows twice (crash between the bands append and the
-    * index append — see [[lshIndexAppend]]'s ordering analysis).
-    * Nothing in the path aggregates or shuffles index-sized mass. */
-  private[graft] def storedBandsPruned(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      batchBanded: DataFrame, id: String): DataFrame =
-    storedBandsPrunedByKeys(spark, table,
-      collectBatchKeys(batchBanded), id)
 
   /** The batch's distinct (band, sig) keys with their bucket key, as ONE
     * driver collect — every consumer of the batch's band keys (the
@@ -470,30 +452,38 @@ object Dedup {
         bandSigSchema)
   }
 
-  /** [[storedBandsPruned]]'s core over ALREADY-COLLECTED batch keys. */
+  /** The stored `__bands` rows that can collide with a batch, from its
+    * ALREADY-COLLECTED keys — the batch-proportional read at the heart
+    * of [[lshIndexAppend]]: (1) the batch's ≤[[BandsKeyDomain]] distinct
+    * bucket keys are pushed as `bkey IN (...)` into the bucketed scan
+    * (file pruning, SelectedBucketsCount — pinned by
+    * IncrementalLshSpec); (2) an exact broadcast semi-join on the
+    * batch's (band, sig) keys prunes the surviving rows map-side;
+    * (3) `dropDuplicates` over the collision-bounded remainder makes
+    * the read immune to the one crash-replay window that can append a
+    * batch's band rows twice (crash between the bands append and the
+    * index append — see [[lshIndexAppendIndexed]]'s ordering analysis).
+    * Nothing in the path aggregates or shuffles index-sized mass. */
   private[graft] def storedBandsPrunedByKeys(
       spark: org.apache.spark.sql.SparkSession, table: String,
       batchKeys: BatchBandKeys, id: String): DataFrame = {
     val keys = batchKeys.bkeys
     val twin = spark.table(lshBandsTableName(table))
-    // A twin written since the hs-carrying layout (round 15) can hand
-    // the verification its shingle sets on the same pruned read — but
-    // the sets are duplicated bands× on disk, so that only WINS when
-    // file pruning leaves most of the twin unread (the trickle/serving
-    // shape the twin exists for). Once the batch's bucket keys cover
-    // enough of the twin's files that the banded duplicates would
-    // outweigh ONE full copy of the store's sets, hs is NOT projected
-    // (the scan never reads the column) and the caller falls back to
-    // the single-copy main-table read pruned by candidate id-buckets —
-    // the round-15 shard-append fix: a domain-covering batch read
-    // bands× the hs mass through the twin (measured 1.8× the in-memory
-    // control at a 1000× store vs ~1× via the main read). Pre-hs twins
-    // always take the fallback.
+    // The twin hands the verification its shingle sets on the same
+    // pruned read — but the sets are duplicated bands× on disk, so that
+    // only WINS when file pruning leaves most of the twin unread (the
+    // trickle/serving shape the twin exists for). Once the batch's
+    // bucket keys cover enough of the twin's files that the banded
+    // duplicates would outweigh ONE full copy of the store's sets, hs is
+    // NOT projected (the scan never reads the column) and the caller
+    // falls back to the single-copy main-table read pruned by candidate
+    // id-buckets: a domain-covering batch reading the sets through the
+    // twin read bands× the hs mass (measured 1.8× the in-memory control
+    // at a 1000× store vs ~1× via the main read).
     val (_, _, bands, numBuckets) = storedLshParams(spark, table)
     val expectedTouched =
       1.0 - math.pow(1.0 - 1.0 / numBuckets, keys.length.toDouble)
-    val withSets = twin.columns.contains("hs") &&
-      expectedTouched * bands <= 1.0
+    val withSets = expectedTouched * bands <= 1.0
     val outCols = Seq(col(id), col("band"), col("sig")) ++
       (if (withSets) Seq(col("hs")) else Nil)
     if (keys.isEmpty) // empty/fully-replayed batch: nothing can collide
@@ -548,22 +538,18 @@ object Dedup {
     * pick the files, a broadcast semi finds the overlap, the batch
     * anti-joins the broadcast overlap — no shuffle, no sort, and a
     * trickle opens 1-2 bucket files) + the bucket-pruned `__bands` read
-    * ([[storedBandsPruned]]: file pruning by the batch's bucket keys,
-    * then an exact broadcast semi-join — no re-banding of stored
-    * signatures, no index-sized aggregation). The twin carries each
-    * row's shingle-hash SET (round 15), and verification picks its
-    * source ADAPTIVELY: a trickle/serving batch (file pruning
-    * engages) reads hs off those same collision-bounded pruned twin
-    * rows — the MAIN table is never read beyond the replay guard's id
-    * column, and nothing on the append path reads index-proportional
-    * bytes; a domain-covering shard batch instead reads the
-    * single-copy (id, hs) main table pruned by the candidate ids'
-    * buckets, because the twin's bands× hs duplication with no file
-    * pruning would cost bands× the store's set mass. A store whose
-    * twin predates the hs column always takes the main-table read; a
-    * store built before the twin existed re-bands the main table's
-    * signatures (the round-12 path) — rebuild to get the pruned
-    * reads. */
+    * ([[storedBandsPrunedByKeys]]: file pruning by the batch's bucket
+    * keys, then an exact broadcast semi-join — no re-banding of stored
+    * signatures, no index-sized aggregation). Verification picks its
+    * shingle-set source ADAPTIVELY from the batch's expected bucket
+    * coverage: a trickle/serving batch (file pruning engages) reads hs
+    * off those same collision-bounded pruned twin rows — the MAIN table
+    * is never read beyond the replay guard's id column, and nothing on
+    * the append path reads index-proportional bytes; a domain-covering
+    * shard batch instead reads the single-copy (id, hs) main table
+    * pruned by the candidate ids' buckets, because the twin's bands× hs
+    * duplication with no file pruning would cost bands× the store's set
+    * mass. */
   def lshIndexAppend(spark: org.apache.spark.sql.SparkSession,
       table: String, newDocs: DataFrame, id: String, text: String,
       threshold: Double = 0.5,
@@ -624,11 +610,9 @@ object Dedup {
     // SEMI-join finds the replay overlap (≤ batch rows); (3) the batch
     // anti-joins the BROADCAST overlap. Same rows as the plain
     // anti-join, zero exchanges on index-sized mass.
-    // Materialize the batch's index rows ONCE (see `fresh` below):
-    // before round 15, batchIds/overlap/fresh each had their own
-    // checkpoint materialization — at serving cadence the append's
-    // wall IS the driver-job count, so the whole head now fuses into
-    // a single checkpointed frame plus one driver collect.
+    // At serving cadence the append's wall IS its driver-job count, so
+    // the batch's index rows materialize ONCE (`fresh` below) and every
+    // later consumer reads those blocks.
     // AQE is pinned OFF and the shuffle width scoped to the batch for
     // the append's internal micro-queries (adaptive execution runs
     // each query stage as its own driver job, and every frame on this
@@ -668,87 +652,63 @@ object Dedup {
     // zero, and every later consumer still reads blocks
     val fresh = guarded.join(broadcast(overlap), Seq(id), "leftanti")
       .localCheckpoint(false)
-    val hasTwin = spark.catalog.tableExists(lshBandsTableName(table))
-    // twins written since round 15 carry each row's shingle-hash set —
-    // verification then reads ONLY twin rows (already bucket-pruned and
-    // collision-bounded); pre-hs twins fall back to the file-pruned
-    // main-table read below
-    val twinHasSets = hasTwin &&
-      spark.table(lshBandsTableName(table)).columns.contains("hs")
     // the batch's banded rows feed three consumers (the bkey collect,
-    // the bucket union, the bands append) — one materialization; when
-    // the twin carries hs the SAME frame carries it too, because the
-    // bands append below must match the twin's schema. LAZY: the
-    // batch-key collect right below is the materializing job (its
-    // consumers are strictly sequential after it).
-    val bandedNew = (if (twinHasSets) bandedWithSets(fresh, id, k, bands)
-      else bandedSignatures(fresh.select(col(id), col("mh")), id, k, bands))
-      .localCheckpoint(false)
+    // the bucket union, the bands append) — one materialization. They
+    // carry hs because the bands append must match the twin's schema.
+    // LAZY: the batch-key collect right below is the materializing job
+    // (its consumers are strictly sequential after it).
+    val bandedNew = bandedWithSets(fresh, id, k, bands).localCheckpoint(false)
     // the batch's distinct band keys, collected ONCE for every consumer
     // (the twin's file prune + semi-join AND the pair stage's old-side
     // prune) — see [[collectBatchKeys]]; this collect materializes the
     // fresh + bandedNew checkpoints above
     val batchKeys = collectBatchKeys(bandedNew)
-    val (oldBanded, oldSets, freeAfterPairs) =
-      if (hasTwin) {
-        // materialize the pruned twin read once: it feeds the bucket
-        // union AND the verification below, and it is collision-
-        // bounded (rows in batch-touched buckets only). Whether it
-        // CARRIES the verification sets is storedBandsPruned's
-        // adaptive call (round 15): hs rides the twin when file
-        // pruning engages (trickle/serving batches — one read, no
-        // main-table hs scan at all), and a domain-covering batch
-        // falls back to the single-copy main read below instead of
-        // paying the twin's bands× hs duplication with no pruning.
-        // LAZY checkpoint: the first consumer's job materializes it (the
-        // candidate collect below, or the pair jobs on the hs path), so
-        // the separate eager-materialization job disappears
-        val pruned = storedBandsPrunedByKeys(spark, table, batchKeys, id)
-          .localCheckpoint(false)
-        if (pruned.columns.contains("hs"))
-          (pruned.drop("hs"),
-            pruned.select(col(id), col("hs")).dropDuplicates(id),
-            Seq(pruned))
+    // materialize the pruned twin read once: it feeds the bucket union
+    // AND the verification below, and it is collision-bounded (rows in
+    // batch-touched buckets only). Whether it CARRIES the verification
+    // sets is storedBandsPrunedByKeys' adaptive call. LAZY checkpoint:
+    // the first consumer's job materializes it (the candidate collect
+    // below, or the pair jobs on the hs path).
+    val pruned = storedBandsPrunedByKeys(spark, table, batchKeys, id)
+      .localCheckpoint(false)
+    val (oldSets, freeAfterPairs) =
+      if (pruned.columns.contains("hs"))
+        (pruned.select(col(id), col("hs")).dropDuplicates(id), Seq(pruned))
+      else {
+        // old candidate ids ⊆ pruned-bucket ids (candidates only come
+        // from buckets the batch touches), so verification needs the
+        // stored hs sets ONLY for those ids — and the store is
+        // id-bucketed, so the candidate set prunes at FILE level too:
+        // the candidates' ≤numBuckets distinct id-buckets select which
+        // files to open ([[Layout.readBucketSubset]]), then the exact
+        // broadcast semi-join prunes rows. The candidate ids would be
+        // broadcast (= driver-collected) anyway, so ONE collect of
+        // (id, bucket) serves both, and the semi-join probes a local
+        // relation.
+        val candRows = pruned
+          .select(col(id), pmod(hash(col(id)), lit(numBuckets)).as("__b"))
+          .distinct().collect()
+        val touched = candRows.map(_.getInt(1)).toSet
+        // a batch of genuinely new content collides with nothing —
+        // the common serving case; an empty candidate set means zero
+        // sets to read, so skip the read + checkpoint jobs outright
+        if (touched.isEmpty)
+          (stored.filter(lit(false)).select(col(id), col("hs")), Seq(pruned))
         else {
-          // old candidate ids ⊆ pruned-bucket ids (candidates only come
-          // from buckets the batch touches), so verification needs the
-          // stored hs sets ONLY for those ids — and the store is
-          // id-bucketed, so the candidate set prunes at FILE level too:
-          // the candidates' ≤numBuckets distinct id-buckets select which
-          // files to open ([[Layout.readBucketSubset]]), then the exact
-          // broadcast semi-join prunes rows. The candidate ids were
-          // broadcast (= driver-collected) anyway, so ONE collect of
-          // (id, bucket) replaces the old checkpoint + bucket-collect
-          // pair of jobs, and the semi-join probes a local relation.
-          val candRows = pruned
-            .select(col(id), pmod(hash(col(id)), lit(numBuckets)).as("__b"))
-            .distinct().collect()
-          val touched = candRows.map(_.getInt(1)).toSet
-          // a batch of genuinely new content collides with nothing —
-          // the common serving case; an empty candidate set means zero
-          // sets to read, so skip the read + checkpoint jobs outright
-          val sets =
-            if (touched.isEmpty)
-              spark.table(table).filter(lit(false)).select(col(id), col("hs"))
-            else {
-              val candLocal = spark.createDataFrame(
-                java.util.Arrays.asList(candRows.map(r =>
-                  org.apache.spark.sql.Row(r.get(0))): _*),
-                org.apache.spark.sql.types.StructType(
-                  Seq(pruned.schema(id))))
-              Layout.readBucketSubset(spark, table, touched)
-                .select(col(id), col("hs"))
-                .join(broadcast(candLocal), Seq(id), "leftsemi")
-                .localCheckpoint(true)
-            }
-          (pruned, sets, if (touched.isEmpty) Seq(pruned) else Seq(pruned, sets))
+          val candLocal = spark.createDataFrame(
+            java.util.Arrays.asList(candRows.map(r =>
+              org.apache.spark.sql.Row(r.get(0))): _*),
+            org.apache.spark.sql.types.StructType(Seq(pruned.schema(id))))
+          val sets = Layout.readBucketSubset(spark, table, touched)
+            .select(col(id), col("hs"))
+            .join(broadcast(candLocal), Seq(id), "leftsemi")
+            .localCheckpoint(true)
+          (sets, Seq(pruned, sets))
         }
-      } else
-        (bandedSignatures(stored.select(col(id), col("mh")), id, k, bands),
-          stored.select(col(id), col("hs")), Seq.empty[DataFrame])
+      }
     val (pairs, nPairs) = incrementalPairsFromBandedCounted(oldSets,
-      oldBanded, bandedNew.drop("hs"), fresh.select(col(id), col("hs")), id,
-      threshold, maxBucketSize,
+      pruned.drop("hs"), bandedNew.drop("hs"), fresh.select(col(id), col("hs")),
+      id, threshold, maxBucketSize,
       newKeys = Some(batchKeys.bandSigFrame(spark)))
     freeAfterPairs.foreach(freeLocalCheckpoint) // pairs is checkpointed
     // Durability order: pair LEDGER first, bands twin second, index rows
@@ -757,8 +717,8 @@ object Dedup {
     // which commits last), recomputes the SAME pairs, and the
     // ledger-side anti-join below drops them — convergent. Crash after
     // the bands append → same replay; the batch's band rows land twice
-    // in the twin, which [[storedBandsPruned]]'s dropDuplicates makes
-    // invisible to every later read (disk bloat only, never wrong
+    // in the twin, which [[storedBandsPrunedByKeys]]' dropDuplicates
+    // makes invisible to every later read (disk bloat only, never wrong
     // pairs). The REVERSE order (index before bands) would be the
     // dangerous one: a crash between them leaves stored docs whose band
     // rows are permanently missing from the twin — silently lost
@@ -775,11 +735,10 @@ object Dedup {
         // pair-mass-sized and unbucketed, so a plain anti-join would
         // shuffle+sort it per append — semi-join it against the
         // BROADCAST batch pairs (one map-side scan). The overlap is
-        // ≤ the batch's pairs and the old formulation broadcast it
-        // (= driver-collected) anyway; collecting it explicitly lets
-        // the steady-state all-new batch (empty overlap) write the
-        // checkpointed pairs directly, with no anti-join plan or
-        // broadcast-build job at all
+        // ≤ the batch's pairs and a broadcast would driver-collect it
+        // anyway; collecting it explicitly lets the steady-state
+        // all-new batch (empty overlap) write the checkpointed pairs
+        // directly, with no anti-join plan or broadcast-build job at all
         val already = spark.table(pt).select(col("id_a"), col("id_b"))
           .join(broadcast(pairs.select(col("id_a"), col("id_b"))),
             Seq("id_a", "id_b"), "leftsemi")
@@ -796,19 +755,12 @@ object Dedup {
     // pair-less — later appends' double-hop reads it
     if (!skipLedger || !spark.catalog.tableExists(pt))
       durable.write.mode("append").format("parquet").saveAsTable(pt)
-    // legacy (pre-twin) stores stay legacy: seeding a twin with ONLY
-    // this batch's rows would make later appends read an incomplete
-    // bands set and silently miss collisions against the older mass
     // the checkpointed frames' partition counts are known without
     // executing anything — pass them so a small append's bucketed
     // write schedules batch-proportional tasks, not numBuckets×m
-    if (hasTwin)
-      graft.operators.Layout.appendBucketed(withBandsKey(bandedNew),
-        lshBandsTableName(table), bucketCols = Seq("bkey"),
-        numBuckets = numBuckets,
-        batchParts = Some(bandedNew.rdd.getNumPartitions))
-    graft.operators.Layout.appendBucketed(fresh, table,
-      bucketCols = Seq(id), numBuckets = numBuckets,
+    Layout.appendBucketed(withBandsKey(bandedNew), lshBandsTableName(table),
+      batchParts = Some(bandedNew.rdd.getNumPartitions))
+    Layout.appendBucketed(fresh, table,
       batchParts = Some(fresh.rdd.getNumPartitions))
     freeLocalCheckpoint(bandedNew)
     freeLocalCheckpoint(fresh) // pairs is checkpointed; safe to drop
@@ -816,10 +768,9 @@ object Dedup {
     }
   }
 
-  /** Name of the parameter marker [[graft.streaming.EventStream
-    * .streamingLshStage]] drops into each staged batch dir AFTER the
-    * data commit: `n,k` of the store the stage was cut for. */
-  private[graft] val LshStageParamsFile = "_lshparams"
+  /** The store stamps a staged LSH batch's rows depend on: the
+    * signature kernel's (n, k). See [[StagedBatches]]. */
+  private[graft] val LshStageKeys = Seq("graft.lsh_n", "graft.lsh_k")
 
   /** Fold staged streaming batches (EventStream.streamingLshStage's
     * `stageDir/batch=<n>` dirs of pre-indexed (id, mh, hs) rows) into a
@@ -830,16 +781,8 @@ object Dedup {
     * cleanup, a replayed absorb, or a half-deleted stage can never
     * duplicate index rows — and the pair LEDGER stays convergent
     * because the core's ledger-side anti-join drops already-reported
-    * pairs. Only batch dirs with BOTH `_SUCCESS` (data committed) and
-    * the `_lshparams` marker (params recorded after the data) are
-    * absorbed; a dir missing the marker is a torn stage whose batch the
-    * stream will replay — skipped, not an error. A marker whose (n, k)
-    * disagrees with the store's stamp refuses loudly: the store was
-    * rebuilt under new parameters while this stage was outstanding, and
-    * its signatures are garbage for the new banding.
-    *
-    * A doc id staged in two batches (client retry) keeps its
-    * FIRST-staged batch's row — min(batch id), deterministic. Absorb
+    * pairs. Which dirs are read, skipped as torn, or refused as cut
+    * under other parameters is the [[StagedBatches]] contract. Absorb
     * runs at compaction cadence, not per micro-batch, so the per-absorb
     * fixed costs amortize exactly like the IVF family's.
     * Returns (batches_absorbed, rows_appended, new_pairs). */
@@ -847,57 +790,13 @@ object Dedup {
       stageDir: String, table: String, id: String,
       threshold: Double = 0.5,
       maxBucketSize: Int = DefaultMaxBucketSize): (Long, Long, Long) = {
-    val (n, k, _, _) = storedLshParams(spark, table)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(stageDir)
-    val hfs = root.getFileSystem(hconf)
-    if (!hfs.exists(root)) return (0L, 0L, 0L)
-    val committed = hfs.listStatus(root).toIndexedSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .filter(s => hfs.exists(
-        new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .filter { s =>
-        val marker = new org.apache.hadoop.fs.Path(s.getPath, LshStageParamsFile)
-        if (!hfs.exists(marker)) false // torn stage: the stream replays it
-        else {
-          val in = hfs.open(marker)
-          val got = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .mkString.trim finally in.close()
-          // a marker that is not two comma-separated ints is a HALF-
-          // WRITTEN marker (crash mid-write on a rename-less
-          // filesystem) — the same torn stage as a missing marker, so
-          // skip-and-replay; only a well-formed marker that disagrees
-          // with the stamp is the loud rebuilt-store refusal
-          if (!got.matches("\\d+,\\d+")) false
-          else {
-            require(got == s"$n,$k",
-              s"staged batch ${s.getPath.getName} was indexed under " +
-                s"parameters ($got) but $table is stamped ($n,$k) — the " +
-                "store was rebuilt while the stage was outstanding; drop " +
-                "the stage dir and re-ingest those batches from text")
-            true
-          }
-        }
-      }
-      .map(_.getPath)
-      .sortBy(_.getName)
-    if (committed.isEmpty) return (0L, 0L, 0L)
-    val staged = spark.read
-      .parquet(committed.map(_.toString): _*)
-      .withColumn("__batch",
-        regexp_extract(input_file_name(), "batch=(\\d+)", 1).cast("long"))
-      .withColumn("__rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col(id)).orderBy(asc("__batch"))))
-      .filter(col("__rk") === 1)
-      .drop("__rk", "__batch")
-    val rows = staged.join(
-      spark.table(table).select(col(id)), Seq(id), "leftanti").count()
-    val pairs = lshIndexAppendIndexed(spark, table, staged, id,
-      threshold, maxBucketSize)
-    val nPairs = pairs.count()
-    committed.foreach(p => hfs.delete(p, true))
-    (committed.size.toLong, rows, nPairs)
+    StagedBatches.absorb(spark, stageDir, table, id,
+        StagedBatches.stamps(spark, table, LshStageKeys)) { staged =>
+      val rows = staged.join(
+        spark.table(table).select(col(id)), Seq(id), "leftanti").count()
+      (rows, lshIndexAppendIndexed(spark, table, staged, id,
+        threshold, maxBucketSize).count())
+    }.fold((0L, 0L, 0L)) { case (b, (rows, pairs)) => (b, rows, pairs) }
   }
 
   /** Compact a durable LSH store's bucketed tables (main + `__bands`
@@ -915,8 +814,7 @@ object Dedup {
       table: String): Unit = {
     storedLshParams(spark, table) // refuse a half-built/foreign store
     Layout.compactBucketedTable(spark, table)
-    if (spark.catalog.tableExists(lshBandsTableName(table)))
-      Layout.compactBucketedTable(spark, lshBandsTableName(table))
+    Layout.compactBucketedTable(spark, lshBandsTableName(table))
   }
 
   /** The [[incrementalLshPairs]] append path when the new batch's index
@@ -929,11 +827,11 @@ object Dedup {
       oldIndex: DataFrame, newIndex: DataFrame, id: String,
       k: Int = 16, bands: Int = 4,
       threshold: Double = 0.5, maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
-    incrementalPairsFromBanded(
+    incrementalPairsFromBandedCounted(
       oldIndex.select(col(id), col("hs")),
       bandedSignatures(oldIndex.select(col(id), col("mh")), id, k, bands),
       bandedSignatures(newIndex.select(col(id), col("mh")), id, k, bands),
-      newIndex.select(col(id), col("hs")), id, threshold, maxBucketSize)
+      newIndex.select(col(id), col("hs")), id, threshold, maxBucketSize)._1
 
   /** The shared append core over ALREADY-BANDED frames — what
     * [[incrementalLshPairsIndexed]] (in-memory index) and
@@ -949,21 +847,15 @@ object Dedup {
     * the index while everything else tracked the batch. The guard
     * semantics are unchanged: a surviving bucket still aggregates ALL
     * its old∪new rows, so the over-cap drop fires exactly as in the
-    * full recompute (IncrementalLshSpec's invariant). */
-  private[graft] def incrementalPairsFromBanded(
-      oldSets: DataFrame, oldBanded: DataFrame,
-      bandedNew: DataFrame, newSets: DataFrame, id: String,
-      threshold: Double, maxBucketSize: Int): DataFrame =
-    incrementalPairsFromBandedCounted(oldSets, oldBanded, bandedNew,
-      newSets, id, threshold, maxBucketSize)._1
-
-  /** [[incrementalPairsFromBanded]] returning (pairs, count): the count
-    * rides the SAME job that materializes the lazy checkpoint, so
-    * callers that need an emptiness probe (the ledger-append skip) get
-    * it without a second driver job over the checkpointed blocks.
-    * `newKeys` optionally supplies the batch's distinct (band, sig)
-    * keys as an already-local frame (see [[collectBatchKeys]]) so the
-    * old-side prune's broadcast never schedules an executor job. */
+    * full recompute (IncrementalLshSpec's invariant).
+    *
+    * Returns (pairs, count): the count rides the SAME job that
+    * materializes the lazy checkpoint, so callers that need an
+    * emptiness probe (the ledger-append skip) get it without a second
+    * driver job over the checkpointed blocks. `newKeys` optionally
+    * supplies the batch's distinct (band, sig) keys as an already-local
+    * frame (see [[collectBatchKeys]]) so the old-side prune's broadcast
+    * never schedules an executor job. */
   private[graft] def incrementalPairsFromBandedCounted(
       oldSets: DataFrame, oldBanded: DataFrame,
       bandedNew: DataFrame, newSets: DataFrame, id: String,

@@ -81,30 +81,33 @@ object Layout {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Batch append into an existing bucketed table with the same spec —
-    * the incremental-ingest twin of [[writeBucketed]]. Spark checks the
-    * declared (numBuckets, bucketCols) against the catalog's and fails
-    * the append on a mismatch, so layout drift is loud, never silent.
-    * Appends get the same bounded-files-per-bucket shuffle as the
-    * build: without it every append of a T-partition batch adds up to
-    * T×numBuckets files and the store's scan cost creeps up with every
-    * batch ingested. */
-  /** Append to a bucketed table. `batchParts` is an optional caller
-    * hint: the incoming frame's (known) partition count. A
-    * serving-cadence append is far smaller than the cluster's slot
-    * count — fanning a 250-row batch over numBuckets×m shuffle
-    * partitions schedules 32 near-empty write tasks per append.
-    * Partitioning on the bucket columns colocates every bucket's rows
-    * for ANY partition count (pmod(h, P) is constant per bucket), and
-    * the bucketed writer emits one file per (task, bucket-held) pair,
-    * so P < numBuckets still lands at most one file per non-empty
-    * bucket — fewer tasks, same file growth. Callers that don't know
-    * their batch size (or are corpus-scale builds) omit the hint and
-    * keep the build-time fan-out for write parallelism. The hint is
-    * NOT derived here from df.rdd because under AQE that forces
+  /** Batch append into an existing bucketed table — the
+    * incremental-ingest twin of [[writeBucketed]]. The bucket spec
+    * (numBuckets, bucketCols) is read from the catalog, so an append can
+    * never land rows under a drifted layout. Appends get the same
+    * bounded-files-per-bucket shuffle as the build: without it every
+    * append of a T-partition batch adds up to T×numBuckets files and the
+    * store's scan cost creeps up with every batch ingested.
+    *
+    * `batchParts` is an optional caller hint: the incoming frame's
+    * (known) partition count. A serving-cadence append is far smaller
+    * than the cluster's slot count — fanning a 250-row batch over
+    * numBuckets×m shuffle partitions schedules 32 near-empty write tasks
+    * per append. Partitioning on the bucket columns colocates every
+    * bucket's rows for ANY partition count (pmod(h, P) is constant per
+    * bucket), and the bucketed writer emits one file per (task,
+    * bucket-held) pair, so P < numBuckets still lands at most one file
+    * per non-empty bucket — fewer tasks, same file growth. Callers that
+    * don't know their batch size (or are corpus-scale builds) omit the
+    * hint and keep the build-time fan-out for write parallelism. The
+    * hint is NOT derived here from df.rdd because under AQE that forces
     * query-stage execution as a side effect. */
-  def appendBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
-      numBuckets: Int, batchParts: Option[Int] = None): Unit = {
+  def appendBucketed(df: DataFrame, table: String,
+      batchParts: Option[Int] = None): Unit = {
+    val (numBuckets, bucketCols, _) = org.apache.spark.sql.GraftBridge
+      .bucketSpec(df.sparkSession, table)
+      .getOrElse(throw new IllegalArgumentException(
+        s"$table is not bucketed — appendBucketed grows a writeBucketed table"))
     val sized = batchParts match {
       case Some(p) if p > 0 && p < numBuckets =>
         df.repartition(p, bucketCols.map(col): _*)

@@ -345,17 +345,15 @@ object Similarity {
   /** Persist the grid WITH the index it was built with: the anchors as
     * `<table>__anchors` and the grid fingerprint as a `graft.grid_id`
     * table property on BOTH tables. An index version and its grid are
-    * ONE artifact — [[storedAnchors]] reloads it by table name, and the
-    * explicit-anchors serving faces refuse a grid whose fingerprint
-    * disagrees with the store's instead of returning silently wrong
-    * cells.
+    * ONE artifact — [[storedAnchors]] reloads it by table name, and
+    * every face that reads or grows the store takes its grid from there.
     *
     * Build ordering contract: the artifact is written BEFORE the index
     * data, and the index table's own `graft.grid_id` is stamped LAST
     * ([[stampGridId]]) — so a crash anywhere mid-build leaves a store
     * that REFUSES to serve (old-grid mismatch, missing table, or the
-    * half-built check in [[requireGridMatch]]/[[storedAnchors]]), never
-    * one that silently accepts an arbitrary grid. */
+    * half-built check in [[storedAnchors]]), never one that silently
+    * serves an arbitrary grid. */
   private def writeAnchorsArtifact(spark: org.apache.spark.sql.SparkSession,
       table: String, anchors: DataFrame): (String, DataFrame) = {
     // ONE collect serves the fingerprint, the artifact write AND the
@@ -386,9 +384,9 @@ object Similarity {
     * paired `<table>__anchors` artifact after fingerprinting its CONTENT
     * against the index's own `graft.grid_id` (a swapped, half-updated,
     * or hand-edited artifact refuses instead of serving wrong cells).
-    * The stored serving faces go through this check and then skip the
-    * explicit-anchors faces' re-validation — the pairing is verified
-    * exactly once per call either way. */
+    * Every face that reads or grows a persisted IVF(-PQ) store loads its
+    * grid here, so pairing a store with the wrong grid is not
+    * constructible. */
   def storedAnchors(spark: org.apache.spark.sql.SparkSession,
       table: String): DataFrame = {
     require(spark.catalog.tableExists(table),
@@ -396,7 +394,7 @@ object Similarity {
     val at = anchorsTableName(table)
     require(spark.catalog.tableExists(at),
       s"index $table has no paired anchors artifact $at — built before " +
-        "the artifact existed? pass the grid explicitly or rebuild")
+        "the artifact existed or half-built; rebuild the pair")
     val want = tableProp(spark, table, "graft.grid_id")
     require(want.nonEmpty,
       s"index $table records no graft.grid_id but artifact $at exists — " +
@@ -413,62 +411,6 @@ object Similarity {
         s"${want.get}, artifact $at fingerprints as $got — rebuild the pair")
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), proj.schema)
   }
-
-  /** Validate a caller-passed anchors frame against the store and hand
-    * back the grid as a driver-local relation: the fingerprint refusal
-    * and the probe/assign inlining share ONE collect of the caller's
-    * anchors plan instead of re-executing it per step. A store with a
-    * recorded grid refuses a mismatched fingerprint; a store WITHOUT
-    * one is accepted only when its paired artifact is ALSO absent (a
-    * genuinely pre-artifact table) — grid_id missing while
-    * `<table>__anchors` exists means a build crashed between the data
-    * write and the final stamp, and serving an arbitrary grid against
-    * it is exactly the hazard the pairing refuses. */
-  private def requireGridMatch(spark: org.apache.spark.sql.SparkSession,
-      table: String, anchors: DataFrame): DataFrame = {
-    val proj = anchors.select(col("anchor_id"), col("av"))
-    val rows = proj.collect()
-    tableProp(spark, table, "graft.grid_id") match {
-      case Some(want) =>
-        val got = anchorFingerprintOf(rows)
-        require(got == want,
-          s"anchor grid mismatch for index $table: store built with grid " +
-            s"$want, caller passed grid $got — a wrong grid returns " +
-            "silently wrong cells; load the paired grid with " +
-            "storedAnchors(spark, table) or rebuild the index")
-      case None =>
-        require(!spark.catalog.tableExists(anchorsTableName(table)),
-          s"index $table records no graft.grid_id but artifact " +
-            s"${anchorsTableName(table)} exists — a build that crashed " +
-            "between the data write and the grid stamp; rebuild the pair")
-      // legacy pre-artifact store: accepted, validation is best-effort
-    }
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), proj.schema)
-  }
-
-  /** Refuse a [[PqModel]] whose fingerprint disagrees with what the
-    * codes table was encoded with. A store without the property is
-    * accepted only when its paired `<table>__pq` artifact is ALSO
-    * absent (genuinely pre-artifact) — pq_id missing while the artifact
-    * exists means the build crashed between the codes write and the
-    * final stamp, the same half-built window [[requireGridMatch]]
-    * refuses for the grid. */
-  private def requirePqMatch(spark: org.apache.spark.sql.SparkSession,
-      table: String, model: PqModel): Unit =
-    tableProp(spark, table, "graft.pq_id") match {
-      case Some(want) =>
-        val got = pqFingerprint(model)
-        require(got == want,
-          s"PQ codebook mismatch for index $table: store encoded with " +
-            s"codebook $want, caller passed $got — mixed-codebook codes " +
-            "are unrankable; load the paired model with " +
-            "storedPqModel(spark, table) or rebuild the index")
-      case None =>
-        require(!spark.catalog.tableExists(pqTableName(table)),
-          s"index $table records no graft.pq_id but artifact " +
-            s"${pqTableName(table)} exists — a build that crashed between " +
-            "the codes write and the codebook stamp; rebuild the pair")
-    }
 
   /** Persist the IVF assignment as a cell-bucketed table: the one-off
     * build cost that turns every later search into a bucket-pruned scan.
@@ -490,70 +432,67 @@ object Similarity {
   }
 
   /** Incremental append to a persisted IVF index: assign ONLY the new
-    * vectors against the EXISTING anchor grid and append them to the
-    * bucketed store — the ingest path that grows a deployed index by a
-    * batch without re-encoding the corpus (the ANN twin of
-    * Dedup.incrementalLshPairs). Cost is batch-proportional: one
-    * assignment scan over `newVecs` plus a bucketed append; the existing
-    * index files are never read or rewritten, and because [[ivfAssign]]
-    * is a pure per-vector function of (vector, anchors), the appended
-    * index is row-identical to a full rebuild over old ∪ new
-    * (oracle-pinned by q209, spec-pinned for the PQ twin).
+    * vectors against the store's OWN anchor grid ([[storedAnchors]]) and
+    * append them to the bucketed store — the ingest path that grows a
+    * deployed index by a batch without re-encoding the corpus (the ANN
+    * twin of Dedup.incrementalLshPairs). Cost is batch-proportional: one
+    * assignment scan over `newVecs` plus a bucketed append under the
+    * catalog's bucket spec; the existing index files are never read or
+    * rewritten, and because [[ivfAssign]] is a pure per-vector function
+    * of (vector, anchors), the appended index is row-identical to a full
+    * rebuild over old ∪ new (oracle-pinned by q209, spec-pinned for the
+    * PQ twin).
     *
     * Returns the post-append [[ivfCellStats]] occupancy report: appended
     * batches follow the OLD centroids, so drifting data shows up as a
     * climbing max ratio_to_mean on the hot cells — the operator's signal
-    * to re-train anchors and rebuild rather than keep appending. Spark
-    * validates the bucket spec against the catalog on append, so a
-    * writer configured with a different numBuckets fails loudly instead
-    * of corrupting the layout. */
-  def ivfIndexAppend(newVecs: DataFrame, anchors: DataFrame, id: String,
-      table: String, numBuckets: Int = 16, roundAt: Int = 4): DataFrame = {
-    // a writer configured with a drifted grid corrupts silently (rows
-    // land in cells the serving grid never probes) — refuse up front,
-    // like Spark's own bucket-spec check refuses a drifted layout
+    * to re-train anchors and rebuild rather than keep appending. */
+  def ivfIndexAppend(newVecs: DataFrame, id: String, table: String,
+      roundAt: Int = 4): DataFrame =
+    appendStored(newVecs, id, table, codes = false, roundAt)
+
+  /** Incremental append to a persisted IVF-PQ codes index
+    * ([[ivfPqBuildIndex]]'s table): assign + PQ-encode only the batch
+    * under the store's own anchors and codebook ([[storedPqModel]]),
+    * append the codes rows. Same equivalence argument as
+    * [[ivfIndexAppend]] (assignment and encoding are pure per-vector
+    * functions of the frozen model), same skew report — plus the
+    * PQ-specific caveat that a frozen codebook's quantization error grows
+    * as the data distribution drifts, which the cell-occupancy skew is
+    * the cheap observable proxy for. */
+  def ivfPqIndexAppend(newVecs: DataFrame, id: String, table: String,
+      roundAt: Int = 4): DataFrame =
+    appendStored(newVecs, id, table, codes = true, roundAt)
+
+  private def appendStored(newVecs: DataFrame, id: String, table: String,
+      codes: Boolean, roundAt: Int): DataFrame = {
     val spark = newVecs.sparkSession
-    val grid = requireGridMatch(spark, table, anchors)
+    val grid = storedAnchors(spark, table)
+    val model = if (codes) Some(storedPqModel(spark, table)) else None
+    // lazy: `.rdd` must plan with AQE off, inside the scope — under AQE
+    // it would execute query stages as a side effect
+    lazy val parts = math.max(1, newVecs.rdd.getNumPartitions)
     // batch-scoped maintenance conf, same rationale as the LSH append
     // (GraftSession.withMaintenanceConf): the assignment and the write
     // are batch-bounded, so AQE's stage-per-job execution and the
     // session's static shuffle width only add driver round-trips. The
     // returned occupancy report is LAZY and executes after the scope
     // closes — store-scale reads keep the caller's full conf.
-    graft.GraftSession.withMaintenanceConf(spark,
-        newVecs.rdd.getNumPartitions) {
-      Layout.appendBucketed(ivfAssign(newVecs, grid, id, roundAt), table,
-        bucketCols = Seq("cell"), numBuckets = numBuckets,
-        batchParts = Some(math.max(1, newVecs.rdd.getNumPartitions)))
+    graft.GraftSession.withMaintenanceConf(spark, parts) {
+      Layout.appendBucketed(ivfRows(newVecs, grid, model, id, roundAt), table,
+        batchParts = Some(parts))
     }
     ivfCellStats(spark, table, roundAt)
   }
 
-  /** Incremental append to a persisted IVF-PQ codes index
-    * ([[ivfPqBuildIndex]]'s table): assign + PQ-encode only the batch
-    * under the EXISTING anchors and codebook, append the codes rows.
-    * Same equivalence argument as [[ivfIndexAppend]] (assignment and
-    * encoding are pure per-vector functions of the frozen model), same
-    * skew report — plus the PQ-specific caveat that a frozen codebook's
-    * quantization error grows as the data distribution drifts, which the
-    * cell-occupancy skew is the cheap observable proxy for. */
-  def ivfPqIndexAppend(newVecs: DataFrame, anchors: DataFrame, id: String,
-      model: PqModel, table: String, numBuckets: Int = 16,
-      roundAt: Int = 4): DataFrame = {
-    val spark = newVecs.sparkSession
-    val grid = requireGridMatch(spark, table, anchors)
-    requirePqMatch(spark, table, model)
-    // batch-scoped maintenance conf — see [[ivfIndexAppend]]
-    graft.GraftSession.withMaintenanceConf(spark,
-        newVecs.rdd.getNumPartitions) {
-      Layout.appendBucketed(
-        ivfAssign(newVecs, grid, id, roundAt)
-          .withColumn("codes", pqCodesCol(col("embedding"), model, roundAt))
-          .drop("embedding"),
-        table, bucketCols = Seq("cell"), numBuckets = numBuckets,
-        batchParts = Some(math.max(1, newVecs.rdd.getNumPartitions)))
-    }
-    ivfCellStats(spark, table, roundAt)
+  /** The rows an IVF store holds for `emb`: [[ivfAssign]]'s cell, plus —
+    * for a codes store — the PQ codes in place of the float vector. */
+  private[graft] def ivfRows(emb: DataFrame, anchors: DataFrame,
+      model: Option[PqModel], id: String, roundAt: Int): DataFrame = {
+    val assigned = ivfAssign(emb, anchors, id, roundAt)
+    model.fold(assigned)(m => assigned
+      .withColumn("codes", pqCodesCol(col("embedding"), m, roundAt))
+      .drop("embedding"))
   }
 
   /** Re-train + rebuild for a drifted IVF index — the operator the
@@ -564,9 +503,8 @@ object Similarity {
     * iteration), rebuilds the bucketed store under `newTable` (a fresh
     * version — never an in-place overwrite of a table that is being
     * read from), and returns the new `(anchor_id, av)` anchors frame.
-    * The caller swaps serving to (newTable, returned anchors) together:
-    * an index version and its anchor grid are one artifact — searching
-    * a store with the wrong grid returns silently wrong cells.
+    * `newTable` carries its own grid artifact, so the stored faces serve
+    * it by name alone.
     * Cost: the kmeans fits (iters scans) + one assignment scan + the
     * bucketed write — the amortized one-off [[ivfIndexAppend]] defers. */
   def ivfRetrain(spark: org.apache.spark.sql.SparkSession, table: String,
@@ -755,110 +693,39 @@ object Similarity {
       .orderBy("subspace")
   }
 
+  /** The store stamps an IVF stage's rows depend on — the marker
+    * [[StagedBatches]] records per staged batch: the grid, plus the
+    * codebook when the store is a codes store (stamped `graft.pq_id`). */
+  private[graft] def ivfStageStamps(spark: org.apache.spark.sql.SparkSession,
+      table: String): Seq[(String, String)] =
+    StagedBatches.stamps(spark, table, "graft.grid_id" +:
+      tableProp(spark, table, "graft.pq_id").map(_ => "graft.pq_id").toSeq)
+
   /** Fold staged streaming batches (EventStream.streamingIvfStage's
-    * `stageDir/batch=<n>` dirs) into the persisted IVF index —
+    * `stageDir/batch=<n>` dirs) into the persisted IVF(-PQ) index —
     * exactly-once WITHOUT a marker ledger: staged rows are anti-joined
     * against the index's ids before the append, so a crash between
     * append and cleanup, a replayed absorb, or a half-deleted stage can
     * never duplicate a vector. The staging zone is already idempotent
     * per batch (overwrite-by-batchId), so the whole arrival path is
-    * crash-convergent end to end. Only `_SUCCESS`-committed batch dirs
-    * are read (the EventStream gate). Absorbed batch dirs are deleted
-    * after the append lands; a failed delete is re-absorbed to zero new
-    * rows next time.
+    * crash-convergent end to end. Which dirs are read, skipped as torn,
+    * or refused as cut under another grid or codebook is the
+    * [[StagedBatches]] contract.
     *
     * Cost: one column-pruned id scan of the index per absorb (the
     * anti-join's build side) + the staged mass — absorb runs at
     * compaction cadence, not per micro-batch, exactly so this scan
     * amortizes. Returns (batches_absorbed, rows_appended). */
-  /** Marker [[graft.streaming.EventStream.streamingIvfPqStage]] drops
-    * into each staged batch dir AFTER the data commit: the grid and
-    * codebook fingerprints the batch was encoded under. */
-  val IvfStageMarkerFile = "_gridpq"
-
   def ivfIndexAbsorb(spark: org.apache.spark.sql.SparkSession,
-      stageDir: String, table: String, id: String,
-      numBuckets: Int = 16): (Long, Long) = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(stageDir)
-    val hfs = root.getFileSystem(hconf)
-    if (!hfs.exists(root)) return (0L, 0L)
-    val props = org.apache.spark.sql.GraftBridge.tableProperties(spark, table)
-    // a CODES store (stamped graft.pq_id) only ever receives PQ-encoded
-    // stages, and the PQ staging contract writes `_gridpq` AFTER the
-    // data — so for a PQ table a markerless-but-_SUCCESS dir can only be
-    // a TORN stage (crash between the data commit and the marker). It
-    // must be skipped, not absorbed: the stream's checkpoint has not
-    // committed that batch and will rewrite the dir, whereas absorbing
-    // it after a retrain would make codes encoded under the OLD codebook
-    // permanent (the replayed batch then anti-joins away on stored ids).
-    val tableIsPq = props.contains("graft.pq_id")
-    val committed = hfs.listStatus(root).toIndexedSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .filter(s => hfs.exists(
-        new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .filter { s =>
-        // a `_gridpq`-marked batch (the PQ staging path) must have been
-        // encoded under the store's CURRENT model pair — a retrain
-        // swapped the stamps, and absorbing rows encoded under the old
-        // codebook would corrupt the index silently. Markerless dirs
-        // are the plain-IVF staging contract (assignment validity is
-        // the stage caller's anchors argument) — unless the TARGET is a
-        // PQ store, where markerless means torn (see tableIsPq above).
-        val marker = new org.apache.hadoop.fs.Path(s.getPath, IvfStageMarkerFile)
-        if (!hfs.exists(marker)) !tableIsPq
-        else {
-          val in = hfs.open(marker)
-          val got = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .mkString.trim finally in.close()
-          // a half-written marker (crash mid-write on a filesystem
-          // without atomic rename) is a torn stage, not model drift:
-          // skip it and let the stream's replay rewrite the dir. Only a
-          // WELL-FORMED marker that disagrees with the stamps is the
-          // loud retrain-drift refusal.
-          val wellFormed = got.count(_ == ',') == 1 &&
-            !got.startsWith(",") && !got.endsWith(",")
-          if (!wellFormed) false
-          else {
-            val want = s"${props.getOrElse("graft.grid_id", "")}," +
-              props.getOrElse("graft.pq_id", "")
-            require(got == want,
-              s"staged batch ${s.getPath.getName} was encoded under model " +
-                s"pair ($got) but $table is stamped ($want) — the store " +
-                "was retrained/rebuilt while the stage was outstanding; " +
-                "drop the stage dir and re-ingest those batches")
-            true
-          }
-        }
-      }
-      .map(_.getPath)
-      .sortBy(_.getName)
-    if (committed.isEmpty) return (0L, 0L)
-    // a vector id staged in two batches (client retry) keeps its
-    // FIRST-staged batch's row — deterministic because the rule is
-    // min(batch id), not "whichever partition read first"; duplicate
-    // ids WITHIN one micro-batch (same batch dir) keep one row
-    // arbitrarily, which the overwrite-by-batchId staging contract
-    // makes content-identical in practice. The rank window partitions
-    // by vector id over staged-batch rows only — per-id groups are
-    // retry-sized, never index-sized.
-    val staged = spark.read
-      .parquet(committed.map(_.toString): _*)
-      .withColumn("__batch",
-        regexp_extract(input_file_name(), "batch=(\\d+)", 1).cast("long"))
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy(col(id)).orderBy(asc("__batch"))))
-      .filter(col("__rk") === 1)
-      .drop("__rk", "__batch")
-    val fresh = staged.join(
-      spark.table(table).select(col(id)), Seq(id), "left_anti")
-    val n = fresh.count()
-    if (n > 0)
-      Layout.appendBucketed(fresh, table,
-        bucketCols = Seq("cell"), numBuckets = numBuckets)
-    committed.foreach(p => hfs.delete(p, true))
-    (committed.size.toLong, n)
-  }
+      stageDir: String, table: String, id: String): (Long, Long) =
+    StagedBatches.absorb(spark, stageDir, table, id,
+        ivfStageStamps(spark, table)) { staged =>
+      val fresh = staged.join(
+        spark.table(table).select(col(id)), Seq(id), "left_anti")
+      val n = fresh.count()
+      if (n > 0) Layout.appendBucketed(fresh, table)
+      n
+    }.getOrElse((0L, 0L))
 
   /** Per-cell occupancy of a persisted IVF(-PQ) index: vectors per cell
     * and each cell's ratio to the mean occupancy — the skew report that
@@ -894,24 +761,15 @@ object Similarity {
       .limit(nprobe)
       .select(col("anchor_id").as("cell"))
 
-  /** Top-k against a persisted IVF index: probe cells are resolved from
-    * the (broadcast) anchors, then the bucketed table is scanned with a
-    * `cell IN (...)` filter that prunes to the probed buckets. */
-  def ivfSearchIndexed(spark: org.apache.spark.sql.SparkSession,
-      table: String, id: String, queryVec: Array[Float],
-      anchors: DataFrame, nprobe: Int, k: Int, roundAt: Int = 4,
-      excludeId: Option[Long] = None): DataFrame = {
-    val grid = requireGridMatch(spark, table, anchors)
-    ivfSearchCore(spark, table, id, queryVec, grid, nprobe, k, roundAt,
-      excludeId)
-  }
-
-  private def ivfSearchCore(spark: org.apache.spark.sql.SparkSession,
-      table: String, id: String, queryVec: Array[Float],
-      anchors: DataFrame, nprobe: Int, k: Int, roundAt: Int,
-      excludeId: Option[Long]): DataFrame = {
+  /** Top-k against a persisted IVF index, by table name alone: probe
+    * cells are resolved from the index's OWN grid ([[storedAnchors]]),
+    * then the bucketed table is scanned with a `cell IN (...)` filter
+    * that prunes to the probed buckets. */
+  def ivfSearchStored(spark: org.apache.spark.sql.SparkSession,
+      table: String, id: String, queryVec: Array[Float], nprobe: Int,
+      k: Int, roundAt: Int = 4, excludeId: Option[Long] = None): DataFrame = {
     val qLit = typedLit(queryVec.toSeq)
-    val cells = probeCellsDf(anchors, qLit, nprobe, roundAt)
+    val cells = probeCellsDf(storedAnchors(spark, table), qLit, nprobe, roundAt)
       .collect().map(_.getAs[Number]("cell").longValue())
     val base = spark.table(table).filter(col("cell").isin(cells.toIndexedSeq: _*))
     excludeId.fold(base)(x => base.filter(col(id) =!= x)) // self-match drop
@@ -920,17 +778,6 @@ object Similarity {
       .orderBy(desc("sim"), asc(id))
       .limit(k)
   }
-
-  /** [[ivfSearchIndexed]] against the index's OWN persisted grid — the
-    * serving face that takes only the table name, so pairing the wrong
-    * grid with a store is not constructible. */
-  def ivfSearchStored(spark: org.apache.spark.sql.SparkSession,
-      table: String, id: String, queryVec: Array[Float], nprobe: Int,
-      k: Int, roundAt: Int = 4, excludeId: Option[Long] = None): DataFrame =
-    // storedAnchors already content-verified the pairing — go straight
-    // to the core, not through the explicit face's re-validation
-    ivfSearchCore(spark, table, id, queryVec,
-      storedAnchors(spark, table), nprobe, k, roundAt, excludeId)
 
   /** Batch-of-queries serving against a persisted IVF index: ONE
     * bucket-pruned scan of the stored table answers EVERY query vector
@@ -1044,10 +891,7 @@ object Similarity {
     // same crash-refuses-to-serve ordering as ivfBuildIndex
     val (gid, grid) = writeAnchorsArtifact(spark, table, anchors)
     val pid = writePqArtifact(spark, table, model)
-    Layout.writeBucketed(
-      ivfAssign(emb, grid, id, roundAt)
-        .withColumn("codes", pqCodesCol(col("embedding"), model, roundAt))
-        .drop("embedding"),
+    Layout.writeBucketed(ivfRows(emb, grid, Some(model), id, roundAt),
       table, bucketCols = Seq("cell"), numBuckets = numBuckets)
     // the drift BASELINE ([[pqDriftStats]]): per-subspace mean encode
     // error of the build corpus under this codebook — one extra agg
@@ -1098,8 +942,8 @@ object Similarity {
       table: String): PqModel = {
     val pt = pqTableName(table)
     require(spark.catalog.tableExists(pt),
-      s"index $table has no paired codebook artifact $pt — built before " +
-        "the artifact existed? pass the model explicitly or rebuild")
+      s"index $table has no paired codebook artifact $pt — not a codes " +
+        "store, or built before the artifact existed; rebuild the pair")
     val rows = spark.table(pt).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     // a torn or hand-edited artifact must refuse with the same "rebuild
@@ -1134,36 +978,6 @@ object Similarity {
     model
   }
 
-  /** Top-k against a persisted IVF-PQ index: probe cells resolve from
-    * the broadcast anchors, the bucketed codes table is scanned with a
-    * pruning `cell IN (...)` filter, ADC ranks the pruned codes, and
-    * the exact re-rank joins the `refine` winners against the float
-    * vector table ([[pqTopKIndexed]]'s id-bounded join). Equals
-    * [[ivfPqTopK]] row-for-row on the same inputs (spec-pinned) while
-    * reading m bytes/vector from ~nprobe/numBuckets of the index. */
-  def ivfPqSearchIndexed(spark: org.apache.spark.sql.SparkSession,
-      table: String, vectors: DataFrame, id: String, queryId: Long,
-      anchors: DataFrame, model: PqModel, nprobe: Int, refine: Int, k: Int,
-      roundAt: Int = 4): DataFrame = {
-    require(nprobe >= 1)
-    // same drifted-artifact refusals as the IVF faces: wrong grid probes
-    // wrong cells, wrong codebook ranks codes against a mismatched LUT —
-    // both return plausible-looking wrong neighbors with no error
-    val grid = requireGridMatch(spark, table, anchors)
-    requirePqMatch(spark, table, model)
-    val qRows = vectors.filter(col(id) === queryId).select("embedding").take(1)
-    if (qRows.isEmpty)
-      return pqTopKImpl(spark.table(table).drop("cell").limit(0), vectors,
-        id, queryId, model, refine, k, roundAt, None)
-    val qF = qRows(0).getSeq[Float](0)
-    val cells = probeCellsDf(grid, typedLit(qF), nprobe, roundAt)
-      .collect().map(_.getAs[Number]("cell").longValue())
-    pqTopKImpl(
-      spark.table(table)
-        .filter(col("cell").isin(cells.toIndexedSeq: _*)).drop("cell"),
-      vectors, id, queryId, model, refine, k, roundAt, Some(qF))
-  }
-
   /** Batch-of-queries serving against a persisted IVF-PQ codes index
     * ([[ivfPqBuildIndex]]'s table) — the PQ twin of
     * [[ivfSearchStoredBatch]]: N query vectors answered from ONE
@@ -1172,7 +986,7 @@ object Similarity {
     * is not constructible). Per query the semantics are IDENTICAL to
     * serving each vector through the per-query chain (probe →
     * ADC-top-`refine` → exact re-rank → top-k; SimilaritySpec pins row
-    * equality against [[ivfPqSearchIndexed]] on indexed query ids):
+    * equality against [[ivfPqTopK]] on indexed query ids):
     * probe cells by rounded anchor cosine with the [[probeCellsDf]] tie
     * rule, ADC over each query's own LUT, candidates by (adist ASC, id
     * ASC), final ranking by (exact sim DESC, id ASC). Rows whose id
@@ -1552,9 +1366,7 @@ object Similarity {
       roundAt: Int = 4): DataFrame = {
     require(nprobe >= 1)
     val vectors = emb.select(col(id), col("embedding"))
-    val codesAll = ivfAssign(emb, anchors, id, roundAt)
-      .withColumn("codes", pqCodesCol(col("embedding"), model, roundAt))
-      .drop("embedding")
+    val codesAll = ivfRows(emb, anchors, Some(model), id, roundAt)
     val qRows = vectors.filter(col(id) === queryId).select("embedding").take(1)
     if (qRows.isEmpty)
       return pqTopKImpl(codesAll.drop("cell").limit(0), vectors,
@@ -1687,25 +1499,18 @@ object Similarity {
   }
 
   /** [[recallEval]] against a PERSISTED index ([[ivfBuildIndex]]'s
-    * cell-bucketed table): the deployment face — cell assignments are
-    * READ from the store, so the eval's corpus-wide work drops to ONE
-    * query-batch cosine pass over the stored `(id, embedding, cell)`
-    * rows (brute ground truth and IVF candidates both derive from it
-    * via bounded top-k aggregates). Evaluating a billion-vector index costs one scan of
-    * it, no assignment or encode pass at all. `anchors` must be the
-    * grid the store was built with (the [[ivfRetrain]] version-pairing
-    * contract). Output and ranking rules identical to [[recallEval]] —
+    * cell-bucketed table), by table name alone: the deployment face —
+    * cell assignments are READ from the store and the grid loads from
+    * its own artifact ([[storedAnchors]]), so the eval's corpus-wide
+    * work drops to ONE query-batch cosine pass over the stored
+    * `(id, embedding, cell)` rows (brute ground truth and IVF candidates
+    * both derive from it via bounded top-k aggregates). Evaluating a
+    * billion-vector index costs one scan of it, no assignment or encode
+    * pass at all. Output and ranking rules identical to [[recallEval]] —
     * spec-pinned equal on the same data. */
-  def recallEvalIndexed(spark: org.apache.spark.sql.SparkSession,
-      table: String, id: String, queryIds: Seq[Long], anchors: DataFrame,
-      nprobes: Seq[Int], k: Int, roundAt: Int = 4): DataFrame = {
-    val grid = requireGridMatch(spark, table, anchors)
-    recallEvalCore(spark, table, id, queryIds, grid, nprobes, k, roundAt)
-  }
-
-  private def recallEvalCore(spark: org.apache.spark.sql.SparkSession,
-      table: String, id: String, queryIds: Seq[Long], anchors: DataFrame,
-      nprobes: Seq[Int], k: Int, roundAt: Int): DataFrame = {
+  def recallEvalStored(spark: org.apache.spark.sql.SparkSession,
+      table: String, id: String, queryIds: Seq[Long], nprobes: Seq[Int],
+      k: Int, roundAt: Int = 4): DataFrame = {
     require(queryIds.nonEmpty && k >= 1)
     require(nprobes.nonEmpty && nprobes.forall(_ >= 1))
     requireIntegralId(spark.table(table), id, "recallEval (stored index)")
@@ -1716,7 +1521,7 @@ object Similarity {
     val stored = spark.table(table)
     val q = stored.filter(col(id).isInCollection(queryIds))
       .select(col(id).as("q_id"), col("embedding").as("qv"))
-    val probes = probeRanks(anchors, q, nprobes.max, roundAt)
+    val probes = probeRanks(storedAnchors(spark, table), q, nprobes.max, roundAt)
     // THE one corpus pass: stored rows × query batch, carrying the
     // STORED cell — no assignment or encode pass; ground truth and
     // every dial fold out of it in one bounded aggregation
@@ -1727,15 +1532,6 @@ object Similarity {
       .join(broadcast(probes), Seq("q_id", "cell"), "left")
     recallDialFold(scored, id, paramsDf, nprobes, k, roundAt, recallCol)
   }
-
-  /** [[recallEvalIndexed]] against the index's OWN persisted grid —
-    * the sizing sweep by table name alone. */
-  def recallEvalStored(spark: org.apache.spark.sql.SparkSession,
-      table: String, id: String, queryIds: Seq[Long], nprobes: Seq[Int],
-      k: Int, roundAt: Int = 4): DataFrame =
-    // storedAnchors already content-verified the pairing
-    recallEvalCore(spark, table, id, queryIds,
-      storedAnchors(spark, table), nprobes, k, roundAt)
 
   /** IVF-PQ recall evaluation over a QUERY BATCH × (nprobe, refine)
     * dials — the full index-sizing sweep a deployment runs before

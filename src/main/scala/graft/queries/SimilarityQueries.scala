@@ -828,8 +828,7 @@ object SimilarityQueries {
       e.filter(col("vec_id") < cut), anchors, "vec_id",
       s"$db.emb_ivf", numBuckets = 8)
     val skew = graft.operators.Similarity.ivfIndexAppend(
-      e.filter(col("vec_id") >= cut), anchors, "vec_id",
-      s"$db.emb_ivf", numBuckets = 8)
+      e.filter(col("vec_id") >= cut), "vec_id", s"$db.emb_ivf")
     (s"$db.emb_ivf", skew)
   }
 
@@ -844,14 +843,10 @@ object SimilarityQueries {
     "q209_ivf_index_append",
     (s, d) => {
       val (table, _) = ivfAppendFixture(s, d)
-      val e = Tables.embeddings(s, d)
-      val anchors = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("anchor_id"), col("embedding").as("av"))
-      val qv = e.filter(col("vec_id") === 0)
+      val qv = Tables.embeddings(s, d).filter(col("vec_id") === 0)
         .head().getAs[Seq[Float]]("embedding").toArray
-      graft.operators.Similarity.ivfSearchIndexed(
-          s, table, "vec_id", qv, anchors, nprobe = 2, k = 10,
-          excludeId = Some(0L))
+      graft.operators.Similarity.ivfSearchStored(
+          s, table, "vec_id", qv, nprobe = 2, k = 10, excludeId = Some(0L))
         .select("vec_id", "label", "sim")
     },
     Some("""
@@ -1087,7 +1082,7 @@ object SimilarityQueries {
     * persist the (codes, grid, codebook) triple, then serve a 3-query
     * batch from ONE bucket-pruned scan of the m-byte codes — per-query
     * semantics identical to the q178 chain served one at a time
-    * (SimilaritySpec pins row equality against ivfPqSearchIndexed).
+    * (SimilaritySpec pins row equality against ivfPqTopK).
     * The oracle replays the whole composition per query: full-corpus
     * encode (q171's CTEs), assignment + per-query top-2 probe cells
     * (q214's rules), each query's own 6-dp LUT, ADC over probed cells
@@ -1290,8 +1285,7 @@ object SimilarityQueries {
           e.filter(col("vec_id") % 2 === 0), anchors, "vec_id", model,
           s"$db.v1", numBuckets = 8)
         graft.operators.Similarity.ivfPqIndexAppend(
-          e.filter(col("vec_id") % 2 =!= 0), anchors, "vec_id", model,
-          s"$db.v1", numBuckets = 8)
+          e.filter(col("vec_id") % 2 =!= 0), "vec_id", s"$db.v1")
       }
       graft.operators.Similarity.pqDriftStats(s, s"$db.v1", e, "vec_id")
     },

@@ -741,87 +741,45 @@ object EventStream {
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** Commit a staging-zone marker file atomically: write to a dotted
-    * temp name in the same dir, then rename into place. A bare
-    * create+write+close leaves a HALF-WRITTEN marker if the writer
-    * crashes mid-write — content that parses as neither the stamped
-    * params nor a missing marker, wedging every later absorb of the
-    * stage dir behind a misleading drift refusal. Rename is the atomic
-    * commit on HDFS/posix; on object stores without atomic rename the
-    * absorbs additionally treat an unparseable marker as a torn stage
-    * (skip + stream replay), so both halves of the defense hold. */
-  private def writeMarkerAtomic(spark: SparkSession, marker: Path,
-      content: String): Unit = {
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(marker.getParent, s".${marker.getName}.tmp")
-    val os = fs.create(tmp, true)
-    try os.write(content.getBytes("UTF-8")) finally os.close()
-    if (fs.exists(marker)) fs.delete(marker, false)
-    if (!fs.rename(tmp, marker))
-      throw new java.io.IOException(s"could not commit marker $marker")
-  }
-
-  /** Streaming arrival path of the IVF index lifecycle (build →
+  /** Streaming arrival path of the IVF(-PQ) index lifecycle (build →
     * [[graft.operators.Similarity.ivfIndexAppend]] → skew → retrain):
     * each micro-batch of `(id, embedding)` rows is assigned against the
-    * FROZEN anchor grid (`ivfAssign` is a pure map expression, so it
-    * runs unchanged on a stream) and landed as `stageDir/batch=<id>`
-    * with per-batch OVERWRITE — the [[runForeachBatchIdempotent]]
-    * contract, so a crash-replayed batch rewrites its own dir instead
-    * of duplicating rows. A bucketed catalog append is NOT
-    * replay-idempotent, which is exactly why arrival stages here and
+    * store's FROZEN anchor grid (`ivfAssign` is a pure map expression,
+    * so it runs unchanged on a stream) and, for a codes store (stamped
+    * `graft.pq_id`), PQ-encoded under its stored codebook. Both models
+    * load from the store's own fingerprint-checked artifacts, so a stage
+    * can never encode under a grid or codebook the caller drifted.
+    *
+    * Each batch lands through [[graft.operators.StagedBatches]]:
+    * overwrite-by-batchId, so a crash-replayed batch rewrites its own
+    * dir instead of duplicating rows, then a marker of the stamps it
+    * was cut under. A bucketed catalog append is NOT replay-idempotent,
+    * which is exactly why arrival stages here and
     * [[graft.operators.Similarity.ivfIndexAbsorb]] (anti-join-guarded,
-    * crash-convergent) folds the stage into the served table at
-    * compaction cadence. A search wanting zero staleness reads
-    * table ∪ stage — the incrementalLsh "index + recent" pattern. */
-  def streamingIvfStage(vecs: DataFrame, anchors: DataFrame, id: String,
-      stageDir: String, checkpoint: String, roundAt: Int = 4): StreamingQuery =
-    vecs.writeStream
-      .foreachBatch { (df: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // roundAt must match what the index was built/appended with —
-        // a different rounding can flip boundary assignments, landing
-        // absorbed rows in cells the serving grid never probes
-        graft.operators.Similarity.ivfAssign(df, anchors, id, roundAt)
-          .write.mode("overwrite").parquet(s"$stageDir/batch=$batchId")
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** Stage a micro-batched vector stream for a persisted IVF-PQ CODES
-    * store (`Similarity.ivfPqBuildIndex`'s table) — the PQ twin of
-    * [[streamingIvfStage]], closing the staging asymmetry between the
-    * float and codes index families. Unlike the IVF stage (whose grid
-    * the caller passes), BOTH model artifacts load from the store's
-    * own fingerprint-checked pair (`storedAnchors` + `storedPqModel`),
-    * so a stage can never encode under a drifted grid or codebook.
-    * Each micro-batch assigns + PQ-encodes once and lands as an
-    * idempotent overwrite-by-batchId dir; a `_gridpq` marker (the
-    * grid/codebook fingerprints the stage encoded under) is written
-    * AFTER the data, and `Similarity.ivfIndexAbsorb` refuses a staged
-    * batch whose marker disagrees with the store's CURRENT stamps —
-    * the store was retrained/rebuilt while the stage was outstanding,
-    * and absorbing rows encoded under the old model would corrupt the
-    * index silently. */
-  def streamingIvfPqStage(vecs: DataFrame, table: String, id: String,
+    * crash-convergent, refusing a stage cut under another grid or
+    * codebook) folds the stage into the served table at compaction
+    * cadence. A search wanting zero staleness reads table ∪ stage — the
+    * incrementalLsh "index + recent" pattern. `roundAt` must match what
+    * the index was built/appended with — a different rounding can flip
+    * boundary assignments, landing absorbed rows in cells the serving
+    * grid never probes. */
+  def streamingIvfStage(vecs: DataFrame, table: String, id: String,
       stageDir: String, checkpoint: String,
       roundAt: Int = 4): StreamingQuery = {
     val spark = vecs.sparkSession
-    val anchors = graft.operators.Similarity.storedAnchors(spark, table)
-    val model = graft.operators.Similarity.storedPqModel(spark, table)
-    val props = org.apache.spark.sql.GraftBridge.tableProperties(spark, table)
-    val marker = s"${props("graft.grid_id")},${props("graft.pq_id")}"
+    import graft.operators.Similarity
+    // stamps BEFORE the models: a rebuild in between leaves a marker
+    // older than the rows, which the absorb refuses — never rows older
+    // than their marker
+    val stamps = Similarity.ivfStageStamps(spark, table)
+    val anchors = Similarity.storedAnchors(spark, table)
+    val model = stamps.find(_._1 == "graft.pq_id")
+      .map(_ => Similarity.storedPqModel(spark, table))
     vecs.writeStream
       .foreachBatch { (df: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val out = s"$stageDir/batch=$batchId"
-        graft.operators.Similarity.ivfAssign(df, anchors, id, roundAt)
-          .withColumn("codes", graft.operators.Similarity
-            .pqCodesCol(org.apache.spark.sql.functions.col("embedding"),
-              model, roundAt))
-          .drop("embedding")
-          .write.mode("overwrite").parquet(out)
-        writeMarkerAtomic(spark, new org.apache.hadoop.fs.Path(
-          out, graft.operators.Similarity.IvfStageMarkerFile), marker)
+        graft.operators.StagedBatches.write(
+          Similarity.ivfRows(df, anchors, model, id, roundAt),
+          stageDir, batchId, stamps)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
@@ -832,25 +790,22 @@ object EventStream {
     * (`Dedup.lshBuildIndex`'s table) — the LSH twin of
     * [[streamingIvfStage]]: each micro-batch runs the signature kernel
     * ONCE (under the store's own stamped (n, k) — never the caller's)
-    * and lands as an idempotent overwrite-by-batchId parquet dir of
-    * pre-indexed (id, mh, hs) rows; `Dedup.lshIndexAbsorb` later folds
-    * committed batches through the guarded append core at compaction
-    * cadence, so the blocking per-batch `lshIndexAppend` call drops out
-    * of the ingest hot path. The `_lshparams` marker is written AFTER
-    * the data commit: a crash between the two leaves a torn stage the
-    * absorb skips and this stream's checkpoint replays — the same
-    * convergence-by-replay rule as the IVF staging zone. */
+    * and lands through [[graft.operators.StagedBatches]] as pre-indexed
+    * (id, mh, hs) rows; `Dedup.lshIndexAbsorb` later folds committed
+    * batches through the guarded append core at compaction cadence, so
+    * the blocking per-batch `lshIndexAppend` call drops out of the
+    * ingest hot path. */
   def streamingLshStage(docs: DataFrame, table: String, id: String,
       text: String, stageDir: String, checkpoint: String): StreamingQuery = {
     val spark = docs.sparkSession
-    val (n, k, _, _) = graft.operators.Dedup.storedLshParams(spark, table)
+    val stamps = graft.operators.StagedBatches.stamps(spark, table,
+      graft.operators.Dedup.LshStageKeys)
+    val Seq(n, k) = stamps.map(_._2.toInt)
     docs.writeStream
       .foreachBatch { (df: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val out = s"$stageDir/batch=$batchId"
-        graft.operators.Dedup.indexDocs(df, id, text, n, k)
-          .write.mode("overwrite").parquet(out)
-        writeMarkerAtomic(spark, new org.apache.hadoop.fs.Path(
-          out, graft.operators.Dedup.LshStageParamsFile), s"$n,$k")
+        graft.operators.StagedBatches.write(
+          graft.operators.Dedup.indexDocs(df, id, text, n, k),
+          stageDir, batchId, stamps)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())

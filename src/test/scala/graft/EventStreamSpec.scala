@@ -406,29 +406,19 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     val ms = MemoryStream[(Long, Seq[Float], Int)]
     def stream = ms.toDF().toDF("vec_id", "embedding", "label")
     ms.addData(b1)
-    EventStream.streamingIvfStage(stream, anchors, "vec_id", stage, chk)
+    EventStream.streamingIvfStage(stream, s"$db.served", "vec_id", stage, chk)
       .awaitTermination()
     ms.addData(b2)
-    EventStream.streamingIvfStage(stream, anchors, "vec_id", stage, chk)
+    EventStream.streamingIvfStage(stream, s"$db.served", "vec_id", stage, chk)
       .awaitTermination()
 
     // absorb folds both staged batches in; a second absorb is a no-op
+    // (a replayed BATCH is the staged-absorb contract spec's case)
     val (nb, nr) = graft.operators.Similarity.ivfIndexAbsorb(
-      spark, stage, s"$db.served", "vec_id", numBuckets = 8)
+      spark, stage, s"$db.served", "vec_id")
     assert(nb == 2 && nr == rows.length.toLong, (nb, nr))
     assert(graft.operators.Similarity.ivfIndexAbsorb(
-      spark, stage, s"$db.served", "vec_id", numBuckets = 8) == (0L, 0L))
-    assert(spark.table(s"$db.served").count() == emb.count())
-
-    // crash window: the append landed but the staged dir survived —
-    // re-absorbing the SAME rows appends nothing (anti-join guard)
-    val replayDir = s"$stage/batch=99"
-    graft.operators.Similarity.ivfAssign(
-        emb.filter(col("vec_id") >= cut), anchors, "vec_id")
-      .write.mode("overwrite").parquet(replayDir)
-    val (rb, rr) = graft.operators.Similarity.ivfIndexAbsorb(
-      spark, stage, s"$db.served", "vec_id", numBuckets = 8)
-    assert(rb == 1L && rr == 0L, (rb, rr))
+      spark, stage, s"$db.served", "vec_id") == (0L, 0L))
     assert(spark.table(s"$db.served").count() == emb.count())
 
     // the absorbed index serves exactly like a one-shot full build
@@ -437,9 +427,8 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $db.rebuilt")
     graft.operators.Similarity.ivfBuildIndex(emb, anchors, "vec_id",
       s"$db.rebuilt", numBuckets = 8)
-    def hits(t: String) = graft.operators.Similarity.ivfSearchIndexed(
-        spark, t, "vec_id", qv, anchors, nprobe = 2, k = 10,
-        excludeId = Some(0L))
+    def hits(t: String) = graft.operators.Similarity.ivfSearchStored(
+        spark, t, "vec_id", qv, nprobe = 2, k = 10, excludeId = Some(0L))
       .select("vec_id", "sim").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(hits(s"$db.served") == hits(s"$db.rebuilt"))
@@ -477,10 +466,10 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     def stream = ms.toDF().toDF("vec_id", "embedding", "label")
       .withColumn("embedding", col("embedding").cast("array<float>"))
     ms.addData(rows)
-    EventStream.streamingIvfPqStage(stream, s"$db.codes", "vec_id",
+    EventStream.streamingIvfStage(stream, s"$db.codes", "vec_id",
       stage, chk).awaitTermination()
     val (nb, nr) = graft.operators.Similarity.ivfIndexAbsorb(
-      spark, stage, s"$db.codes", "vec_id", numBuckets = 8)
+      spark, stage, s"$db.codes", "vec_id")
     assert(nb == 1L && nr == rows.length.toLong, (nb, nr))
     // absorbed store == the synchronous-append store, row for row
     spark.sql(s"DROP TABLE IF EXISTS $db.direct")
@@ -494,7 +483,7 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     // a stage cut BEFORE a retrain refuses after it: the marker's
     // fingerprints no longer match the store's stamps
     ms.addData(rows.take(3).map { case (i, v, l) => (i + 100000L, v, l) })
-    EventStream.streamingIvfPqStage(stream, s"$db.codes", "vec_id",
+    EventStream.streamingIvfStage(stream, s"$db.codes", "vec_id",
       stage, chk).awaitTermination()
     graft.operators.Similarity.ivfPqRetrain(spark, s"$db.codes",
       s"$db.v2", emb, "vec_id", iters = 1, numBuckets = 8)
@@ -502,63 +491,10 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     // the old stage into the RETRAINED serving version)
     val e = intercept[IllegalArgumentException] {
       graft.operators.Similarity.ivfIndexAbsorb(
-        spark, stage, s"$db.v2", "vec_id", numBuckets = 8)
+        spark, stage, s"$db.v2", "vec_id")
     }
     assert(e.getMessage.contains("retrained/rebuilt while the stage"),
       e.getMessage)
-  }
-
-  test("torn PQ stage: markerless or half-written _gridpq dirs are skipped, never absorbed as plain IVF") {
-    import org.apache.spark.sql.functions._
-    val emb = Tables.embeddings(spark, sf("sf0.001"))
-    val anchors = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("anchor_id"), col("embedding").as("av"))
-    val model = graft.operators.Similarity.pqCodebooksSampled(anchors, m = 4)
-    val db = "graft_tornstage"
-    val loc = Files.createTempDirectory("graft-tornstage-db")
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
-    Seq("codes", "codes__anchors", "codes__pq")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $db.$t"))
-    val stage = Files.createTempDirectory("graft-tornstage-s").toString
-    graft.operators.Similarity.ivfPqBuildIndex(
-      emb.filter(col("vec_id") % 2 === 0), anchors, "vec_id", model,
-      s"$db.codes", numBuckets = 8)
-    // stage the odd half by hand WITHOUT the marker — exactly the crash
-    // window between the data commit (_SUCCESS lands) and the _gridpq
-    // write. The target is a CODES store, so this must read as TORN,
-    // not as a plain-IVF stage to absorb unchecked: if the store were
-    // retrained first, absorbing would make old-codebook codes
-    // permanent (replay then anti-joins away on the stored ids).
-    val oddCount = emb.filter(col("vec_id") % 2 =!= 0).count()
-    graft.operators.Similarity.ivfAssign(
-        emb.filter(col("vec_id") % 2 =!= 0), anchors, "vec_id")
-      .withColumn("codes", graft.operators.Similarity.pqCodesCol(
-        col("embedding"), model))
-      .drop("embedding")
-      .write.mode("overwrite").parquet(s"$stage/batch=0")
-    assert(graft.operators.Similarity.ivfIndexAbsorb(
-      spark, stage, s"$db.codes", "vec_id", numBuckets = 8) == (0L, 0L))
-    assert(new java.io.File(s"$stage/batch=0").exists(),
-      "a torn stage must survive for the stream's replay to rewrite")
-    // a HALF-WRITTEN marker (crash mid-write: content parses as neither
-    // params nor absence) is the same torn stage — skipped, not the
-    // loud retrain-drift refusal
-    val marker = new java.io.File(s"$stage/batch=0",
-      graft.operators.Similarity.IvfStageMarkerFile)
-    val os = new java.io.FileOutputStream(marker)
-    os.write("grid_abc".getBytes("UTF-8")); os.close()
-    assert(graft.operators.Similarity.ivfIndexAbsorb(
-      spark, stage, s"$db.codes", "vec_id", numBuckets = 8) == (0L, 0L))
-    // completing the marker with the store's own stamps (what the
-    // stream's replay of the batch does) lets the next absorb fold it
-    val props = org.apache.spark.sql.GraftBridge
-      .tableProperties(spark, s"$db.codes")
-    val os2 = new java.io.FileOutputStream(marker)
-    os2.write(s"${props("graft.grid_id")},${props("graft.pq_id")}"
-      .getBytes("UTF-8")); os2.close()
-    assert(graft.operators.Similarity.ivfIndexAbsorb(
-      spark, stage, s"$db.codes", "vec_id", numBuckets = 8) == (1L, oddCount))
-    assert(spark.table(s"$db.codes").count() == emb.count())
   }
 
   test("streaming LSH arrival: staged batches absorb into the durable store, ledger equals recompute") {
@@ -593,15 +529,6 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     EventStream.streamingLshStage(stream, s"$db.idx", "doc_id", "text",
       stage, chk).awaitTermination()
 
-    // a torn stage (data committed, params marker missing — the crash
-    // window between the two writes) is SKIPPED, not absorbed and not
-    // an error: its batch replays on stream restart
-    val torn = new java.io.File(s"$stage/batch=7")
-    graft.operators.Dedup.indexDocs(
-        docs.filter(col("doc_id") === 1L), "doc_id", "text")
-      .write.mode("overwrite").parquet(torn.toString)
-    new java.io.File(torn, graft.operators.Dedup.LshStageParamsFile).delete()
-
     val (nb, nr, np) = graft.operators.Dedup.lshIndexAbsorb(
       spark, stage, s"$db.idx", "doc_id")
     assert(nb == 2 && nr == rows.length.toLong, (nb, nr, np))
@@ -616,36 +543,127 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     val ledger = pairSet(spark.table(s"$db.idx__pairs"))
     assert(ledger == full, s"ledger != recompute: ${ledger.size} vs ${full.size}")
 
-    // the torn dir survived the absorb; completing its marker (the
-    // stream's replay) lets the NEXT absorb fold it — and those rows
-    // are already stored, so the anti-join appends nothing new (doc 1
-    // is in the build's two-thirds)
-    val os = new java.io.FileOutputStream(
-      new java.io.File(torn, graft.operators.Dedup.LshStageParamsFile))
-    os.write("4,16".getBytes("UTF-8")); os.close()
-    val (rb, rr, rp) = graft.operators.Dedup.lshIndexAbsorb(
-      spark, stage, s"$db.idx", "doc_id")
-    assert(rb == 1L && rr == 0L && rp == 0L, (rb, rr, rp))
-
     // a replayed absorb over the emptied stage is a no-op
     assert(graft.operators.Dedup.lshIndexAbsorb(
       spark, stage, s"$db.idx", "doc_id") == (0L, 0L, 0L))
-
-    // a stage cut for DIFFERENT parameters refuses loudly — the store
-    // was rebuilt under a new stamp while the stage was outstanding
-    val drifted = new java.io.File(s"$stage/batch=8")
-    graft.operators.Dedup.indexDocs(
-        docs.filter(col("doc_id") === 2L), "doc_id", "text", n = 4, k = 8)
-      .write.mode("overwrite").parquet(drifted.toString)
-    val os2 = new java.io.FileOutputStream(
-      new java.io.File(drifted, graft.operators.Dedup.LshStageParamsFile))
-    os2.write("4,8".getBytes("UTF-8")); os2.close()
-    val e = intercept[IllegalArgumentException] {
-      graft.operators.Dedup.lshIndexAbsorb(spark, stage, s"$db.idx", "doc_id")
-    }
-    assert(e.getMessage.contains("rebuilt while the stage was outstanding"),
-      e.getMessage)
   }
+
+  /** One row of the staged-absorb contract: a durable-index family's
+    * corpus, how to build its store (and rebuild it in place under
+    * other parameters), its streaming stage, and its absorb as
+    * (batches absorbed, rows appended). */
+  private case class AbsorbFamily(name: String, id: String,
+      corpus: () => org.apache.spark.sql.DataFrame,
+      build: (org.apache.spark.sql.DataFrame, String) => Unit,
+      rebuild: (org.apache.spark.sql.DataFrame, String) => Unit,
+      stage: (org.apache.spark.sql.DataFrame, String, String, String) =>
+        org.apache.spark.sql.streaming.StreamingQuery,
+      absorb: (String, String) => (Long, Long))
+
+  private val absorbFamilies = {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{Dedup, Similarity}
+    def emb = Tables.embeddings(spark, sf("sf0.001"))
+      .select("vec_id", "embedding", "label")
+    def grid(lo: Int) = emb.filter(col("vec_id") >= lo && col("vec_id") < lo + 8)
+      .select(col("vec_id").as("anchor_id"), col("embedding").as("av"))
+    val ivfStage = (s: org.apache.spark.sql.DataFrame, t: String,
+        dir: String, chk: String) =>
+      EventStream.streamingIvfStage(s, t, "vec_id", dir, chk)
+    val ivfAbsorb = (dir: String, t: String) =>
+      Similarity.ivfIndexAbsorb(spark, dir, t, "vec_id")
+    Seq(
+      AbsorbFamily("LSH", "doc_id",
+        () => Tables.documents(spark, sf("sf0.001")).select("doc_id", "text"),
+        (rows, t) => Dedup.lshBuildIndex(rows, "doc_id", "text", t),
+        (rows, t) => Dedup.lshBuildIndex(rows, "doc_id", "text", t, k = 8),
+        (s, t, dir, chk) =>
+          EventStream.streamingLshStage(s, t, "doc_id", "text", dir, chk),
+        (dir, t) => {
+          val (b, r, _) = Dedup.lshIndexAbsorb(spark, dir, t, "doc_id")
+          (b, r)
+        }),
+      // the in-place rebuild under another grid is the drift a plain IVF
+      // stage once absorbed unchecked, landing rows in unprobed cells
+      AbsorbFamily("IVF", "vec_id", () => emb,
+        (rows, t) => Similarity.ivfBuildIndex(rows, grid(0), "vec_id", t,
+          numBuckets = 8),
+        (rows, t) => Similarity.ivfBuildIndex(rows, grid(8), "vec_id", t,
+          numBuckets = 8),
+        ivfStage, ivfAbsorb),
+      AbsorbFamily("IVF-PQ", "vec_id", () => emb,
+        (rows, t) => Similarity.ivfPqBuildIndex(rows, grid(0), "vec_id",
+          Similarity.pqCodebooksSampled(grid(0), m = 4), t, numBuckets = 8),
+        (rows, t) => Similarity.ivfPqBuildIndex(rows, grid(0), "vec_id",
+          Similarity.pqCodebooksSampled(grid(8), m = 4), t, numBuckets = 8),
+        ivfStage, ivfAbsorb))
+  }
+
+  for (f <- absorbFamilies)
+    test(s"staged absorb (${f.name}): torn skipped, replay adds nothing, drift refuses") {
+      import org.apache.spark.sql.functions.col
+      val db = "graft_absorb_" + f.name.toLowerCase.replace("-", "")
+      val loc = Files.createTempDirectory(s"$db-db")
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
+      val t = s"$db.idx"
+      Seq("", "__pairs", "__bands", "__anchors", "__pq")
+        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $t$x"))
+      val corpus = f.corpus()
+      val batch = corpus.filter(col(f.id) % 3 === 0)
+      f.build(corpus.filter(col(f.id) % 3 =!= 0), t)
+      val n = batch.count()
+      val stage = Files.createTempDirectory(s"$db-stage").toString
+      // each call is a fresh stream over the same rows: batch 0 again
+      def stageBatch(): Unit = {
+        val src = Files.createTempDirectory(s"$db-src").toString
+        batch.write.mode("overwrite").parquet(src)
+        f.stage(spark.readStream.schema(batch.schema).parquet(src), t, stage,
+          Files.createTempDirectory(s"$db-chk").toString).awaitTermination()
+      }
+      stageBatch()
+      val dir = Paths.get(stage, "batch=0")
+      // through the Hadoop filesystem, which keeps the marker's checksum
+      // sidecar in step with its content
+      val marker = new org.apache.hadoop.fs.Path(dir.toString,
+        graft.operators.StagedBatches.MarkerFile)
+      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def writeMarker(text: String): Unit = {
+        val os = fs.create(marker, true)
+        try os.write(text.getBytes("UTF-8")) finally os.close()
+      }
+      val stamps = Files.readString(
+        dir.resolve(graft.operators.StagedBatches.MarkerFile))
+
+      // a missing marker: the crash window between the data commit and
+      // the marker write — skipped, and the dir survives for the replay
+      fs.delete(marker, false)
+      assert(f.absorb(stage, t) == (0L, 0L))
+      assert(Files.exists(dir))
+      // a half-written marker (every key present, cut before its end) is
+      // the same torn stage, never read as drift
+      writeMarker(stamps.dropRight(2))
+      assert(f.absorb(stage, t) == (0L, 0L))
+      assert(Files.exists(dir))
+      // the replay completes the marker: the batch folds in
+      writeMarker(stamps)
+      assert(f.absorb(stage, t) == (1L, n))
+      assert(!Files.exists(dir))
+      assert(spark.table(t).count() == corpus.count())
+
+      // a replayed batch (crash after the append, before the cleanup)
+      // is absorbed and appends zero rows
+      stageBatch()
+      assert(f.absorb(stage, t) == (1L, 0L))
+      assert(spark.table(t).count() == corpus.count())
+
+      // a stage cut before the store is rebuilt in place under other
+      // parameters refuses
+      stageBatch()
+      f.rebuild(corpus, t)
+      val e = intercept[IllegalArgumentException](f.absorb(stage, t))
+      assert(e.getMessage.contains(
+        "retrained/rebuilt while the stage was outstanding"), e.getMessage)
+    }
 
   test("streaming LSH near-dup filter: later near-copies hit the earlier owner's buckets") {
     val (in, chk) = newDirs()

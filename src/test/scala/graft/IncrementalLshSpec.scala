@@ -295,7 +295,8 @@ class IncrementalLshSpec extends SparkSpec {
       "doc_id", "text")
     val banded = Dedup.bandedSignatures(
       batch.select(col("doc_id"), col("mh")), "doc_id", 16, 4)
-    val pruned = Dedup.storedBandsPruned(spark, s"$db.idx", banded, "doc_id")
+    val pruned = Dedup.storedBandsPrunedByKeys(spark, s"$db.idx",
+      Dedup.collectBatchKeys(banded), "doc_id")
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("SelectedBucketsCount"), plan)
     val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r

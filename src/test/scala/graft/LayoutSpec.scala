@@ -60,7 +60,7 @@ class LayoutSpec extends AnyFunSuite with SparkSpec {
     // (a row written under a wrong bucket id would vanish from pruned
     // reads while surviving full scans — the silent failure mode).
     Layout.appendBucketed(batch.repartition(2), s"$db.t",
-      Seq("o_orderkey"), 16, batchParts = Some(2))
+      batchParts = Some(2))
     val added = spark.table(s"$db.t").inputFiles.length - before
     assert(added <= 16, s"small append added $added files (> one per bucket)")
     assert(spark.table(s"$db.t").count() == orders.count())
@@ -86,8 +86,7 @@ class LayoutSpec extends AnyFunSuite with SparkSpec {
       s"$db.t", Seq("o_orderkey"), 8)
     spark.sql(s"ALTER TABLE $db.t SET TBLPROPERTIES ('graft.demo' = 'v7')")
     (1L to 3L).foreach(r => Layout.appendBucketed(
-      orders.filter(col("o_orderkey") % 4 === r), s"$db.t",
-      Seq("o_orderkey"), 8))
+      orders.filter(col("o_orderkey") % 4 === r), s"$db.t"))
     val before = spark.table(s"$db.t").inputFiles.length
     val rows = spark.table(s"$db.t").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -105,7 +104,7 @@ class LayoutSpec extends AnyFunSuite with SparkSpec {
     // and the catalog reports the same spec
     assert(org.apache.spark.sql.GraftBridge.bucketSpec(spark, s"$db.t")
       .contains((8, Seq("o_orderkey"), Seq("o_orderkey"))))
-    Layout.appendBucketed(orders.limit(0), s"$db.t", Seq("o_orderkey"), 8)
+    Layout.appendBucketed(orders.limit(0), s"$db.t")
 
     // crash window between DROP and RENAME: table absent, staging holds
     // everything — a re-run resumes by completing the rename

@@ -638,8 +638,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     graft.operators.Similarity.ivfBuildIndex(
       e, anchors, "vec_id", "plan_audit_recall_idx")
     try {
-      val pi = plan(graft.operators.Similarity.recallEvalIndexed(
-        spark, "plan_audit_recall_idx", "vec_id", Seq(0L, 1L), anchors,
+      val pi = plan(graft.operators.Similarity.recallEvalStored(
+        spark, "plan_audit_recall_idx", "vec_id", Seq(0L, 1L),
         nprobes = Seq(1, 2), k = 10))
       assert(pi.contains("bounded_top_k_ids"), pi)
       assert("Window ".r.findAllIn(pi).size == 1, pi)

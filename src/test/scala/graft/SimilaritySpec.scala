@@ -11,6 +11,15 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
   private def anchors = emb.filter(col("vec_id") < 8)
     .select(col("vec_id").as("anchor_id"), col("embedding").as("av"))
 
+  /** One query served by the stored IVF-PQ face, by table name alone. */
+  private def pqStoredSearch(table: String, qid: Long) =
+    Similarity.ivfPqSearchStoredBatch(spark, table,
+        emb.select(col("vec_id"), col("embedding")), "vec_id",
+        emb.filter(col("vec_id") === qid)
+          .select(col("vec_id").as("query_id"), col("embedding").as("qvec")),
+        "query_id", "qvec", nprobe = 2, refine = 40, k = 10)
+      .orderBy("rank")
+
   test("persisted IVF index: bucket-pruned search matches the inline IVF plan") {
     val db = "graft_ivf"
     val loc = java.nio.file.Files.createTempDirectory("graft-ivfdb")
@@ -21,8 +30,8 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
 
     val qv = emb.filter(col("vec_id") === 0)
       .head().getAs[Seq[Float]]("embedding").toArray
-    val hits = Similarity.ivfSearchIndexed(
-      spark, s"$db.emb_ivf", "vec_id", qv, anchors, nprobe = 2, k = 10,
+    val hits = Similarity.ivfSearchStored(
+      spark, s"$db.emb_ivf", "vec_id", qv, nprobe = 2, k = 10,
       excludeId = Some(0L))
 
     // bucket pruning engaged: only the probed cells' buckets are read.
@@ -59,9 +68,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     // the persisted index is codes-only — no float column on disk
     assert(!spark.table(s"$db.emb_ivfpq").columns.contains("embedding"))
 
-    val vectors = emb.select(col("vec_id"), col("embedding"))
-    val hits = Similarity.ivfPqSearchIndexed(spark, s"$db.emb_ivfpq",
-      vectors, "vec_id", 0, anchors, model, nprobe = 2, refine = 40, k = 10)
+    val hits = pqStoredSearch(s"$db.emb_ivfpq", 0L)
 
     val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val prev = spark.conf.get(key)
@@ -95,29 +102,20 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     Similarity.ivfPqBuildIndex(emb.filter(col("vec_id") < cut), anchors,
       "vec_id", model, s"$db.appended", numBuckets = 8)
     val skew = Similarity.ivfPqIndexAppend(emb.filter(col("vec_id") >= cut),
-      anchors, "vec_id", model, s"$db.appended", numBuckets = 8)
+      "vec_id", s"$db.appended")
     // the skew report covers the UNION and its shares sum to the cells
     assert(skew.agg(sum("n_vectors")).head().getLong(0) == emb.count())
 
     Similarity.ivfPqBuildIndex(emb, anchors, "vec_id", model,
       s"$db.rebuilt", numBuckets = 8)
 
-    val vectors = emb.select(col("vec_id"), col("embedding"))
-    def rows(table: String) = Similarity.ivfPqSearchIndexed(spark, table,
-        vectors, "vec_id", 0, anchors, model, nprobe = 2, refine = 40, k = 10)
+    def rows(table: String) = pqStoredSearch(table, 0L)
       .select("vec_id", "adist", "sim").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
     assert(rows(s"$db.appended") == rows(s"$db.rebuilt"))
-
-    // a writer configured with a different bucket count must fail loudly
-    val err = intercept[Exception] {
-      Similarity.ivfPqIndexAppend(emb.limit(1), anchors, "vec_id", model,
-        s"$db.appended", numBuckets = 4)
-    }
-    assert(err.getMessage.toLowerCase.contains("bucket"), err.getMessage)
   }
 
-  test("recallEvalIndexed: stored-assignment eval equals the frame-based eval, with no assignment scan") {
+  test("recallEvalStored: stored-assignment eval equals the frame-based eval, with no assignment scan") {
     val db = "graft_recall_idx"
     val loc = java.nio.file.Files.createTempDirectory("graft-recall-idx")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
@@ -125,9 +123,8 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     Similarity.ivfBuildIndex(emb, anchors, "vec_id", s"$db.idx", numBuckets = 8)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
-    val fromStore = Similarity.recallEvalIndexed(spark, s"$db.idx",
-      "vec_id", queryIds = Seq(0L, 1L, 2L, 3L), anchors,
-      nprobes = Seq(1, 2, 4), k = 10)
+    val fromStore = Similarity.recallEvalStored(spark, s"$db.idx",
+      "vec_id", queryIds = Seq(0L, 1L, 2L, 3L), nprobes = Seq(1, 2, 4), k = 10)
     val fromFrames = Similarity.recallEval(emb, "vec_id",
       queryIds = Seq(0L, 1L, 2L, 3L), anchors, nprobes = Seq(1, 2, 4), k = 10)
     assert(rows(fromStore) == rows(fromFrames))
@@ -178,8 +175,8 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     // inline IVF plan over the same vectors and grid
     val qv = emb.filter(col("vec_id") === 0)
       .head().getAs[Seq[Float]]("embedding").toArray
-    val stored = Similarity.ivfSearchIndexed(spark, s"$db.v2", "vec_id",
-        qv, newAnchors, nprobe = 2, k = 10, excludeId = Some(0L))
+    val stored = Similarity.ivfSearchStored(spark, s"$db.v2", "vec_id",
+        qv, nprobe = 2, k = 10, excludeId = Some(0L))
       .select("vec_id", "sim").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
     val inline = Similarity.ivfTopK(emb, "vec_id", 0, newAnchors,
@@ -225,21 +222,15 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       val e = intercept[IllegalArgumentException](f)
       assert(e.getMessage.contains("rebuild the pair"), e.getMessage)
     }
-    // the stored face refuses
+    // the search and the append both refuse
     refuses(Similarity.ivfSearchStored(spark, s"$db.idx", "vec_id", qv,
       nprobe = 2, k = 5))
-    // and the explicit-anchors faces no longer fall through the legacy
-    // escape hatch: ANY grid — even the right one — refuses against a
-    // half-built store instead of serving unvalidated
-    refuses(Similarity.ivfSearchIndexed(spark, s"$db.idx", "vec_id", qv,
-      anchors, nprobe = 2, k = 5))
-    refuses(Similarity.ivfIndexAppend(emb.limit(1), anchors, "vec_id",
-      s"$db.idx", numBuckets = 8))
-    // a genuinely pre-artifact table (no __anchors at all) keeps the
-    // permissive path
+    refuses(Similarity.ivfIndexAppend(emb.limit(1), "vec_id", s"$db.idx"))
+    // a pre-artifact table (no __anchors at all) has no grid to serve
+    // from: it refuses too, never serves unvalidated
     spark.sql(s"DROP TABLE $db.idx__anchors")
-    assert(Similarity.ivfSearchIndexed(spark, s"$db.idx", "vec_id", qv,
-      anchors, nprobe = 2, k = 5).count() == 5)
+    refuses(Similarity.ivfSearchStored(spark, s"$db.idx", "vec_id", qv,
+      nprobe = 2, k = 5))
   }
 
   test("storedPqModel refuses a torn codebook artifact cleanly, never crashes opaquely") {
@@ -271,8 +262,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     // artifact exists must refuse ANY model — not fall through the
     // pre-artifact permissive path
     spark.sql(s"ALTER TABLE $db.idx UNSET TBLPROPERTIES ('graft.pq_id')")
-    refuses(Similarity.ivfPqIndexAppend(emb.limit(1), anchors, "vec_id",
-      model, s"$db.idx", numBuckets = 8))
+    refuses(Similarity.ivfPqIndexAppend(emb.limit(1), "vec_id", s"$db.idx"))
   }
 
   test("recall evals refuse a non-integral id column up front") {
@@ -348,7 +338,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(dup.getMessage.contains("duplicate"), dup.getMessage)
   }
 
-  test("ivfPqSearchStoredBatch: row-identical to per-query ivfPqSearchIndexed, stored artifacts only") {
+  test("ivfPqSearchStoredBatch: row-identical to per-query ivfPqTopK, stored artifacts only") {
     val db = "graft_pq_batch_serve"
     val loc = java.nio.file.Files.createTempDirectory("graft-pq-batch-serve")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
@@ -373,10 +363,10 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       // ranks 1-based contiguous best-first, self dropped
       assert(rows.map(_._2).sorted.sameElements(1 to rows.length))
       assert(rows.forall(_._3 != qid))
-      // exact row equality with the per-query face (grid + codebook
-      // passed explicitly there; the batch face loads the artifacts)
-      val single = Similarity.ivfPqSearchIndexed(spark, s"$db.idx",
-          vectors, "vec_id", qid, anchors, model,
+      // exact row equality with the inline per-query composition (grid
+      // + codebook passed explicitly there; the batch face loads the
+      // artifacts)
+      val single = Similarity.ivfPqTopK(emb, "vec_id", qid, anchors, model,
           nprobe = 2, refine = 40, k = 10)
         .select("vec_id", "adist", "sim").collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
@@ -412,7 +402,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       numBuckets = 8)
 
     // 1. the stored faces need only the table name and agree with the
-    //    explicit-anchors faces
+    //    inline faces run on the build grid
     val qv = emb.filter(col("vec_id") === 0)
       .head().getAs[Seq[Float]]("embedding").toArray
     def hitSet(df: org.apache.spark.sql.DataFrame) =
@@ -421,43 +411,41 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(
       hitSet(Similarity.ivfSearchStored(spark, s"$db.idx", "vec_id", qv,
         nprobe = 2, k = 10, excludeId = Some(0L))) ==
-        hitSet(Similarity.ivfSearchIndexed(spark, s"$db.idx", "vec_id", qv,
-          anchors, nprobe = 2, k = 10, excludeId = Some(0L))))
+        hitSet(Similarity.ivfTopK(emb, "vec_id", 0L, anchors,
+          nprobe = 2, k = 10)))
     val viaStored = Similarity.recallEvalStored(spark, s"$db.idx",
       "vec_id", queryIds = Seq(0L, 1L), nprobes = Seq(1, 2), k = 10).collect()
-    val viaExplicit = Similarity.recallEvalIndexed(spark, s"$db.idx",
-      "vec_id", queryIds = Seq(0L, 1L), anchors,
-      nprobes = Seq(1, 2), k = 10).collect()
-    assert(viaStored.toSeq == viaExplicit.toSeq)
+    val viaFrames = Similarity.recallEval(emb, "vec_id",
+      queryIds = Seq(0L, 1L), anchors, nprobes = Seq(1, 2), k = 10).collect()
+    assert(viaStored.toSeq == viaFrames.toSeq)
 
-    // 2. a DIFFERENT grid against the same store refuses loudly on
-    //    every serving face — search, eval, and incremental append
-    val wrongGrid = emb.filter(col("vec_id") >= 8 && col("vec_id") < 12)
-      .select(col("vec_id").as("anchor_id"), col("embedding").as("av"))
-    def refusal(f: => Any): Unit = {
-      val e = intercept[IllegalArgumentException](f)
-      assert(e.getMessage.contains("grid mismatch"), e.getMessage)
-    }
-    refusal(Similarity.ivfSearchIndexed(spark, s"$db.idx", "vec_id", qv,
-      wrongGrid, nprobe = 2, k = 10))
-    refusal(Similarity.recallEvalIndexed(spark, s"$db.idx", "vec_id",
-      Seq(0L), wrongGrid, Seq(1), k = 10).collect())
-    refusal(Similarity.ivfIndexAppend(
-      emb.limit(1), wrongGrid, "vec_id", s"$db.idx", numBuckets = 8))
-
-    // 3. retrain preserves payload columns (rebuild reads the full
-    //    stored row) and writes the v2 artifact pair
+    // 2. retrain preserves payload columns (rebuild reads the full
+    //    stored row) and writes the v2 artifact pair, which the v2
+    //    stored face serves from: v2's OWN 4-anchor grid
     Similarity.ivfRetrain(spark, s"$db.idx", s"$db.v2", "vec_id",
       k = 4, iters = 2, numBuckets = 8)
     assert(spark.table(s"$db.v2").columns.contains("label"),
       spark.table(s"$db.v2").columns.mkString(","))
     assert(spark.catalog.tableExists(s"$db.v2__anchors"))
-    // the v2 stored face serves with v2's OWN grid — and the v1 grid
-    // refuses against v2
+    assert(Similarity.storedAnchors(spark, s"$db.v2").count() == 4)
     assert(Similarity.ivfSearchStored(spark, s"$db.v2", "vec_id", qv,
       nprobe = 2, k = 5, excludeId = Some(0L)).count() == 5)
-    refusal(Similarity.ivfSearchIndexed(spark, s"$db.v2", "vec_id", qv,
-      anchors, nprobe = 2, k = 5))
+
+    // 3. a DIFFERENT grid swapped into the store's artifact refuses
+    //    loudly on every face — search, eval, and incremental append
+    val wrongGrid = emb.filter(col("vec_id") >= 8 && col("vec_id") < 12)
+      .select(col("vec_id").as("anchor_id"), col("embedding").as("av"))
+    wrongGrid.write.mode("overwrite").format("parquet")
+      .saveAsTable(s"$db.idx__anchors")
+    def refusal(f: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains("grid pairing broken"), e.getMessage)
+    }
+    refusal(Similarity.ivfSearchStored(spark, s"$db.idx", "vec_id", qv,
+      nprobe = 2, k = 10))
+    refusal(Similarity.recallEvalStored(spark, s"$db.idx", "vec_id",
+      Seq(0L), Seq(1), k = 10).collect())
+    refusal(Similarity.ivfIndexAppend(emb.limit(1), "vec_id", s"$db.idx"))
   }
 
   test("storedPqModel reloads the exact codebook the codes table was encoded with") {
@@ -473,16 +461,20 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(reloaded.m == model.m && reloaded.sub == model.sub)
     assert(reloaded.codebooks.flatten.flatten.toSeq ==
       model.codebooks.flatten.flatten.toSeq)
-    // a drifted codebook refuses on append
+    // a drifted codebook swapped into the artifact refuses on append
     val other = Similarity.pqCodebooksSampled(
       emb.filter(col("vec_id") >= 8 && col("vec_id") < 16)
         .select(col("vec_id").as("anchor_id"), col("embedding").as("av")),
       m = 4)
+    import spark.implicits._
+    other.codebooks.zipWithIndex.flatMap { case (cb, j) =>
+      cb.zipWithIndex.map { case (cw, c) => (j, c, cw.toSeq) }
+    }.toSeq.toDF("j", "code", "cw")
+      .write.mode("overwrite").format("parquet").saveAsTable(s"$db.codes__pq")
     val e = intercept[IllegalArgumentException] {
-      Similarity.ivfPqIndexAppend(emb.limit(1), anchors, "vec_id", other,
-        s"$db.codes", numBuckets = 8)
+      Similarity.ivfPqIndexAppend(emb.limit(1), "vec_id", s"$db.codes")
     }
-    assert(e.getMessage.contains("codebook mismatch"), e.getMessage)
+    assert(e.getMessage.contains("codebook pairing broken"), e.getMessage)
   }
 
   test("ivfPqRetrain: refit codebooks rebuild into v2 — payloads survive, error never worse, drift stats reset") {
@@ -497,7 +489,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     Similarity.ivfPqBuildIndex(emb.filter(col("vec_id") % 2 === 0),
       anchors, "vec_id", model, s"$db.v1", numBuckets = 8)
     Similarity.ivfPqIndexAppend(emb.filter(col("vec_id") % 2 =!= 0),
-      anchors, "vec_id", model, s"$db.v1", numBuckets = 8)
+      "vec_id", s"$db.v1")
 
     // the drift signal: err_build was stamped over the build half,
     // err_now measures the full store — n_vectors says all were matched

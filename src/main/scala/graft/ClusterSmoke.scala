@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-JVM deployment smoke — run via `tools/cluster_smoke.sh`, which
   * spark-submits this class against `local-cluster[2,4,2048]`: two REAL
   * executor JVMs separate from the driver, so any code path that
@@ -41,11 +39,7 @@ import org.apache.spark.sql.SparkSession
 object ClusterSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val b = SparkSession.builder().appName("graft-cluster-smoke")
-    GraftSession.recommendedConf.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
+    val spark = GraftSession.build("graft-cluster-smoke")
 
     // getExecutorMemoryStatus counts driver + executor block managers;
     // on local-cluster[2,...] that is >= 3 entries once the executor

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 
 /** The library's recommended SparkSession configuration — one place that
   * encodes the settings every graft workload relies on, locally and on a
@@ -22,9 +22,10 @@ import org.apache.spark.sql.SparkSession
   *  - the SQL surface of the custom Catalyst expressions (vec_dot,
   *    vec_norm, minhash, simhash_tokens) registered up front.
   *
-  * Mains call [[local]]; library users embedding graft in an existing
-  * session can instead call `graft.plans.GraftExtensions.register` and
-  * apply [[recommendedConf]] to their own builder.
+  * Mains call [[build]] (or [[local]]); library users embedding graft in
+  * an existing session can instead call
+  * `graft.plans.GraftExtensions.register` and apply [[recommendedConf]]
+  * to their own builder. No library path writes a caller's conf.
   */
 object GraftSession {
 
@@ -62,70 +63,58 @@ object GraftSession {
     "spark.shuffle.sort.bypassMergeThreshold" -> "1",
     "spark.sql.session.timeZone" -> "UTC")
 
-  /** (depth, saved AQE, saved shuffle width) per session with a
-    * maintenance scope open — see [[withMaintenanceConf]]. */
-  private val maintDepth =
-    new java.util.IdentityHashMap[SparkSession,
-      (Int, Option[String], Option[String])]
-
-  /** Run `body` with AQE pinned OFF and the shuffle width scoped to
-    * `shufflePartitions` on this session's SQLConf, restoring the
-    * caller's values afterwards. The serving-cadence index-maintenance
-    * ops use this: every frame on their paths is batch-sized or
-    * broadcast-bounded, so AQE's stage-per-job execution and a
-    * cluster-wide static shuffle width only add driver round-trips
-    * (measured on the durable-LSH append: 30 → 19 jobs per call).
+  /** Run index-maintenance `body` on a private clone of `spark` whose
+    * conf has AQE OFF and the shuffle width sized to `batch`'s partition
+    * count. The serving-cadence maintenance ops use this: every frame on
+    * their paths is batch-sized or broadcast-bounded, so AQE's
+    * stage-per-job execution and a cluster-wide static shuffle width only
+    * add driver round-trips (measured on the durable-LSH append: 30 → 19
+    * jobs per call).
     *
-    * Reentrant and safe under CONCURRENT maintenance calls on the same
-    * session: a per-session depth counter makes the first entrant save
-    * the caller's values and the last exit restore them, so
-    * overlapping appends can never strand the session with AQE off or
-    * a stale width. `shufflePartitions` is by-name and evaluated AFTER
-    * AQE is off, so callers may derive it from `df.rdd` without
-    * triggering adaptive stage execution. Overlapping entrants each
-    * set their own width (both are batch-scale values; per-store
-    * appends are serialized by contract, so real overlap is rare). */
-  private[graft] def withMaintenanceConf[A](spark: SparkSession,
-      shufflePartitions: => Int)(body: => A): A = {
-    maintDepth.synchronized {
-      val cur = Option(maintDepth.get(spark)).getOrElse(
-        (0, spark.conf.getOption("spark.sql.adaptive.enabled"),
-          spark.conf.getOption("spark.sql.shuffle.partitions")))
-      maintDepth.put(spark, (cur._1 + 1, cur._2, cur._3))
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(1, shufflePartitions).toString)
-    try body
-    finally maintDepth.synchronized {
-      val (d, aqe, shuf) = maintDepth.get(spark)
-      if (d == 1) {
-        maintDepth.remove(spark)
-        aqe match {
-          case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
-          case None => spark.conf.unset("spark.sql.adaptive.enabled")
-        }
-        shuf match {
-          case Some(v) => spark.conf.set("spark.sql.shuffle.partitions", v)
-          case None => spark.conf.unset("spark.sql.shuffle.partitions")
-        }
-      } else maintDepth.put(spark, (d - 1, aqe, shuf))
-    }
+    * `body` gets the clone and `batch` rebound onto it. A frame plans
+    * under the session it is bound to, not the thread's active one, so
+    * every frame the body executes must be built on the clone (or
+    * rebound onto it), and a frame it hands back must be rebound to
+    * `spark`. The caller's conf is never written: queries running on
+    * `spark` meanwhile plan with its own AQE and width, and concurrent
+    * appends each own their clone. The clone shares the catalog, but
+    * each session caches table file listings, so the `writes` tables
+    * are dropped from the caller's cache on exit and its next read sees
+    * the appended files. */
+  private[graft] def maintenanceScope[A](spark: SparkSession,
+      batch: DataFrame, writes: Seq[String])(
+      body: (SparkSession, DataFrame) => A): A = {
+    val clone = GraftBridge.cloneSession(spark)
+    clone.conf.set("spark.sql.adaptive.enabled", "false")
+    val rebound = GraftBridge.rebind(clone, batch)
+    // planned with AQE already off: under AQE `.rdd` would execute
+    // query stages as a side effect
+    clone.conf.set("spark.sql.shuffle.partitions",
+      math.max(1, rebound.rdd.getNumPartitions).toString)
+    try body(clone, rebound)
+    finally writes.foreach(GraftBridge.invalidateCachedTable(spark, _))
+  }
+
+  /** The one session builder every main goes through: [[recommendedConf]]
+    * plus `conf` on the builder, the custom expressions registered, logs
+    * at WARN. `master` None leaves the master to spark-submit. */
+  def build(appName: String, master: Option[String] = None,
+      conf: Map[String, String] = Map.empty): SparkSession = {
+    val b = SparkSession.builder().appName(appName)
+    master.foreach(b.master)
+    (recommendedConf ++ conf).foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    graft.plans.GraftExtensions.register(spark)
+    spark
   }
 
   def local(appName: String, cores: Int,
       shufflePartitions: Option[Int] = None): SparkSession = {
     reapStaleFixtures()
-    val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.getOrElse(cores))
-      .config("spark.ui.enabled", "false")
-    recommendedConf.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
-    spark
+    build(appName, Some(s"local[$cores]"), Map(
+      "spark.sql.shuffle.partitions" -> shufflePartitions.getOrElse(cores).toString,
+      "spark.ui.enabled" -> "false"))
   }
 
   /** Delete `graft-*` fixture dirs under java.io.tmpdir older than six

@@ -18,14 +18,16 @@ object Tables {
   /** events.ts has shipped as either parquet TIMESTAMP(NANOS) — which
     * Spark's reader rejects ([PARQUET_TYPE_ILLEGAL]) — or TIMESTAMP(MICROS)
     * without a UTC flag (read as TIMESTAMP_NTZ). Normalize both to session
-    * TimestampType: nanos are read raw (legacy conf) and converted with
+    * TimestampType: nanos are read raw as longs and converted with
     * integer division — (ts / 1000) via double would lose precision above
     * 2^53 and corrupt microseconds; NTZ micros cast 1:1 because the
     * session timezone is pinned to UTC (GraftSession.recommendedConf).
+    * Only schema INFERENCE needs the legacy nanos-as-long conf: it runs
+    * on a clone of the session with the conf on, and the caller's
+    * session then reads the `ts long` schema as-is.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = readParquet(spark, s"$sfDir/events.parquet")
+    val raw = readParquet(spark, s"$sfDir/events.parquet", nanosAsLong = true)
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -47,14 +49,21 @@ object Tables {
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
 
-  private def readParquet(spark: SparkSession, path: String): DataFrame = {
-    val cached = schemaCache.get(path)
-    if (cached != null) spark.read.schema(cached).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      schemaCache.put(path, df.schema)
-      df
+  private def readParquet(spark: SparkSession, path: String,
+      nanosAsLong: Boolean = false): DataFrame = {
+    val schema = Option(schemaCache.get(path)).getOrElse {
+      val infer =
+        if (!nanosAsLong) spark
+        else {
+          val c = org.apache.spark.sql.GraftBridge.cloneSession(spark)
+          c.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+          c
+        }
+      val inferred = infer.read.parquet(path).schema
+      schemaCache.put(path, inferred)
+      inferred
     }
+    spark.read.schema(schema).parquet(path)
   }
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =

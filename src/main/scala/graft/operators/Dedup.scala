@@ -443,14 +443,19 @@ object Dedup {
       rows: Array[org.apache.spark.sql.Row],
       bandSigSchema: org.apache.spark.sql.types.StructType) {
     def bkeys: IndexedSeq[Int] = rows.map(_.getInt(2)).distinct.toIndexedSeq
-    /** The (band, sig) keys as a LOCAL relation — broadcasting it never
-      * schedules an executor job (LocalTableScan collects driver-side). */
     def bandSigFrame(spark: org.apache.spark.sql.SparkSession): DataFrame =
-      spark.createDataFrame(
-        java.util.Arrays.asList(rows.map(r =>
-          org.apache.spark.sql.Row(r.get(0), r.get(1))): _*),
-        bandSigSchema)
+      localFrame(spark, bandSigSchema, rows)
   }
+
+  /** The leading `schema.length` fields of driver-collected `rows` as a
+    * LOCAL relation on `spark` — broadcasting it never schedules an
+    * executor job (LocalTableScan collects driver-side). */
+  private def localFrame(spark: org.apache.spark.sql.SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Array[org.apache.spark.sql.Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows.map(r =>
+      org.apache.spark.sql.Row.fromSeq(r.toSeq.take(schema.length))): _*),
+      schema)
 
   /** The stored `__bands` rows that can collide with a batch, from its
     * ALREADY-COLLECTED keys — the batch-proportional read at the heart
@@ -574,7 +579,18 @@ object Dedup {
       threshold: Double = 0.5,
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
     val (_, k, bands, numBuckets) = storedLshParams(spark, table)
-    val stored = spark.table(table)
+    // AQE is OFF and the shuffle width scoped to the batch for the
+    // append's internal micro-queries (adaptive execution runs each
+    // query stage as its own driver job, and every frame on this path is
+    // batch-sized or broadcast-bounded — there is nothing for AQE to
+    // adapt, while a 4-partition trickle gets 4-task stages instead of
+    // the session's static 32). They plan on a private clone of the
+    // session (GraftSession.maintenanceScope), so the caller's conf is
+    // never touched; the pairs come back rebound to the caller.
+    val pt = lshPairsTableName(table)
+    val pairs = graft.GraftSession.maintenanceScope(spark, newIndex,
+        writes = Seq(pt, lshBandsTableName(table), table)) { (clone, batch) =>
+    val stored = clone.table(table)
     // the replay guard and the bucket appends both hash the BATCH's id
     // column — and murmur3 is type-sensitive: an int-typed batch id
     // hashing against a long-typed store opens the WRONG bucket files,
@@ -584,12 +600,12 @@ object Dedup {
     // (the final appendBucketed would have auto-cast it anyway, hiding
     // the divergence).
     val storeIdType = stored.schema(id).dataType
-    val batchIdType = newIndex.schema(id).dataType
+    val batchIdType = batch.schema(id).dataType
     val typed =
-      if (batchIdType == storeIdType) newIndex
+      if (batchIdType == storeIdType) batch
       else if (org.apache.spark.sql.catalyst.expressions.Cast
           .canUpCast(batchIdType, storeIdType))
-        newIndex.withColumn(id, col(id).cast(storeIdType))
+        batch.withColumn(id, col(id).cast(storeIdType))
       else throw new IllegalArgumentException(
         s"lshIndexAppendIndexed: batch id column '$id' is $batchIdType " +
           s"but $table stores $storeIdType — no lossless cast exists; " +
@@ -613,15 +629,6 @@ object Dedup {
     // At serving cadence the append's wall IS its driver-job count, so
     // the batch's index rows materialize ONCE (`fresh` below) and every
     // later consumer reads those blocks.
-    // AQE is pinned OFF and the shuffle width scoped to the batch for
-    // the append's internal micro-queries (adaptive execution runs
-    // each query stage as its own driver job, and every frame on this
-    // path is batch-sized or broadcast-bounded — there is nothing for
-    // AQE to adapt, while a 4-partition trickle gets 4-task stages
-    // instead of the session's static 32). The scope is reentrant and
-    // concurrency-safe per session; see GraftSession.withMaintenanceConf.
-    graft.GraftSession.withMaintenanceConf(spark,
-        typed.rdd.getNumPartitions) {
     // The replay-guard overlap derives from the RAW batch ids — a
     // column-pruned scan of the arriving frame that never computes a
     // signature ([[indexDocs]] is projection-only, so selecting the id
@@ -639,11 +646,9 @@ object Dedup {
       .select(col(id), pmod(hash(col(id)), lit(numBuckets)).as("__b"))
       .distinct().collect()
     val batchBuckets = idRows.map(_.getInt(1)).toSet
-    val rawIds = spark.createDataFrame(
-      java.util.Arrays.asList(idRows.map(r =>
-        org.apache.spark.sql.Row(r.get(0))): _*),
-      org.apache.spark.sql.types.StructType(Seq(typed.schema(id))))
-    val overlap = Layout.readBucketSubset(spark, table, batchBuckets)
+    val rawIds = localFrame(clone,
+      org.apache.spark.sql.types.StructType(Seq(typed.schema(id))), idRows)
+    val overlap = Layout.readBucketSubset(clone, table, batchBuckets)
       .select(col(id))
       .join(broadcast(rawIds), Seq(id), "leftsemi")
     // LAZY checkpoint, like bandedNew below: the batch-key collect's one
@@ -669,7 +674,7 @@ object Dedup {
     // sets is storedBandsPrunedByKeys' adaptive call. LAZY checkpoint:
     // the first consumer's job materializes it (the candidate collect
     // below, or the pair jobs on the hs path).
-    val pruned = storedBandsPrunedByKeys(spark, table, batchKeys, id)
+    val pruned = storedBandsPrunedByKeys(clone, table, batchKeys, id)
       .localCheckpoint(false)
     val (oldSets, freeAfterPairs) =
       if (pruned.columns.contains("hs"))
@@ -695,11 +700,10 @@ object Dedup {
         if (touched.isEmpty)
           (stored.filter(lit(false)).select(col(id), col("hs")), Seq(pruned))
         else {
-          val candLocal = spark.createDataFrame(
-            java.util.Arrays.asList(candRows.map(r =>
-              org.apache.spark.sql.Row(r.get(0))): _*),
-            org.apache.spark.sql.types.StructType(Seq(pruned.schema(id))))
-          val sets = Layout.readBucketSubset(spark, table, touched)
+          val candLocal = localFrame(clone,
+            org.apache.spark.sql.types.StructType(Seq(pruned.schema(id))),
+            candRows)
+          val sets = Layout.readBucketSubset(clone, table, touched)
             .select(col(id), col("hs"))
             .join(broadcast(candLocal), Seq(id), "leftsemi")
             .localCheckpoint(true)
@@ -709,7 +713,7 @@ object Dedup {
     val (pairs, nPairs) = incrementalPairsFromBandedCounted(oldSets,
       pruned.drop("hs"), bandedNew.drop("hs"), fresh.select(col(id), col("hs")),
       id, threshold, maxBucketSize,
-      newKeys = Some(batchKeys.bandSigFrame(spark)))
+      newKeys = Some(batchKeys.bandSigFrame(clone)))
     freeAfterPairs.foreach(freeLocalCheckpoint) // pairs is checkpointed
     // Durability order: pair LEDGER first, bands twin second, index rows
     // LAST. Crash after the ledger write → the replay's anti-join still
@@ -723,14 +727,13 @@ object Dedup {
     // dangerous one: a crash between them leaves stored docs whose band
     // rows are permanently missing from the twin — silently lost
     // collisions with every future batch.
-    val pt = lshPairsTableName(table)
     // a pair-less batch (all-new content at serving cadence) has
     // nothing to make durable: appending an empty frame would still pay
     // a full commit + catalog refresh; the count came free with the
     // pair checkpoint's own materialization job
     val skipLedger = nPairs == 0L
     val durable =
-      if (!skipLedger && spark.catalog.tableExists(pt)) {
+      if (!skipLedger && clone.catalog.tableExists(pt)) {
         // same double-hop as the id replay guard: the ledger is
         // pair-mass-sized and unbucketed, so a plain anti-join would
         // shuffle+sort it per append — semi-join it against the
@@ -739,21 +742,19 @@ object Dedup {
         // anyway; collecting it explicitly lets the steady-state
         // all-new batch (empty overlap) write the checkpointed pairs
         // directly, with no anti-join plan or broadcast-build job at all
-        val already = spark.table(pt).select(col("id_a"), col("id_b"))
+        val already = clone.table(pt).select(col("id_a"), col("id_b"))
           .join(broadcast(pairs.select(col("id_a"), col("id_b"))),
             Seq("id_a", "id_b"), "leftsemi")
           .collect()
         if (already.isEmpty) pairs
         else pairs.join(
-          broadcast(spark.createDataFrame(
-            java.util.Arrays.asList(already: _*),
-            org.apache.spark.sql.types.StructType(Seq(
-              pairs.schema("id_a"), pairs.schema("id_b"))))),
+          broadcast(localFrame(clone, org.apache.spark.sql.types.StructType(
+            Seq(pairs.schema("id_a"), pairs.schema("id_b"))), already)),
           Seq("id_a", "id_b"), "leftanti")
       } else pairs
     // the FIRST append must still create the ledger table even when
     // pair-less — later appends' double-hop reads it
-    if (!skipLedger || !spark.catalog.tableExists(pt))
+    if (!skipLedger || !clone.catalog.tableExists(pt))
       durable.write.mode("append").format("parquet").saveAsTable(pt)
     // the checkpointed frames' partition counts are known without
     // executing anything — pass them so a small append's bucketed
@@ -766,6 +767,7 @@ object Dedup {
     freeLocalCheckpoint(fresh) // pairs is checkpointed; safe to drop
     pairs
     }
+    org.apache.spark.sql.GraftBridge.rebind(spark, pairs)
   }
 
   /** The store stamps a staged LSH batch's rows depend on: the
@@ -885,10 +887,10 @@ object Dedup {
     // every downstream consumer (the emptiness probe, the ledger
     // semi/anti joins, the ledger APPEND, which writes one file per
     // partition) schedules that many tasks per append. Coalesce (no
-    // shuffle) to the session's shuffle width before materializing: the
-    // maintenance scope pins that width to the BATCH's partition count
-    // on the append path, so tasks and ledger file growth stay
-    // batch-proportional.
+    // shuffle) to the session's shuffle width before materializing: on
+    // the append path that session is the maintenance scope's clone,
+    // whose width is the BATCH's partition count, so tasks and ledger
+    // file growth stay batch-proportional.
     val width = math.max(1,
       cands.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
     // LAZY checkpoint + count: the count() job is what materializes the

@@ -469,18 +469,17 @@ object Similarity {
     val spark = newVecs.sparkSession
     val grid = storedAnchors(spark, table)
     val model = if (codes) Some(storedPqModel(spark, table)) else None
-    // lazy: `.rdd` must plan with AQE off, inside the scope — under AQE
-    // it would execute query stages as a side effect
-    lazy val parts = math.max(1, newVecs.rdd.getNumPartitions)
-    // batch-scoped maintenance conf, same rationale as the LSH append
-    // (GraftSession.withMaintenanceConf): the assignment and the write
-    // are batch-bounded, so AQE's stage-per-job execution and the
-    // session's static shuffle width only add driver round-trips. The
-    // returned occupancy report is LAZY and executes after the scope
-    // closes — store-scale reads keep the caller's full conf.
-    graft.GraftSession.withMaintenanceConf(spark, parts) {
-      Layout.appendBucketed(ivfRows(newVecs, grid, model, id, roundAt), table,
-        batchParts = Some(parts))
+    // batch-scoped maintenance session, same rationale as the LSH append
+    // (GraftSession.maintenanceScope): the assignment and the write are
+    // batch-bounded, so AQE's stage-per-job execution and the session's
+    // static shuffle width only add driver round-trips. The returned
+    // occupancy report is LAZY and runs on the caller's session, so
+    // store-scale reads keep the caller's full conf.
+    graft.GraftSession.maintenanceScope(spark, newVecs, writes = Seq(table)) {
+        (_, batch) =>
+      // the grid is driver state: ivfAssign collects it, never joins it
+      Layout.appendBucketed(ivfRows(batch, grid, model, id, roundAt), table,
+        batchParts = Some(batch.rdd.getNumPartitions))
     }
     ivfCellStats(spark, table, roundAt)
   }

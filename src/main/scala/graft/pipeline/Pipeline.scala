@@ -39,9 +39,11 @@ final class Pipeline(
   private val parsedRoot = s"$dataRoot/parsed"
 
   // the reference's partition columns are period STRINGS ("2023-08",
-  // "2023") — without this, hive partition discovery would re-type
+  // "2023") — with inference on, hive partition discovery would re-type
   // day as DATE and year as INT and diverge from the 4-table contract
-  spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
+  private val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
+  require(!spark.conf.get(inferKey).toBoolean,
+    s"$inferKey must be false on a Pipeline's session (GraftSession.build sets it)")
 
   /** Plan + fetch one inclusive range into the raw zone (extract stage):
     * page envelopes are flattened to their item arrays (the reference's
@@ -55,41 +57,16 @@ final class Pipeline(
     val urlOf: (Long, Long, Int, Int) => String =
       if (kind == "blocks") Fetch.blockSearchUrl(api, _, _, _, _)
       else Fetch.txSearchUrl(api, _, _, _, _)
-    // chunked like extractRangeViaSource, not one monolithic span: a
-    // single chunk means one Spark task (zero fan-out for a large sync
-    // window) AND the maximal quarantine blast radius, since the count
-    // probe quarantines per chunk
+    // chunked, not one monolithic span: a single chunk means one Spark
+    // task (zero fan-out for a large sync window) AND the maximal
+    // quarantine blast radius, since the count probe quarantines per
+    // chunk
     val chunks = Fetch.chunks(start, end, chunkSize)
     val results = Fetch.fetchAll(
       spark, chunks, perPage, fetch, urlOf,
       graft.ingest.ChainClient.parseTotalCount
     ).collect()
     writeRaw(kind, start, end, results, chunksPlanned = chunks.size)
-  }
-
-  /** Extract through the DataSourceV2 source instead of the
-    * mapPartitions harness — same raw-zone contract, but the scan is a
-    * first-class table (`spark.read.format("tendermint-rpc")`), so it
-    * composes with everything DSv2 gives (column pruning, the SQL
-    * surface, a future streaming Table). `fetcherClass` must name an
-    * `RpcFetcher` with a no-arg constructor (or a Scala object) — DSv2
-    * options can't carry closures. */
-  def extractRangeViaSource(kind: String, start: Long, end: Long,
-      fetcherClass: String, chunk: Long = 10000L): Pipeline.RawWrite = {
-    val results = spark.read.format("tendermint-rpc")
-      .option("url", apiUrl)
-      .option("kind", kind)
-      .option("start", start)
-      .option("end", end)
-      .option("chunk", chunk)
-      .option("perPage", perPage)
-      .option("fetcher", fetcherClass)
-      .load()
-      .collect()
-      .map(r => graft.ingest.FetchResult(r.getLong(0), r.getLong(1),
-        r.getInt(2), r.getInt(3), Option(r.getString(4)), r.getBoolean(5)))
-    writeRaw(kind, start, end, results,
-      chunksPlanned = Fetch.chunks(start, end, chunk).size)
   }
 
   /** Flatten page envelopes to item arrays and land the `{start}_{end}`

@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ingest.{ChainClient, Fetch}
-import graft.models.Model
+import graft.models.BreadModels
 import graft.sources.JavaHttpFetcher
 
 /** CLI entry mirroring the reference's `python pipeline.py`
@@ -11,7 +11,8 @@ import graft.sources.JavaHttpFetcher
   * `--dir` data root (default `./data/$NETWORK`), `--num_blocks` sync
   * window (default 10000); env `API_URL` (required), `NETWORK`,
   * `PER_PAGE`. Discovers tip/floor from the node, runs
-  * sync → backfill → parse → the given model DAG.
+  * sync → backfill → parse → the parsed models (the analytics models
+  * read `indexer.*` sources this flow does not land).
   */
 object PipelineMain {
 
@@ -43,17 +44,20 @@ object PipelineMain {
 
   def main(args: Array[String]): Unit = {
     val cfg = parseArgs(args.toSeq, sys.env)
-    val spark = SparkSession.builder()
-      .appName("graft-pipeline")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    val fetcher = new JavaHttpFetcher
-    val tip = ChainClient.parseTip(fetcher.fetch(Fetch.abciInfoUrl(cfg.apiUrl)))
-    val floor = ChainClient.parseChainFloor(
-      fetcher.fetch(s"${cfg.apiUrl}/block?height=1"))
-    val pipe = new Pipeline(spark, cfg.dir, fetcher.fetch, cfg.apiUrl, cfg.perPage)
-    val built = pipe.run(tip, floor, cfg.numBlocks, models = Seq.empty[Model])
+    val spark = graft.GraftSession.build("graft-pipeline")
+    try run(spark, cfg, (new JavaHttpFetcher).fetch)
+    finally spark.stop()
+  }
+
+  /** Discover tip and floor from the node, then run the flow through the
+    * parsed models; returns the built model views by name. */
+  def run(spark: SparkSession, cfg: Config,
+      fetch: String => String): Map[String, DataFrame] = {
+    val tip = ChainClient.parseTip(fetch(Fetch.abciInfoUrl(cfg.apiUrl)))
+    val floor = ChainClient.parseChainFloor(fetch(s"${cfg.apiUrl}/block?height=1"))
+    val pipe = new Pipeline(spark, cfg.dir, fetch, cfg.apiUrl, cfg.perPage)
+    val built = pipe.run(tip, floor, cfg.numBlocks, BreadModels.parsedModels)
     println(s"pipeline complete: tip=$tip floor=$floor models=${built.size}")
-    spark.stop()
+    built
   }
 }

@@ -25,6 +25,28 @@ object GraftBridge {
       .analyzed.schema
   }
 
+  /** A private copy of `spark`: its own SQLConf (a copy of the caller's),
+    * temp views and function registry, over the SAME shared state —
+    * catalog, cache manager, SparkContext. Conf set on the clone never
+    * reaches the caller. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `df`'s plan as a frame of `spark`: it is planned and executed under
+    * `spark`'s conf from here on. Making `spark` the active session is
+    * not enough — a frame keeps planning under the session it was built
+    * on. */
+  def rebind(spark: SparkSession, df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      df.asInstanceOf[classic.Dataset[_]].logicalPlan)
+
+  /** Drop `table`'s cached relation (its file listing) from `spark`'s
+    * catalog: the next read re-resolves it and sees files another
+    * session appended. */
+  def invalidateCachedTable(spark: SparkSession, table: String): Unit =
+    spark.sessionState.catalog.invalidateCachedTable(
+      spark.sessionState.sqlParser.parseTableIdentifier(table))
+
   /** Drain the listener bus — job-count assertions in the plan-audit
     * specs read listener-fed counters, which lag the action that
     * produced them. Test-support only. */

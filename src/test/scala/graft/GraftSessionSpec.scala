@@ -5,12 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the shared session contract the mains rely on: scale-relevant
   * conf defaults and the SQL registration of the custom expressions.
   *
-  * Deliberately does NOT call GraftSession.local here: getOrCreate on
+  * Deliberately does NOT call GraftSession.build here: getOrCreate on
   * the shared test session would re-apply the recommended conf to it,
   * changing planner behavior for every suite that runs afterwards
   * (order-dependent flakiness). The conf contract is asserted as data;
   * the fresh-session path is exactly `recommendedConf` + the builder
-  * boilerplate, both visible in GraftSession.local.
+  * boilerplate, both visible in GraftSession.build.
   */
 class GraftSessionSpec extends AnyFunSuite with SparkSpec {
 
@@ -60,69 +60,66 @@ class GraftSessionSpec extends AnyFunSuite with SparkSpec {
     assert(c("spark.sql.session.timeZone") == "UTC")
   }
 
-  test("withMaintenanceConf: scoped inside, restored after body, exception, and nesting") {
-    val aqe0 = spark.conf.getOption("spark.sql.adaptive.enabled")
-    val shuf0 = spark.conf.getOption("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.shuffle.partitions", "17")
-      // scoped inside, restored after a normal exit
-      GraftSession.withMaintenanceConf(spark, 3) {
-        assert(spark.conf.get("spark.sql.adaptive.enabled") == "false")
-        assert(spark.conf.get("spark.sql.shuffle.partitions") == "3")
-        // reentrant: a NESTED scope keeps its own width, and exiting it
-        // must NOT restore the caller's conf early — only the outermost
-        // exit does (the overlapping-appends guarantee)
-        GraftSession.withMaintenanceConf(spark, 5) {
-          assert(spark.conf.get("spark.sql.shuffle.partitions") == "5")
-        }
-        assert(spark.conf.get("spark.sql.adaptive.enabled") == "false",
-          "inner exit must not restore the session conf early")
-      }
-      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == "17")
-      // restored when the body throws (a failed append must not strand
-      // the session with AQE off)
-      intercept[RuntimeException] {
-        GraftSession.withMaintenanceConf(spark, 2) {
-          throw new RuntimeException("append failed")
-        }
-      }
-      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == "17")
-      // the width floor: a zero/negative hint still yields a valid conf
-      GraftSession.withMaintenanceConf(spark, 0) {
-        assert(spark.conf.get("spark.sql.shuffle.partitions") == "1")
-      }
-      // CONCURRENT overlap (the race the depth counter exists for):
-      // two appends on the same session interleave enter/exit — the
-      // first exit must leave the session scoped, the last must
-      // restore the ORIGINAL values, never the other scope's
-      val aEntered = new java.util.concurrent.CountDownLatch(1)
-      val bDone = new java.util.concurrent.CountDownLatch(1)
-      val t = new Thread(() =>
-        GraftSession.withMaintenanceConf(spark, 7) {
-          aEntered.countDown()
-          bDone.await() // hold the scope open across B's whole lifetime
-        })
-      t.start()
-      aEntered.await()
-      GraftSession.withMaintenanceConf(spark, 9) {
-        assert(spark.conf.get("spark.sql.adaptive.enabled") == "false")
-      } // B exits while A is still inside
-      assert(spark.conf.get("spark.sql.adaptive.enabled") == "false",
-        "B's exit must not restore while A's scope is open")
-      bDone.countDown(); t.join(10000)
-      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true",
-        "A's exit (the last) must restore the pre-scope conf")
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == "17")
-    } finally {
-      def put(k: String, v: Option[String]): Unit = v match {
-        case Some(x) => spark.conf.set(k, x)
-        case None => spark.conf.unset(k)
-      }
-      put("spark.sql.adaptive.enabled", aqe0)
-      put("spark.sql.shuffle.partitions", shuf0)
+  test("an LSH append plans on a private clone: the shared session keeps AQE and its width meanwhile") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions._
+    import graft.operators.Dedup
+    val db = "graft_maint_scope"
+    val loc = java.nio.file.Files.createTempDirectory("graft-maint-scope")
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
+    Seq("idx", "idx__pairs", "idx__bands")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $db.$t"))
+    val docs = Tables.documents(spark, sf("sf0.001"))
+    val old = docs.filter(col("doc_id") % 3 =!= 0)
+    Dedup.lshBuildIndex(old, "doc_id", "text", s"$db.idx")
+    def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select(col("id_a").cast("long"), col("id_b").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val oldOnly = pairSet(Dedup.minHashLshPairs(old, "doc_id", "text"))
+    val full = pairSet(Dedup.minHashLshPairs(docs, "doc_id", "text"))
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+
+    // the batch's ids pass through a UDF that parks each task until
+    // released, so the append's first job holds its scope open
+    val park = udf { (x: Long) =>
+      MaintenanceScopeLatches.entered.countDown()
+      MaintenanceScopeLatches.release.await()
+      x
     }
+    val batch = docs.filter(col("doc_id") % 3 === 0)
+      .withColumn("doc_id", park(col("doc_id").cast("long")))
+    val appended = new java.util.concurrent.atomic.AtomicReference[
+      scala.util.Try[Set[(Long, Long)]]]()
+    val t = new Thread(() => appended.set(scala.util.Try(pairSet(
+      Dedup.lshIndexAppend(spark, s"$db.idx", batch, "doc_id", "text")))))
+    t.start()
+    try {
+      assert(MaintenanceScopeLatches.entered.await(120,
+        java.util.concurrent.TimeUnit.SECONDS), "the append never started")
+      val plan = spark.range(1000).groupBy(col("id") % 7).count()
+        .queryExecution.executedPlan
+      val widths = plan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan.collect {
+          case s: ShuffleExchangeExec => s.outputPartitioning.numPartitions
+        }
+        case other => fail(s"planned without AQE during the append:\n$other")
+      }
+      assert(widths == Seq(width.toInt), plan.treeString)
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == width)
+    } finally MaintenanceScopeLatches.release.countDown()
+    t.join(300000)
+    val pairs = appended.get.get
+    assert(oldOnly ++ pairs == full)
+    assert(oldOnly.intersect(pairs).isEmpty)
   }
+}
+
+/** Latches the parking UDF reads statically: task closures are
+  * serialized, so a captured latch would be a copy. */
+object MaintenanceScopeLatches {
+  val entered = new java.util.concurrent.CountDownLatch(1)
+  val release = new java.util.concurrent.CountDownLatch(1)
 }

@@ -65,13 +65,6 @@ object MintNode extends Serializable {
     Base64.getEncoder.encodeToString(s.getBytes(StandardCharsets.UTF_8))
 }
 
-/** FakeNode as a named RpcFetcher: the DSv2 path carries the fetcher by
-  * class name (options can't hold closures), so the test transport must
-  * be instantiable reflectively. */
-object FakeNodeFetcher extends graft.sources.RpcFetcher {
-  override def fetch(url: String): String = FakeNode.fetch(url)
-}
-
 /** FakeNode plus a chain tip, for the streaming sync (the stream polls
   * /abci_info; FakeNode only serves search pages). */
 class FakeChainFetcher extends graft.sources.RpcFetcher {
@@ -290,18 +283,20 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
       PipelineMain.parseArgs(Seq("--bogus", "1"), env))
   }
 
-  test("extract via the DSv2 source lands the identical raw-zone file") {
-    val rootA = Files.createTempDirectory("graft-dsv2-a").toString
-    val rootB = Files.createTempDirectory("graft-dsv2-b").toString
-    val a = new Pipeline(spark, rootA, FakeNode.fetch)
-      .extractRange("txs", 1, 5)
-    val b = new Pipeline(spark, rootB, FakeNode.fetch)
-      .extractRangeViaSource("txs", 1, 5, FakeNodeFetcher.getClass.getName)
-    assert(Files.readString(Paths.get(a.path)) == Files.readString(Paths.get(b.path)))
-    // and the parse stage consumes it unchanged
-    val pipeB = new Pipeline(spark, rootB, FakeNode.fetch)
-    pipeB.parse()
-    assert(spark.read.parquet(s"$rootB/parsed/tx_result").count() == 3)
+  test("PipelineMain.run drives the chain through the parsed models") {
+    import graft.pipeline.PipelineMain
+    val root = Files.createTempDirectory("graft-cli").toString
+    val chain = new FakeChainFetcher
+    // the chain serves height 1, so the floor probe answers with a block
+    val fetch = (url: String) =>
+      if (url.endsWith("/block?height=1")) """{"result":{}}"""
+      else chain.fetch(url)
+    val built = PipelineMain.run(spark,
+      PipelineMain.Config(root, 10L, "http://node", 100), fetch)
+    assert(built.keySet == BreadModels.parsedModelNames.toSet)
+    // every parsed model view resolves against the landed zone
+    assert(BreadModels.parsedModelNames.map(spark.table(_).count()) ==
+      Seq(5L, 3L, 3L, 3L))
   }
 
   test("parse with tx files but no blocks zone lands rows with null time columns") {

@@ -22,6 +22,9 @@ object SparkSpec {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      // the raw zone's hive partitions are string-typed (Pipeline refuses
+      // a session that would infer them)
+      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

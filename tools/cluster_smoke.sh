@@ -1,9 +1,10 @@
 #!/usr/bin/env bash
 # One-command multi-JVM deployment smoke (DEPLOY.md "Deployment profile"):
 # packages the library and spark-submits graft.ClusterSmoke against
-# local-cluster[2,4,2048] — two real executor JVMs — with the exact conf
-# block a cluster deployment starts from. Exit 0 + one {"smoke":"ok"}
-# line = no code path assumes a single JVM.
+# local-cluster[2,4,2048] — two real executor JVMs. The session builder
+# (GraftSession.build) applies the recommended conf; this script sets only
+# the deployment-sized values. Exit 0 + one {"smoke":"ok"} line = no code
+# path assumes a single JVM.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 sbt -batch package >&2
@@ -14,9 +15,4 @@ exec /opt/spark/bin/spark-submit \
   --conf spark.executor.memory=1536m \
   --conf spark.ui.enabled=false \
   --conf spark.sql.shuffle.partitions=16 \
-  --conf spark.sql.adaptive.enabled=true \
-  --conf spark.sql.adaptive.coalescePartitions.enabled=true \
-  --conf spark.sql.adaptive.skewJoin.enabled=true \
-  --conf spark.sql.sources.partitionColumnTypeInference.enabled=false \
-  --conf spark.sql.session.timeZone=UTC \
   --class graft.ClusterSmoke "$JAR" "${1:-/root/testdata/sf0.001}"

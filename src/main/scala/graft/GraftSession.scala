@@ -19,6 +19,8 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
   *    Pipeline); inference would silently re-type it per directory;
   *  - session timezone pinned to UTC so timestamp formatting is
   *    reproducible wherever the driver runs;
+  *  - `file:` paths through [[NioLocalFileSystem]], which sets
+  *    permissions without forking `chmod`;
   *  - the SQL surface of the custom Catalyst expressions (vec_dot,
   *    vec_norm, minhash, simhash_tokens) registered up front.
   *
@@ -61,6 +63,9 @@ object GraftSession {
     // so bypass never fires there anyway — pinning it off also makes
     // local runs exercise the same writer the cluster uses.
     "spark.shuffle.sort.bypassMergeThreshold" -> "1",
+    // local files get their permissions in process, not from a forked
+    // `chmod` per created file and committed directory (no libhadoop)
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "spark.sql.session.timeZone" -> "UTC")
 
   /** Run index-maintenance `body` on a private clone of `spark` whose

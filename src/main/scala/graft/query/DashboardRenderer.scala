@@ -27,7 +27,7 @@ import org.apache.spark.sql.types.NumericType
   *
   * Scale stance: rendering collects each page query through the SAME
   * bounded-collect device as the JSON endpoint
-  * ([[QueryChainCompiler.collectJson]]'s row cap — here via `maxRows`),
+  * ([[ResultCache]]'s row cap — here via `maxRows`),
   * so a dashboard can never pull an unbounded fact table onto the
   * serving driver; charts are aggregate-shaped by construction. */
 object DashboardRenderer {
@@ -39,7 +39,7 @@ object DashboardRenderer {
     xLabels: Option[Seq[String]])
 
   /** Render a full page: frontmatter + prose + executed components. */
-  def render(spark: SparkSession, markdown: String,
+  def render(spark: SparkSession, markdown: String, cache: ResultCache,
       maxRows: Int = 10000): String = {
     val (front, body) = splitFrontmatter(markdown)
     val title = front.getOrElse("title", "")
@@ -85,7 +85,7 @@ object DashboardRenderer {
               val pre = t.substring(pos, m.start).trim
               if (pre.nonEmpty) content ++= s"<p>${escapeHtml(pre)}</p>\n"
               content ++= renderComponent(m.group(1), m.group(2),
-                parseAttrs(m.group(3)), results.get(m.group(2)), maxRows)
+                parseAttrs(m.group(3)), results.get(m.group(2)), maxRows, cache)
               pos = m.end
             }
             val post = t.substring(pos).trim
@@ -113,7 +113,7 @@ object DashboardRenderer {
 
   private def renderComponent(kind: String, id: String,
       attrs: Map[String, String], result: Option[Either[String, DataFrame]],
-      maxRows: Int): String =
+      maxRows: Int, cache: ResultCache): String =
     result match {
       case None =>
         s"""<div class=error>'$id' is not a query on this page</div>\n"""
@@ -122,9 +122,9 @@ object DashboardRenderer {
       case Some(Right(df)) =>
         try {
           // maxRows+1 so "exactly maxRows" and "cut off" stay
-          // distinguishable (the collectJson contract) — and the cut is
-          // SAID, never silently rendered as a complete result
-          val collected = df.limit(maxRows + 1).collect()
+          // distinguishable — and the cut is SAID, never silently
+          // rendered as a complete result
+          val collected = cache.rows(df, maxRows)
           val truncated = collected.length > maxRows
           val rows = collected.take(maxRows).toSeq
           val body = kind match {

@@ -85,6 +85,10 @@ final class PgWireServer(spark: SparkSession, maxRows: Int = 10000,
   @volatile private var running = false
   private val connections =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Socket]()
+  private val cache = new ResultCache
+
+  /** Hits, misses, evictions and bytes of this server's result cache. */
+  def cacheStats: ResultCache.Stats = cache.stats
 
   /** Bind 127.0.0.1:`port` (0 = ephemeral) and serve until `stop()`.
     * Returns the bound port. One daemon accept thread; one daemon
@@ -132,6 +136,7 @@ final class PgWireServer(spark: SparkSession, maxRows: Int = 10000,
     // what actually ends the sessions (and the daemon threads with them)
     connections.forEach(s => try s.close() catch { case _: IOException => })
     connections.clear()
+    cache.clear()
   }
 
   // ---- protocol constants (public wire format) ----
@@ -1081,16 +1086,17 @@ final class PgWireServer(spark: SparkSession, maxRows: Int = 10000,
     if (d.getNano == 0) base else base + f".${d.getNano / 1000}%06d"
   }
 
-  /** Collect capped at maxRows (+1 probe row to detect truncation) and
-    * stream DataRow messages; NoticeResponse when the cap fires — the
-    * wire protocol's equivalent of the HTTP gateway's `truncated`.
+  /** Collect capped at maxRows (+1 probe row to detect truncation),
+    * through the server's [[ResultCache]], and stream DataRow messages;
+    * NoticeResponse when the cap fires — the wire protocol's equivalent
+    * of the HTTP gateway's `truncated`.
     * `formats` is one code per column (resolved by [[resolveFormats]]):
     * 0 ships the postgres text rendering, 1 the binary encoding. */
   private def writeRows(out: DataOutputStream, df: DataFrame,
       formats: IndexedSeq[Int] = IndexedSeq.empty): Long = {
     val types = df.schema.fields.map(_.dataType)
     def fmt(i: Int): Int = if (i < formats.length) formats(i) else 0
-    val rows = df.limit(maxRows + 1).collect()
+    val rows = cache.rows(df, maxRows)
     val emit = rows.take(maxRows)
     emit.foreach { row =>
       writeMsg(out, 'D') { b =>

@@ -105,30 +105,21 @@ object QueryChainCompiler {
     * table would OOM the serving tier. Collecting maxRows+1 lets the
     * caller distinguish "exactly maxRows" from "cut off" instead of
     * silently rendering a truncated result as complete. */
-  def runToJson(spark: SparkSession, markdown: String,
+  def runToJson(spark: SparkSession, markdown: String, cache: ResultCache,
       maxRows: Int = 10000): Map[String, Either[String, JsonResult]] =
-    runCompiledToJson(spark, compile(extractQueries(markdown)), maxRows)
+    runCompiledToJson(spark, compile(extractQueries(markdown)), cache, maxRows)
 
   /** The pre-compiled face of [[runToJson]]: callers that also need the
     * compiled chain for something else (the page endpoint seeds the
     * status cache with it) compile ONCE and pass it here instead of
-    * paying extract+compile a second time. */
-  def runCompiledToJson(spark: SparkSession, compiled: Seq[Compiled],
+    * paying extract+compile a second time. A server passes its own
+    * [[ResultCache]], so a repeated page answers from it. */
+  def runCompiledToJson(spark: SparkSession, compiled: Seq[Compiled], cache: ResultCache,
       maxRows: Int = 10000): Map[String, Either[String, JsonResult]] =
     compiled.map { c =>
       c.id -> (c.error match {
         case Some(msg) => Left(msg): Either[String, JsonResult]
-        case None      => Right(collectJson(spark.sql(c.sql), maxRows))
+        case None      => Right(cache.json(spark.sql(c.sql), maxRows))
       })
     }.toMap
-
-  /** The bounded-collect device shared by every serving surface (page
-    * endpoint, ad-hoc `/sql`): collect maxRows+1 so "exactly maxRows"
-    * and "cut off" stay distinguishable — ONE implementation of the
-    * row-cap contract. */
-  def collectJson(df: org.apache.spark.sql.DataFrame, maxRows: Int): JsonResult = {
-    val rows = df.limit(maxRows + 1).toJSON.collect().toSeq
-    if (rows.length > maxRows) JsonResult(rows.take(maxRows), truncated = true)
-    else JsonResult(rows, truncated = false)
-  }
 }

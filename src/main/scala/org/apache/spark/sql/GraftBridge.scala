@@ -25,6 +25,28 @@ object GraftBridge {
       .analyzed.schema
   }
 
+  /** `rows` (of `schema`) as JSON lines, written exactly as
+    * `Dataset.toJSON` writes them, under `spark`'s conf — the driver-side
+    * face for a result that is already collected. */
+  def jsonLines(spark: SparkSession, schema: types.StructType,
+      rows: Seq[Row]): IndexedSeq[String] = {
+    val conf = spark.sessionState.conf
+    internal.SQLConf.withExistingConf(conf) {
+      val writer = new java.io.CharArrayWriter()
+      val gen = new catalyst.json.JacksonGenerator(schema, writer,
+        new catalyst.json.JSONOptions(Map.empty[String, String], conf.sessionLocalTimeZone))
+      val toRow = catalyst.encoders.ExpressionEncoder(schema).createSerializer()
+      try rows.iterator.map { r =>
+        gen.write(toRow(r))
+        gen.flush()
+        val line = writer.toString
+        writer.reset()
+        line
+      }.toIndexedSeq
+      finally gen.close()
+    }
+  }
+
   /** A private copy of `spark`: its own SQLConf (a copy of the caller's),
     * temp views and function registry, over the SAME shared state —
     * catalog, cache manager, SparkContext. Conf set on the clone never

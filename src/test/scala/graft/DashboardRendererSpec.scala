@@ -1,6 +1,6 @@
 package graft
 
-import graft.query.DashboardRenderer
+import graft.query.{DashboardRenderer, ResultCache}
 
 /** The rendered front door: Evidence-style page markdown → compiled
   * chained queries → executed rows → self-contained HTML with inline
@@ -27,7 +27,7 @@ class DashboardRendererSpec extends SparkSpec {
     import spark.implicits._
     Seq((10, 12), (20, 25), (30, 31), (40, 44))
       .toDF("gas_used", "gas_wanted").createOrReplaceTempView("tx_result")
-    val html = DashboardRenderer.render(spark, referencePage)
+    val html = DashboardRenderer.render(spark, referencePage, new ResultCache)
     // hide_title honored: the frontmatter title renders only via the
     // markdown heading, not the page-title block
     assert(!html.contains("class=page-title"))
@@ -56,7 +56,7 @@ class DashboardRendererSpec extends SparkSpec {
         |<BarChart data={d} x=day y=n/>
         |<DataTable data={d}/>
         |""".stripMargin
-    val html = DashboardRenderer.render(spark, page)
+    val html = DashboardRenderer.render(spark, page, new ResultCache)
     // 3 bars for the selected y only; categorical x labels on the axis
     assert("<rect".r.findAllIn(html).size == 3, html)
     assert(html.contains("2024-01-01") && html.contains("2024-01-03"))
@@ -73,7 +73,7 @@ class DashboardRendererSpec extends SparkSpec {
         |<LineChart data={a}/>
         |<LineChart data={missing}/>
         |""".stripMargin
-    val html = DashboardRenderer.render(spark, page)
+    val html = DashboardRenderer.render(spark, page, new ResultCache)
     assert(html.contains("'nope' is not a query on this page"), html)
     assert(html.contains("'missing' is not a query on this page"), html)
     assert(!html.contains("<polyline"))
@@ -91,18 +91,18 @@ class DashboardRendererSpec extends SparkSpec {
         |```
         |<LineChart data={g}/>
         |""".stripMargin
-    val html = DashboardRenderer.render(spark, page)
+    val html = DashboardRenderer.render(spark, page, new ResultCache)
     val pts = "points=\"([^\"]+)\"".r.findFirstMatchIn(html).get.group(1)
     assert(pts.split(" ").length == 2, pts)
 
     // row cap: 3 rows, maxRows 2 → truncated notice rendered
-    val capped = DashboardRenderer.render(spark, page, maxRows = 2)
+    val capped = DashboardRenderer.render(spark, page, new ResultCache, maxRows = 2)
     assert(capped.contains("result truncated"), capped)
     assert(!html.contains("result truncated"))
   }
 
   test("prose is escaped, never interpreted as HTML") {
-    val html = DashboardRenderer.render(spark, "# a <b>bold</b> & title")
+    val html = DashboardRenderer.render(spark, "# a <b>bold</b> & title", new ResultCache)
     assert(html.contains("<h1>a &lt;b&gt;bold&lt;/b&gt; &amp; title</h1>"))
   }
 
@@ -116,7 +116,7 @@ class DashboardRendererSpec extends SparkSpec {
         |
         |Daily gas: <LineChart data={q}/> as measured on-chain.
         |""".stripMargin
-    val html = DashboardRenderer.render(spark, page)
+    val html = DashboardRenderer.render(spark, page, new ResultCache)
     assert(html.contains("<p>Daily gas:</p>"), html)
     assert(html.contains("<polyline"), html)
     assert(html.contains("<p>as measured on-chain.</p>"), html)
@@ -133,7 +133,7 @@ class DashboardRendererSpec extends SparkSpec {
         |
         |then open the page.
         |""".stripMargin
-    val html = DashboardRenderer.render(spark, page)
+    val html = DashboardRenderer.render(spark, page, new ResultCache)
     assert(html.contains("<pre><code>  make pipeline\n  make dashboard</code></pre>"), html)
     assert(!html.contains("<p>make pipeline</p>"), html)
     assert(html.contains("<p>then open the page.</p>"), html)

@@ -58,6 +58,35 @@ class GraftSessionSpec extends AnyFunSuite with SparkSpec {
     assert(c("spark.sql.adaptive.skewJoin.enabled") == "true")
     assert(c("spark.sql.sources.partitionColumnTypeInference.enabled") == "false")
     assert(c("spark.sql.session.timeZone") == "UTC")
+    assert(c("spark.hadoop.fs.file.impl") == classOf[NioLocalFileSystem].getName)
+  }
+
+  test("NioLocalFileSystem: creates, mkdirs and setPermission give the asked modes") {
+    import java.nio.file.Files
+    import java.nio.file.attribute.PosixFilePermissions.{toString => modeOf}
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.permission.FsPermission
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    val root = Files.createTempDirectory("graft-niofs")
+    val fs = new Path(root.toUri).getFileSystem(conf)
+    try {
+      assert(fs.isInstanceOf[NioLocalFileSystem])
+      val dir = new Path(root.toUri.toString + "/a/b")
+      assert(fs.mkdirs(dir, new FsPermission("750")))
+      assert(modeOf(Files.getPosixFilePermissions(root.resolve("a/b"))) == "rwxr-x---")
+      val f = new Path(dir, "part-0")
+      val out = fs.create(f, new FsPermission("640"), true, 4096, 1.toShort, 1L << 20, null)
+      out.write(Array[Byte](1, 2, 3)); out.close()
+      assert(modeOf(Files.getPosixFilePermissions(root.resolve("a/b/part-0"))) == "rw-r-----")
+      fs.setPermission(f, new FsPermission("604"))
+      assert(modeOf(Files.getPosixFilePermissions(root.resolve("a/b/part-0"))) == "rw----r--")
+      // the checksum side file is kept beside it, as LocalFileSystem does
+      assert(Files.exists(root.resolve("a/b/.part-0.crc")))
+      intercept[java.io.FileNotFoundException](
+        fs.setPermission(new Path(dir, "missing"), new FsPermission("644")))
+    } finally fs.close()
   }
 
   test("an LSH append plans on a private clone: the shared session keeps AQE and its width meanwhile") {

@@ -1002,6 +1002,59 @@ class PgWireSpec extends SparkSpec {
     }
   }
 
+  test("a cancelled statement is not cached: rerunning it blocks until cancelled again") {
+    withServer() { (srv, port) =>
+      val c = new Client(port); c.connect()
+      def cancel(): Unit = {
+        val s = new java.net.Socket("127.0.0.1", port)
+        val o = new DataOutputStream(s.getOutputStream)
+        o.writeInt(16); o.writeInt(80877102)
+        o.writeInt(c.backendPid); o.writeInt(c.backendSecret); o.flush()
+        assert(s.getInputStream.read() == -1)
+        s.close()
+      }
+      val slow = "SELECT count(*) AS n FROM range(100000) a, range(100000) b"
+      for (attempt <- 1 to 2) {
+        @volatile var result: Seq[(Char, Array[Byte])] = Seq.empty
+        val runner = new Thread(() => result = c.query(slow))
+        runner.start()
+        Thread.sleep(1500)
+        assert(runner.isAlive, s"attempt $attempt: the statement runs, not a cached answer")
+        cancel()
+        runner.join(30000)
+        assert(!runner.isAlive && errorMessage(result).isDefined, s"attempt $attempt")
+        assert(srv.cacheStats.entries == 0, srv.cacheStats)
+      }
+      // a completed statement on the same connection is stored and reused
+      assert(dataRows(c.query("SELECT count(*) AS n FROM range(10) a, range(10) b")) ==
+        Seq(Seq(Some("100"))))
+      assert(dataRows(c.query("SELECT count(*) AS n FROM range(10) a, range(10) b")) ==
+        Seq(Seq(Some("100"))))
+      assert(srv.cacheStats.entries == 1 && srv.cacheStats.hits == 1, srv.cacheStats)
+      c.close()
+    }
+  }
+
+  test("isolateSessions: a connection's SET timeZone keys its results apart") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pg-tz").resolve("t").toString
+    spark.sql("SELECT timestamp'2024-01-01 00:30:00' AS ts").write.parquet(dir)
+    val q = s"SELECT cast(ts AS string) AS s FROM parquet.`$dir`"
+    val srv = new PgWireServer(spark, isolateSessions = true)
+    val port = srv.start(0)
+    try {
+      val utc = new Client(port); utc.connect()
+      val ny = new Client(port); ny.connect()
+      assert(dataRows(utc.query(q)) == Seq(Seq(Some("2024-01-01 00:30:00"))))
+      assert(commandTag(ny.query("SET spark.sql.session.timeZone=America/New_York")).isDefined)
+      assert(dataRows(ny.query(q)) == Seq(Seq(Some("2023-12-31 19:30:00"))))
+      assert(srv.cacheStats.hits == 0 && srv.cacheStats.entries == 2, srv.cacheStats)
+      assert(dataRows(utc.query(q)) == Seq(Seq(Some("2024-01-01 00:30:00"))))
+      assert(dataRows(ny.query(q)) == Seq(Seq(Some("2023-12-31 19:30:00"))))
+      assert(srv.cacheStats.hits == 2, srv.cacheStats)
+      utc.close(); ny.close()
+    } finally srv.stop()
+  }
+
   test("stop() ends live connections, not just the listener") {
     val srv = new PgWireServer(spark)
     val port = srv.start()

@@ -1,6 +1,6 @@
 package graft
 
-import graft.query.QueryChainCompiler
+import graft.query.{QueryChainCompiler, ResultCache}
 import graft.query.QueryChainCompiler.{ChainQuery, CircularRefError}
 
 class QueryChainCompilerSpec extends SparkSpec {
@@ -95,7 +95,7 @@ class QueryChainCompilerSpec extends SparkSpec {
         |```sql broken
         |select * from ${nope}
         |```""".stripMargin
-    val out = QueryChainCompiler.runToJson(spark, md)
+    val out = QueryChainCompiler.runToJson(spark, md, new ResultCache)
     assert(out("top") == Right(QueryChainCompiler.JsonResult(Seq("""{"max_id":2}"""), false)))
     assert(out("base").toOption.get.rows.toSet ==
       Set("""{"id":1,"name":"a"}""", """{"id":2,"name":"b"}"""))
@@ -103,7 +103,7 @@ class QueryChainCompilerSpec extends SparkSpec {
 
     // truncation is flagged, not silent
     val trunc = QueryChainCompiler.runToJson(spark,
-      "```sql base\nselect id, name from chain_json_t\n```", maxRows = 1)
+      "```sql base\nselect id, name from chain_json_t\n```", new ResultCache, maxRows = 1)
     val r = trunc("base").toOption.get
     assert(r.rows.length == 1 && r.truncated)
   }

@@ -165,6 +165,25 @@ class QueryServerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("GET /api/metrics serves the server's result-cache counters") {
+    import spark.implicits._
+    Seq((1, 2), (3, 4)).toDF("gas_used", "gas_wanted")
+      .createOrReplaceTempView("metrics_gas")
+    val page = "```sql gas\nselect sum(gas_used) as g from metrics_gas\n```"
+    val srv = new QueryServer(spark, Map("m" -> page))
+    val port = srv.start()
+    try {
+      assert(get(port, "/api/metrics") ==
+        (200, """{"result_cache":{"hits":0,"misses":0,"evictions":0,"bytes":0,"entries":0}}"""))
+      val first = get(port, "/api/m.json")
+      assert(get(port, "/api/m.json") == first)
+      val (code, body) = get(port, "/api/metrics")
+      assert(code == 200, body)
+      assert(body.startsWith("""{"result_cache":{"hits":1,"misses":1,"evictions":0,"bytes":"""), body)
+      assert(body.endsWith(""","entries":1}}"""), body)
+    } finally srv.stop()
+  }
+
   test("GET /api/status/{route}: cold-compile → cached after run → invalidated on page change") {
     Tables.nation(spark, sf("sf0.001")).createOrReplaceTempView("nation")
     val statusDir = java.nio.file.Files

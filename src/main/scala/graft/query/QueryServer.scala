@@ -68,6 +68,10 @@ final class QueryServer(
     * threads, SURVEY §2.10 Q8). */
   def start(port: Int = 0): Int = synchronized {
     require(server.isEmpty, "QueryServer already started")
+    // the JDK server writes a reply's headers and body as two writes; with
+    // Nagle on, the body waits for the client's delayed ACK (~40 ms). The
+    // JDK reads this once, at the first HttpServer the JVM creates.
+    sys.props.getOrElseUpdate("sun.net.httpserver.nodelay", "true")
     val s = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     s.setExecutor(java.util.concurrent.Executors.newCachedThreadPool(r => {
       val t = new Thread(r, "graft-query-server")

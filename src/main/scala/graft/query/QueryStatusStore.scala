@@ -61,8 +61,7 @@ final class QueryStatusStore(root: String) {
           .map(_.status).getOrElse("not run")
         Entry(c.id, c.sql, m, status)
       }
-      if (entries.isEmpty) Files.deleteIfExists(dir.resolve("queries.json"))
-      else writeEntries(dir, entries)
+      persist(dir, existing, entries)
       entries.map(e => e.id -> e.status)
     }
 
@@ -84,8 +83,7 @@ final class QueryStatusStore(root: String) {
       Entry(c.id, c.sql, m,
         outcomes.getOrElse(c.id, carried.getOrElse("not run")))
     }
-    if (entries.isEmpty) Files.deleteIfExists(dir.resolve("queries.json"))
-    else writeEntries(dir, entries)
+    persist(dir, existing, entries)
   }
 
   /** Record run outcomes for queries already cached under `route` —
@@ -96,9 +94,17 @@ final class QueryStatusStore(root: String) {
     synchronized {
       val dir = queryDir(route)
       val existing = readEntries(dir)
-      if (existing.nonEmpty)
-        writeEntries(dir, existing.map(e =>
-          outcomes.get(e.id).fold(e)(s => e.copy(status = s))))
+      persist(dir, existing, existing.map(e =>
+        outcomes.get(e.id).fold(e)(s => e.copy(status = s))))
+    }
+
+  /** Write `entries` (or empty the dir) only when they differ from the
+    * `existing` ones read under the same lock: a repeated load of an
+    * unchanged page leaves the file untouched. */
+  private def persist(dir: Path, existing: Seq[Entry], entries: Seq[Entry]): Unit =
+    if (entries != existing) {
+      if (entries.isEmpty) Files.deleteIfExists(dir.resolve("queries.json"))
+      else writeEntries(dir, entries)
     }
 
   private def queryDir(route: String): Path =

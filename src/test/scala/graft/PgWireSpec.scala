@@ -1035,6 +1035,44 @@ class PgWireSpec extends SparkSpec {
     }
   }
 
+  test("CTE shapes answer from the cache: simple query and extended execute") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pg-cte").resolve("t").toString
+    spark.range(40).selectExpr("id % 5 AS day", "id AS gas").write.parquet(dir)
+    spark.read.parquet(dir).createOrReplaceTempView("pg_cte_src")
+    // a view whose body has a WITH, re-analyzed (new CTE ids) per query
+    spark.sql(
+      """CREATE OR REPLACE TEMP VIEW pg_cte_days AS
+        |WITH per_day AS (SELECT day, count(*) AS n FROM pg_cte_src GROUP BY day)
+        |SELECT day, n FROM per_day""".stripMargin)
+    // per face its own literal, so each face's first run is a miss
+    def queries(k: Int) = Seq(
+      s"SELECT day, n + $k AS n FROM pg_cte_days ORDER BY day",
+      s"WITH g AS (SELECT day, sum(gas) + $k AS s FROM pg_cte_src GROUP BY day) " +
+        "SELECT sum(s) AS total FROM g")
+    withServer() { (srv, port) =>
+      val c = new Client(port); c.connect()
+      def simple(sql: String) = dataRows(c.query(sql))
+      def extended(sql: String) = {
+        c.send('P', c.cstr("") ++ c.cstr(sql) ++ Array[Byte](0, 0))
+        c.send('B', c.cstr("") ++ c.cstr("") ++ Array[Byte](0, 0, 0, 0, 0, 0))
+        c.send('E', c.cstr("") ++ Array[Byte](0, 0, 0, 0))
+        c.send('S', Array.emptyByteArray)
+        c.flush()
+        dataRows(c.readUntilReady())
+      }
+      for (((face, run), k) <- Seq[(String, String => Seq[Seq[Option[String]]])](
+          "simple" -> simple, "extended" -> extended).zipWithIndex; sql <- queries(k)) {
+        val (cold, coldJobs) = jobsDuring(run(sql))
+        val hits = srv.cacheStats.hits
+        val (warm, warmJobs) = jobsDuring(run(sql))
+        assert(cold.nonEmpty && warm == cold && coldJobs > 0, s"$face `$sql`: $cold")
+        assert(srv.cacheStats.hits == hits + 1 && warmJobs == 0,
+          s"$face `$sql`: ${srv.cacheStats}, $warmJobs Spark jobs on the repeat")
+      }
+      c.close()
+    }
+  }
+
   test("isolateSessions: a connection's SET timeZone keys its results apart") {
     val dir = java.nio.file.Files.createTempDirectory("graft-pg-tz").resolve("t").toString
     spark.sql("SELECT timestamp'2024-01-01 00:30:00' AS ts").write.parquet(dir)

@@ -184,6 +184,52 @@ class QueryServerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("small replies are not held for the client's delayed ACK") {
+    val srv = new QueryServer(spark, Map.empty)
+    val port = srv.start()
+    try {
+      val url = URI.create(s"http://127.0.0.1:$port/api/metrics").toURL
+      // read to the end and close the stream, not the connection: the
+      // next request reuses the socket (keep-alive)
+      def timedGet(): Double = {
+        val t0 = System.nanoTime()
+        val in = url.openConnection().getInputStream
+        try in.readAllBytes() finally in.close()
+        (System.nanoTime() - t0) / 1e6
+      }
+      timedGet()
+      val ms = Seq.fill(20)(timedGet()).sorted
+      val report = f"median ${ms(ms.size / 2)}%.1f ms of ${ms.map(t => f"$t%.1f").mkString(" ")}"
+      info(report)
+      assert(ms(ms.size / 2) < 20, report)
+    } finally srv.stop()
+  }
+
+  test("a repeated load of an unchanged page leaves queries.json untouched") {
+    val statusDir = java.nio.file.Files.createTempDirectory("graft-status-write").toString
+    val file = java.nio.file.Paths.get(statusDir, "extracted",
+      new graft.query.QueryStatusStore(statusDir).routeHash("/w"), "queries.json")
+    val old = java.nio.file.attribute.FileTime.fromMillis(1000000000000L)
+    def page(v: Int) = s"```sql one\nSELECT $v AS v\n```"
+    val srv = new QueryServer(spark, Map("w" -> page(1)), statusDir = Some(statusDir))
+    val port = srv.start()
+    try {
+      assert(get(port, "/api/w.json")._1 == 200)
+      java.nio.file.Files.setLastModifiedTime(file, old)
+      assert(get(port, "/api/w.json")._1 == 200)
+      assert(get(port, "/api/status/w")._2 == """{"status":[{"id":"one","status":"done"}]}""")
+      assert(java.nio.file.Files.getLastModifiedTime(file) == old, "rewritten on a repeated load")
+    } finally srv.stop()
+    // an edited page still rewrites it
+    val srv2 = new QueryServer(spark, Map("w" -> page(2)), statusDir = Some(statusDir))
+    val port2 = srv2.start()
+    try {
+      assert(get(port2, "/api/w.json")._1 == 200)
+      assert(java.nio.file.Files.getLastModifiedTime(file) != old)
+      assert(java.nio.file.Files.readString(file).contains("SELECT 2 AS v"))
+    } finally srv2.stop()
+  }
+
   test("GET /api/status/{route}: cold-compile → cached after run → invalidated on page change") {
     Tables.nation(spark, sf("sf0.001")).createOrReplaceTempView("nation")
     val statusDir = java.nio.file.Files

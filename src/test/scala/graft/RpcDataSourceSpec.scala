@@ -84,6 +84,9 @@ class RpcDataSourceSpec extends AnyFunSuite with SparkSpec {
 
   test("JavaHttpFetcher + DSv2 source over a real local socket") {
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+    // the JDK reads nodelay once per JVM, at its first HttpServer; this
+    // one may be the first, and QueryServer's replies need it on
+    sys.props.getOrElseUpdate("sun.net.httpserver.nodelay", "true")
     val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     try {
       server.createContext("/", new HttpHandler {

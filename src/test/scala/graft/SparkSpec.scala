@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,6 +15,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   def sf(dir: String): String = s"/root/testdata/$dir"
+
+  /** `body`'s value and the Spark jobs started while it ran. */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    val n = new AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+    }
+    GraftBridge.waitForListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val a = body
+      GraftBridge.waitForListenerBus(spark)
+      (a, n.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {

@@ -5,8 +5,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions.udf
 
 import graft.SparkSpec
@@ -25,21 +25,6 @@ class ResultCacheSpec extends SparkSpec {
     val in = if (code >= 400) conn.getErrorStream else conn.getInputStream
     try (code, new String(in.readAllBytes(), StandardCharsets.UTF_8))
     finally conn.disconnect()
-  }
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val n = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    GraftBridge.waitForListenerBus(spark)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val a = body
-      GraftBridge.waitForListenerBus(spark)
-      (a, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   private def count(c: ResultCache, sql: String): Long =
@@ -72,6 +57,68 @@ class ResultCacheSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("a repeated page load runs no optimizer the second time") {
+    val dir = Files.createTempDirectory("graft-rc-opt").resolve("t").toString
+    (1 to 40).map(i => (i % 5, i.toLong)).toDF("day", "gas").write.parquet(dir)
+    spark.read.parquet(dir).createOrReplaceTempView("rc_opt")
+    val page =
+      """```sql per_day
+        |select day, sum(gas) as gas from rc_opt group by day order by day
+        |```
+        |<BarChart data={per_day} x=day y=gas/>
+        |""".stripMargin
+    val runs = new AtomicInteger(0)
+    val counting = new Rule[LogicalPlan] {
+      override def apply(plan: LogicalPlan): LogicalPlan = { runs.incrementAndGet(); plan }
+    }
+    val before = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = before :+ counting
+    val srv = new QueryServer(spark, Map("opt" -> page))
+    val port = srv.start()
+    try {
+      for (path <- Seq("/api/opt.json", "/page/opt.html")) {
+        runs.set(0)
+        assert(get(port, path)._1 == 200)
+        assert(runs.get > 0, s"$path: the first load optimizes its query")
+        runs.set(0)
+        assert(get(port, path)._1 == 200)
+        assert(runs.get == 0, s"$path: the repeated load ran the optimizer ${runs.get} times")
+      }
+    } finally {
+      srv.stop()
+      spark.experimental.extraOptimizations = before
+    }
+  }
+
+  test("CTE shapes answer from the cache on /api/*.json") {
+    val dir = Files.createTempDirectory("graft-rc-cte").resolve("t").toString
+    (1 to 40).map(i => (i % 5, i.toLong)).toDF("day", "gas").write.parquet(dir)
+    spark.read.parquet(dir).createOrReplaceTempView("rc_cte_src")
+    // a view whose body has a WITH, re-analyzed (new CTE ids) per query
+    spark.sql(
+      """create or replace temp view rc_cte_days as
+        |with per_day as (select day, count(*) as n from rc_cte_src group by day)
+        |select day, n from per_day""".stripMargin)
+    val pages = Map(
+      "view" -> "```sql days\nselect day, n from rc_cte_days order by day\n```",
+      "own" -> ("```sql total\nwith g as (select day, sum(gas) as s from rc_cte_src " +
+        "group by day) select sum(s) as total from g\n```"))
+    val srv = new QueryServer(spark, pages)
+    val port = srv.start()
+    def hits(): Long = "\"hits\":(\\d+)".r.findFirstMatchIn(get(port, "/api/metrics")._2)
+      .map(_.group(1).toLong).getOrElse(-1L)
+    try {
+      for (route <- pages.keys) {
+        val ((c1, b1), cold) = jobsDuring(get(port, s"/api/$route.json"))
+        val before = hits()
+        val ((c2, b2), warm) = jobsDuring(get(port, s"/api/$route.json"))
+        assert(c1 == 200 && c2 == 200 && b1 == b2 && b1.contains(""""ok":true"""), b1)
+        assert(cold > 0, s"$route: the first load runs its query")
+        assert(hits() == before + 1 && warm == 0, s"$route: $warm Spark jobs on the repeated load")
+      }
+    } finally srv.stop()
+  }
+
   test("JSON lines match Dataset.toJSON for every column shape") {
     val df = spark.sql(
       """select id, cast(id as decimal(12, 3)) / 7 as dec, cast(null as string) as nothing,
@@ -96,6 +143,22 @@ class ResultCacheSpec extends SparkSpec {
     Seq(4, 5).toDF("x").write.mode("append").parquet(dir)
     assert(count(c, "select count(*) from rc_dir") == 5)
     assert(c.stats.misses == 2 && c.stats.entries == 2)
+  }
+
+  test("a partitioned catalog table hits, and an insert returns the new sum") {
+    spark.sql("drop table if exists rc_parts")
+    (1 to 6).map(i => (i.toLong, i % 2)).toDF("x", "p").write.partitionBy("p")
+      .saveAsTable("rc_parts")
+    try {
+      val c = new ResultCache
+      def sum(): Long =
+        c.rows(spark.sql("select sum(x) from rc_parts where p = 1"), 10).head.getLong(0)
+      assert(sum() == 9 && sum() == 9)
+      assert(c.stats.hits == 1, c.stats)
+      Seq((7L, 1)).toDF("x", "p").write.insertInto("rc_parts")
+      assert(sum() == 16)
+      assert(c.stats.hits == 1 && c.stats.entries == 2, c.stats)
+    } finally spark.sql("drop table if exists rc_parts")
   }
 
   test("createOrReplaceTempView with other data returns the new rows") {
@@ -131,6 +194,49 @@ class ResultCacheSpec extends SparkSpec {
     // the control: the same shape without the impure call is stored
     c.rows(spark.sql("select id from range(3)"), 10)
     assert(c.stats.entries == 1)
+  }
+
+  test("what the optimizer folds from the session or the clock is never cached") {
+    val c = new ResultCache
+    val folded = Seq(
+      "select cast('now' as timestamp) as t",
+      "select cast(' today ' as date) as d",
+      "select id from range(3) where cast(id as timestamp) < cast('tomorrow' as timestamp_ntz)",
+      "select current_database() as db",
+      "select current_catalog() as c",
+      "select current_user() as u",
+      "select localtimestamp() as t",
+      "select id from range(3) where date_add(date'2024-01-01', cast(id as int)) < localtimestamp()",
+      "select current_timezone() as z")
+    for (sql <- folded; _ <- 1 to 2) c.rows(spark.sql(sql), 10)
+    assert(c.stats.hits == 0 && c.stats.entries == 0, c.stats)
+    // a constant datetime cast that throws when evaluated: building the
+    // key does not fail the request, the run reports Spark's own error
+    val throwing = "select case when id < 0 then cast(concat('x', 1 div 0) as date) end as d " +
+      "from range(3)"
+    val misses = c.stats.misses
+    val e = intercept[ArithmeticException](c.rows(spark.sql(throwing), 10))
+    assert(e.asInstanceOf[org.apache.spark.SparkThrowable].getCondition == "DIVIDE_BY_ZERO")
+    assert(c.stats.misses == misses + 1 && c.stats.entries == 0, c.stats)
+    // the control: a datetime string the optimizer does not replace is stored
+    c.rows(spark.sql("select cast('2024-01-31' as date) as d"), 10)
+    assert(c.stats.entries == 1)
+  }
+
+  test("a persistent view's entry holds no catalog entry") {
+    val dir = Files.createTempDirectory("graft-rc-pview").resolve("t").toString
+    Seq(1, 2, 3).toDF("x").write.parquet(dir)
+    spark.sql(s"create or replace view rc_pview as select x from parquet.`$dir`")
+    try {
+      val c = new ResultCache
+      def sum(): Long = c.rows(spark.sql("select sum(x) from rc_pview"), 10).head.getLong(0)
+      assert(sum() == 6 && sum() == 6)
+      assert(c.stats.hits == 1 && c.stats.entries == 1, c.stats)
+      for (cls <- Seq(classOf[org.apache.spark.sql.SparkSession],
+          classOf[org.apache.spark.sql.execution.datasources.FileIndex],
+          classOf[org.apache.spark.sql.catalyst.catalog.CatalogTable]))
+        assert(pathTo(c, cls).isEmpty, s"${cls.getName} via ${pathTo(c, cls)}")
+    } finally spark.sql("drop view if exists rc_pview")
   }
 
   test("commands, RDD relations and cached data are not stored") {

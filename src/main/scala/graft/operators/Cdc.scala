@@ -116,7 +116,7 @@ object Cdc {
 
   /** Replay-safe versioned sink for batch CDC outputs — the
     * `batch=<id>` overwrite pattern of the streaming sinks
-    * (EventStream.runForeachBatchIdempotent, Pipeline.streamingSyncBlocks)
+    * (EventStream.runForeachBatchIdempotent, Pipeline.streamingSync)
     * generalized to batch jobs, so upsert/compaction results are
     * idempotent under orchestration retries WITHOUT a transactional
     * table format: each run writes its whole result under

@@ -1,6 +1,6 @@
 package graft.parse
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -160,7 +160,7 @@ object Flatteners {
 
   /** Time-enrichment join (parse.py:219-221): pull ts/day/month/year from
     * blocks by height. The blocks side must be BOUNDED by the caller
-    * (Pipeline.parse prunes it to the batch's height span) — then it is
+    * (Pipeline.land prunes it to the batch's height span) — then it is
     * per-batch small → broadcast and the fact side never shuffles. Pass
     * `hintBroadcast = false` when no bound is known and AQE should pick
     * the strategy from the real size. */
@@ -173,15 +173,18 @@ object Flatteners {
   /** The hive partition columns of every parsed table, outermost first. */
   val partitionCols: Seq[String] = Seq("year", "month", "day")
 
-  /** Hive-partitioned parquet sink (parse.py:182-200): append-mode,
-    * year/month/day layout — downstream scans get partition pruning.
+  /** Hive-partitioned parquet sink (parse.py:182-200), year/month/day
+    * layout — downstream scans get partition pruning. `mode` is Append
+    * for the batch parse's growing zones and Overwrite for a stream
+    * batch's own `batch=<id>` subtree.
     *
     * The REBALANCE hint routes each hive partition's rows to as few
     * tasks as its volume needs (AQE splits oversized groups, coalesces
     * tiny ones): without it every write task emits one file into EVERY
     * partition it holds rows for — tasks × days small files at scale.
     * With it, a quiet day is one file and a heavy day still fans out. */
-  def writePartitioned(df: DataFrame, dir: String): Unit =
+  def writePartitioned(df: DataFrame, dir: String,
+      mode: SaveMode = SaveMode.Append): Unit =
     df.hint("rebalance", partitionCols.map(col): _*)
-      .write.mode("append").partitionBy(partitionCols: _*).parquet(dir)
+      .write.mode(mode).partitionBy(partitionCols: _*).parquet(dir)
 }

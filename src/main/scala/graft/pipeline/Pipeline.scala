@@ -2,11 +2,13 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.immutable.SeqMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, to_timestamp}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, explode, from_json, to_timestamp}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
 import graft.ingest.{Fetch, HeightChunk, Manifest, RangePlanner, WatermarkStore}
 import graft.models.{Model, ModelRunner}
@@ -111,162 +113,89 @@ final class Pipeline(
           case _          => Nil
         }
       }.distinct
-    val quarantinedHeights =
-      failed.toIndexedSeq.flatMap(r => r.start to r.end).distinct
-    if (quarantinedHeights.nonEmpty)
-      graft.ingest.ErrorHeights.append(dataRoot, kind, quarantinedHeights)
+    val heightsQuarantined = ledger(kind, failed.toIndexedSeq.map(r => (r.start, r.end)))
     val dir = Paths.get(rawDir(kind))
     Files.createDirectories(dir)
     val path = dir.resolve(s"${start}_$end.json")
     Files.writeString(path, JsonMethods.compact(JArray(items.toList)))
     new WatermarkStore(rawDir(kind)).updateFromFiles()
-    Pipeline.RawWrite(path.toString, chunksPlanned, badChunks.size,
-      quarantinedHeights.size.toLong)
+    Pipeline.RawWrite(path.toString, chunksPlanned, badChunks.size, heightsQuarantined)
   }
 
+  /** Quarantined spans → the per-kind error-height ledger, which
+    * gap-fill reads back; returns the number of heights ledgered. */
+  private def ledger(kind: String, spans: Seq[(Long, Long)]): Long = {
+    val heights = spans.flatMap { case (s, e) => s to e }.distinct
+    graft.ingest.ErrorHeights.append(dataRoot, kind, heights)
+    heights.size.toLong
+  }
 
-  /** The reference's sync loop as ONE continuous streaming query:
-    * `readStream.format("tendermint-rpc")` (offsets = block heights,
-    * checkpointed — metadata.json retired) → page envelopes → parseBlocks
-    * → hive-partitioned parsed zone. Trigger.AvailableNow drains to the
-    * tip pinned at start and stops, so each invocation behaves like one
-    * `make pipeline` run with streaming's bookkeeping.
+  /** The reference's sync loop as ONE continuous streaming query per raw
+    * kind: `readStream.format("tendermint-rpc")` (offsets = block
+    * heights, checkpointed — metadata.json retired) → page envelopes →
+    * the kind's flatteners → the `<table>_stream` zones, through the
+    * same [[land]] the batch parse uses. `blocks` lands the blocks
+    * table; `txs` lands every tx table, time-enriched against the
+    * `blocks_stream` zone, so sync blocks first. Trigger.AvailableNow
+    * drains to the tip pinned at start and stops, so each invocation
+    * behaves like one `make pipeline` run with streaming's bookkeeping.
     *
     * Exactly-once without a transactional file log: each micro-batch
-    * overwrites its own `batch=<id>` subtree (the write is a
+    * overwrites its own `batch=<id>` subtree per table (the write is a
     * deterministic function of (batchId, data) — the
-    * EventStream.runForeachBatchIdempotent pattern), and height windows
-    * never overlap across batches, so a replayed batch lands in place
-    * instead of appending duplicates. Readers just
-    * `spark.read.parquet(zone)` — batch/year/month/day all come back as
-    * partition columns and day-level pruning works unchanged. */
-  def streamingSyncBlocks(fetcherClass: String, startHeight: Long = 1L,
-      chunk: Long = 1000L, maxBlocksPerBatch: Long = 10000L)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+    * EventStream.runForeachBatchIdempotent pattern; the error ledger is
+    * append-idempotent), and height windows never overlap across
+    * batches, so a replayed batch lands in place instead of appending
+    * duplicates. Readers just `spark.read.parquet(zone)` — batch/year/
+    * month/day all come back as partition columns and day-level pruning
+    * works unchanged. */
+  def streamingSync(kind: String, fetcherClass: String, startHeight: Long = 1L,
+      chunk: Long = 1000L, maxBlocksPerBatch: Long = 10000L): StreamingQuery = {
+    val (key, tables) = kind match {
+      case "blocks" => (col("block.header.height"), Seq("blocks"))
+      case "txs"    => (col("hash"), Pipeline.txTables.keys.toSeq)
+    }
     val envelope = StructType(Seq(StructField("result", StructType(Seq(
-      StructField("blocks", ArrayType(Flatteners.blockSchema)))))))
-    val zone = s"$parsedRoot/blocks_stream"
+      StructField(kind, ArrayType(Pipeline.rawSchema(kind))))))))
     spark.readStream.format("tendermint-rpc")
-      .option("url", apiUrl).option("kind", "blocks")
+      .option("url", apiUrl).option("kind", kind)
       .option("start", startHeight).option("chunk", chunk)
       .option("maxBlocksPerBatch", maxBlocksPerBatch)
       .option("perPage", perPage)
       .option("fetcher", fetcherClass)
       .load()
       .writeStream
-      .option("checkpointLocation", s"$dataRoot/checkpoints/blocks_sync")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // persist first: this body runs TWO actions (ledger collect +
-        // zone write), and a foreachBatch frame re-executes its source
-        // per action — without the cache every micro-batch would fetch
-        // its pages from the node twice
-        val pages = batch.persist()
-        try {
-        // quarantined pages → error-height ledger, same as the batch
-        // path (writeRaw): the offset commits past them, so without the
-        // ledger the gap-fill planner could never recover those heights
-        val failed = pages.filter(col("quarantined"))
-          .select("start", "end").collect()
-        if (failed.nonEmpty)
-          graft.ingest.ErrorHeights.append(dataRoot, "blocks",
-            failed.toIndexedSeq.flatMap(r => r.getLong(0) to r.getLong(1)).distinct)
-        val raw = pages
-          .filter(col("quarantined") === false && col("body").isNotNull)
-          .select(org.apache.spark.sql.functions.explode(
-            org.apache.spark.sql.functions.from_json(col("body"), envelope)
-              .getField("result").getField("blocks")).as("b"))
-          .select("b.*")
-        Flatteners.parseBlocks(raw).drop("ts")
-          // a mid-chunk per-page degrade can re-cover already-fetched
-          // items (see writeRaw's distinct); heights are unique within
-          // a batch window, so the height dedup absorbs the overlap
-          .dropDuplicates("height")
-          // same REBALANCE as writePartitioned: without it every task
-          // writes a file into every day it touches
-          .hint("rebalance", col("year"), col("month"), col("day"))
-          .write.mode("overwrite")
-          .partitionBy("year", "month", "day")
-          .parquet(s"$zone/batch=$batchId")
-        } finally pages.unpersist()
-      }
-      .start()
-  }
-
-  /** The tx half of the streaming sync: `readStream` over `/tx_search`
-    * pages (same DSv2 source, `kind = txs`) → the three tx flatteners →
-    * time-enriched, hive-partitioned zones, one streaming query feeding
-    * ALL of tx_result/log_attributes/events — with streamingSyncBlocks
-    * this makes the whole reference pipeline (both raw kinds) run as
-    * streaming queries.
-    *
-    * Same exactly-once device as the blocks stream (each table overwrites
-    * its own `batch=<id>` subtree; the error ledger is append-idempotent),
-    * and the same broadcast bound as the batch parse stage: the
-    * enrichment's blocks side is pruned to THIS batch's height window
-    * (free from the page rows' start/end) before the broadcast join.
-    * Page-overlap duplicates from a mid-chunk degrade collapse on the tx
-    * hash — one raw tx feeds all three flatteners exactly once. */
-  def streamingSyncTxs(fetcherClass: String, startHeight: Long = 1L,
-      chunk: Long = 1000L, maxBlocksPerBatch: Long = 10000L,
-      blocksZoneName: String = "blocks_stream")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
-    val envelope = StructType(Seq(StructField("result", StructType(Seq(
-      StructField("txs", ArrayType(Flatteners.txSchema)))))))
-    spark.readStream.format("tendermint-rpc")
-      .option("url", apiUrl).option("kind", "txs")
-      .option("start", startHeight).option("chunk", chunk)
-      .option("maxBlocksPerBatch", maxBlocksPerBatch)
-      .option("perPage", perPage)
-      .option("fetcher", fetcherClass)
-      .load()
-      .writeStream
-      .option("checkpointLocation", s"$dataRoot/checkpoints/txs_sync")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // persist first: this body runs FIVE actions (ledger + span +
-        // three zone writes) and a foreachBatch frame re-executes its
+      .option("checkpointLocation", s"$dataRoot/checkpoints/${kind}_sync")
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        // persist first: this body runs an action per landed table plus
+        // the page collect, and a foreachBatch frame re-executes its
         // source per action — without the cache each would re-fetch
         val pages = batch.persist()
         try {
-          val failed = pages.filter(col("quarantined"))
-            .select("start", "end").collect()
-          if (failed.nonEmpty)
-            graft.ingest.ErrorHeights.append(dataRoot, "txs",
-              failed.toIndexedSeq.flatMap(r => r.getLong(0) to r.getLong(1)).distinct)
+          val spans = pages.select("start", "end", "quarantined").collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+          // quarantined pages → error-height ledger, as in writeRaw: the
+          // offset commits past them, so without the ledger the gap-fill
+          // planner could never recover those heights
+          ledger(kind, spans.toIndexedSeq.collect { case (s, e, true) => (s, e) })
           // the batch's height window bounds the enrichment broadcast —
           // the streaming analog of the batch path's filename-span prune
-          val spanRow = pages.agg(
-            org.apache.spark.sql.functions.min("start"),
-            org.apache.spark.sql.functions.max("end")).head()
           val span =
-            if (spanRow.isNullAt(0)) None
-            else Some((spanRow.getLong(0), spanRow.getLong(1)))
-          val blocks = enrichmentBlocks(span, blocksZoneName)
-          val rawAll = pages
+            if (spans.isEmpty) None else Some((spans.map(_._1).min, spans.map(_._2).max))
+          val items = pages
             .filter(col("quarantined") === false && col("body").isNotNull)
-            .select(org.apache.spark.sql.functions.explode(
-              org.apache.spark.sql.functions.from_json(col("body"), envelope)
-                .getField("result").getField("txs")).as("t"))
-            .select("t.*")
-          // a mid-chunk degrade can re-cover already-fetched txs (see
-          // writeRaw's distinct); the chain tx hash is the natural key.
-          // NULL hashes (malformed envelope rows) bypass the dedup:
-          // dropDuplicates treats nulls as equal and would silently
-          // collapse every null-hash row to one
-          val raw = rawAll.filter(col("hash").isNotNull).dropDuplicates("hash")
-            .unionByName(rawAll.filter(col("hash").isNull))
-          def land(df: DataFrame, table: String): Unit =
-            enrich(df, blocks, hintBroadcast = span.isDefined)
-              .hint("rebalance", col("year"), col("month"), col("day"))
-              .write.mode("overwrite")
-              .partitionBy("year", "month", "day")
-              .parquet(s"$parsedRoot/${table}_stream/batch=$batchId")
-          land(Flatteners.parseTxResult(raw), "tx_result")
-          land(Flatteners.parseLogAttributes(raw), "log_attributes")
-          land(Flatteners.parseEventsWide(raw), "events")
+            .select(explode(from_json(col("body"), envelope)
+              .getField("result").getField(kind)).as("r"))
+            .select("r.*")
+            .withColumn("__key", key)
+          // a mid-chunk degrade can re-cover already-fetched items (see
+          // writeRaw's distinct): one row per key (block height, tx
+          // hash). NULL keys (malformed rows) bypass the dedup, since
+          // dropDuplicates treats nulls as equal and would collapse them
+          val raw = items.filter(col("__key").isNotNull).dropDuplicates("__key")
+            .unionByName(items.filter(col("__key").isNull)).drop("__key")
+          tables.foreach(land(_, raw, span, Pipeline.StreamBatch(batchId)))
         } finally pages.unpersist()
       }
       .start()
@@ -289,43 +218,25 @@ final class Pipeline(
         }
       manifest.newFiles(all, kind)
     }
+    // raw files are single JSON arrays (orjson list dump) → multiLine
+    def read(kind: String, files: Seq[String]): DataFrame =
+      spark.read.schema(Pipeline.rawSchema(kind)).option("multiLine", "true")
+        .json(files.map(f => s"${rawDir(kind)}/$f"): _*)
 
     val blockFiles = newFiles("blocks")
-    val txFiles = newFiles("txs")
-    if (blockFiles.isEmpty && txFiles.isEmpty) return
-
-    // raw files are single JSON arrays (orjson list dump) → multiLine
     if (blockFiles.nonEmpty) {
-      val rawBlocks = spark.read.schema(Flatteners.blockSchema)
-        .option("multiLine", "true")
-        .json(blockFiles.map(f => s"${rawDir("blocks")}/$f"): _*)
-      Flatteners.writePartitioned(
-        Flatteners.parseBlocks(rawBlocks).drop("ts"), s"$parsedRoot/blocks")
+      land("blocks", read("blocks", blockFiles), None, Pipeline.Append)
       // record immediately after a successful write: a crash between
       // table writes must not leave files half-recorded
       manifest.record(blockFiles, "blocks")
     }
 
+    val txFiles = newFiles("txs")
     if (txFiles.nonEmpty) {
-      // enrichment joins the parsed blocks zone, not just this batch's
-      // new block files: tx files can arrive in a later batch than
-      // their blocks (gap-fill, partial-failure replay), and a
-      // batch-local join would strand those rows with null day/month/
-      // year in the hive default partition. On a first run / replay
-      // where tx files precede any blocks batch, the zone doesn't exist
-      // yet — enrich against an empty frame so tx rows land with null
-      // time columns (the documented late-blocks behavior) instead of
-      // failing the whole parse stage on the missing path.
-      //
-      // The zone is NOT joined whole: blocks grow with chain height
-      // forever, and enrichTime broadcasts its blocks side — an
-      // unbounded broadcast at scale. The tx batch's height span is
-      // free from the raw filenames (`{start}_{end}.json`), so the
-      // blocks scan is pruned to that span FIRST: the broadcast is
-      // bounded by the batch window, and the height range predicate
-      // pushes down to the parquet scan (row-group pruning).
-      val txSpan = Pipeline.fileHeightSpan(txFiles)
-      val allBlocks = enrichmentBlocks(txSpan)
+      // The tx batch's height span is free from the raw filenames
+      // (`{start}_{end}.json`); land prunes the enrichment's blocks
+      // side to it (see enrichmentBlocks).
+      val span = Pipeline.fileHeightSpan(txFiles)
       // per-TABLE manifest keys ("txs:<table>") make the three appends
       // retry-idempotent as a group: Flow retries parse() whole, and
       // with one umbrella record after all three writes, a crash
@@ -335,18 +246,10 @@ final class Pipeline(
       // finish; the legacy umbrella "txs" record (kept for the
       // manifest's what-is-parsed surface and old manifests) lands
       // only after all three.
-      Pipeline.txTables.foreach { case (table, parseF) =>
+      Pipeline.txTables.keys.foreach { table =>
         val pending = manifest.newFiles(txFiles, s"txs:$table")
         if (pending.nonEmpty) {
-          val rawTxs = spark.read.schema(Flatteners.txSchema)
-            .option("multiLine", "true")
-            .json(pending.map(f => s"${rawDir("txs")}/$f"): _*)
-          // if no filename bounded the span (foreign files in the raw
-          // dir), the blocks side is the whole zone — skip the broadcast
-          // hint and let AQE pick the strategy from the real size
-          Flatteners.writePartitioned(
-            enrich(parseF(rawTxs), allBlocks, hintBroadcast = txSpan.isDefined),
-            s"$parsedRoot/$table")
+          land(table, read("txs", pending), span, Pipeline.Append)
           manifest.record(pending, s"txs:$table")
         }
       }
@@ -354,25 +257,42 @@ final class Pipeline(
     }
   }
 
-  /** A parse-stage output as landed: time-enriched, without `ts`. */
-  private def enrich(table: DataFrame, blocks: DataFrame,
-      hintBroadcast: Boolean = true): DataFrame =
-    Flatteners.enrichTime(table, blocks, hintBroadcast).drop("ts")
+  /** The one writer of the parsed zone: flatten `raw` as `table`, and
+    * for a tx table time-enrich it against the blocks zone of the same
+    * sink pruned to `span`, then write it hive-partitioned into the
+    * sink. The batch parse appends to `<table>`; a stream batch
+    * overwrites `<table>_stream/batch=<id>`. */
+  private def land(table: String, raw: DataFrame, span: Option[(Long, Long)],
+      sink: Pipeline.Sink): Unit = {
+    val (suffix, dir, mode) = sink match {
+      case Pipeline.Append => ("", table, SaveMode.Append)
+      case Pipeline.StreamBatch(id) =>
+        ("_stream", s"${table}_stream/batch=$id", SaveMode.Overwrite)
+    }
+    val flat = Pipeline.txTables.get(table).fold(Flatteners.parseBlocks(raw)) { parseF =>
+      // an unbounded span (a foreign file name in the raw dir) joins the
+      // whole blocks zone: no broadcast hint, AQE picks the strategy
+      // from the real size
+      Flatteners.enrichTime(parseF(raw), enrichmentBlocks(span, s"blocks$suffix"),
+        hintBroadcast = span.isDefined)
+    }
+    Flatteners.writePartitioned(flat.drop("ts"), s"$parsedRoot/$dir", mode)
+  }
 
   /** The schema each static parsed table reads back with: the frame
-    * parse() lands, hive partition columns last, as strings (partition
+    * [[land]] writes, hive partition columns last, as strings (partition
     * type inference is off). Derived by analysing the flatteners over
     * empty frames, so reading a zone needs no footer-inference job.
     * `events` has none: its pivot columns depend on the data. */
   private[graft] lazy val zoneSchemas: Map[String, StructType] = {
-    def empty(schema: StructType) = spark.createDataFrame(java.util.List.of[Row](), schema)
-    val blocks = Flatteners.parseBlocks(empty(Flatteners.blockSchema))
-    val txs = empty(Flatteners.txSchema)
-    val landed = ("blocks" -> blocks.drop("ts")) +: Pipeline.txTables
-      .filter { case (t, _) => Pipeline.staticTables.contains(t) }
-      .map { case (t, parseF) => t -> enrich(parseF(txs), blocks) }
-    landed.map { case (t, df) =>
-      val data = df.schema.filterNot(f => Flatteners.partitionCols.contains(f.name))
+    def empty(kind: String) =
+      spark.createDataFrame(java.util.List.of[Row](), Pipeline.rawSchema(kind))
+    val blocks = Flatteners.parseBlocks(empty("blocks"))
+    Pipeline.staticTables.map { t =>
+      val landed = Pipeline.txTables.get(t)
+        .fold(blocks)(parseF => Flatteners.enrichTime(parseF(empty("txs")), blocks))
+      val data = landed.drop("ts").schema
+        .filterNot(f => Flatteners.partitionCols.contains(f.name))
       val parts = Flatteners.partitionCols.map(StructField(_, StringType))
       t -> StructType((data ++ parts).map(_.copy(nullable = true)))
     }.toMap
@@ -392,6 +312,17 @@ final class Pipeline(
 
   /** The blocks frame the time-enrichment joins: the parsed blocks zone
     * pruned to the tx batch's height span (pushed to the parquet scan).
+    *
+    * The zone, not just this batch's new block files: tx files can
+    * arrive in a later batch than their blocks (gap-fill, partial-failure
+    * replay), and a batch-local join would strand those rows with null
+    * day/month/year in the hive default partition. Where the zone
+    * doesn't exist yet (tx files before any blocks batch) it is empty,
+    * so tx rows land with null time columns — the documented
+    * late-blocks behavior — instead of failing the stage. It is NOT
+    * joined whole: blocks grow with chain height forever and enrichTime
+    * broadcasts its blocks side, so the span bounds the broadcast to the
+    * batch window and the height predicate prunes row groups.
     * Package-visible so PipelineSpec can audit the pruning. */
   private[graft] def enrichmentBlocks(txSpan: Option[(Long, Long)],
       zoneName: String = "blocks"): DataFrame = {
@@ -554,7 +485,7 @@ final class Pipeline(
     flow.count("chunks_planned", planned)
     flow.count("chunks_quarantined", bad)
     flow.count("heights_quarantined", ws.map(_.heightsQuarantined).sum)
-    if (Pipeline.fullyQuarantined(planned, bad))
+    if (planned > 0 && bad >= planned)
       throw new IllegalStateException(
         s"extract stage quarantined ALL $planned chunk(s) — node unreachable " +
           "or every count probe failed; heights are ledgered for gap-fill " +
@@ -564,7 +495,7 @@ final class Pipeline(
 
 object Pipeline {
   /** The tx-derived parsed tables in landing order, with their flatteners. */
-  private val txTables: Seq[(String, DataFrame => DataFrame)] = Seq(
+  private val txTables: SeqMap[String, DataFrame => DataFrame] = SeqMap(
     "tx_result" -> (Flatteners.parseTxResult(_)),
     "log_attributes" -> (Flatteners.parseLogAttributes(_)),
     "events" -> (Flatteners.parseEventsWide(_)))
@@ -572,24 +503,24 @@ object Pipeline {
   /** The parsed tables whose columns are fixed by their flattener. */
   val staticTables: Seq[String] = Seq("blocks", "tx_result", "log_attributes")
 
+  /** The row schema of a raw kind's items. */
+  private def rawSchema(kind: String): StructType =
+    if (kind == "blocks") Flatteners.blockSchema else Flatteners.txSchema
+
+  /** Where [[Pipeline.land]] writes: the batch parse appends to
+    * `<table>`; stream batch `id` overwrites `<table>_stream/batch=<id>`,
+    * so a replayed batch lands in place. */
+  private sealed trait Sink
+  private case object Append extends Sink
+  private final case class StreamBatch(id: Long) extends Sink
+
   /** Outcome of one raw-zone extract: the landed `{start}_{end}.json`
     * path plus quarantine accounting. A run with quarantined chunks is
     * still a "successful" write (the heights are ledgered for gap-fill),
     * so callers that need a loud signal — rather than log lines and
     * ledger growth — read the counts here. */
   final case class RawWrite(path: String, chunksPlanned: Int,
-      chunksQuarantined: Int, heightsQuarantined: Long) {
-    /** Every planned chunk quarantined — the fully-unreachable-node
-      * shape: zero output, everything ledgered. */
-    def fullyQuarantined: Boolean =
-      Pipeline.fullyQuarantined(chunksPlanned.toLong, chunksQuarantined.toLong)
-  }
-
-  /** THE definition of "fully quarantined" — shared by the per-write
-    * accessor above and the stage-level gate in noteExtracts, so the
-    * enforced predicate can't drift from the reported one. */
-  def fullyQuarantined(planned: Long, quarantined: Long): Boolean =
-    planned > 0 && quarantined >= planned
+      chunksQuarantined: Int, heightsQuarantined: Long)
 
   /** Inclusive height span covered by a batch of raw `{start}_{end}.json`
     * files — the filename contract writeRaw pins (extract.py:186-192).

@@ -85,6 +85,19 @@ class FlakyChainFetcher extends graft.sources.RpcFetcher {
     else inner.fetch(url)
 }
 
+/** A two-block chain whose block headers carry no height (malformed
+  * node rows); it serves no txs. */
+class HeightlessChainFetcher extends graft.sources.RpcFetcher {
+  override def fetch(url: String): String =
+    if (url.contains("abci_info"))
+      """{"result":{"response":{"last_block_height":"2"}}}"""
+    else if (url.contains("block_search")) {
+      def block(h: Int) =
+        s"""{"block":{"header":{"chain_id":"e2e-1","time":"2023-08-0${h}T00:00:00Z","proposer_address":"P$h"},"data":{"txs":[]}}}"""
+      s"""{"result":{"total_count":"2","blocks":[${block(1)},${block(2)}]}}"""
+    } else """{"result":{"total_count":"0","txs":[]}}"""
+}
+
 /** Paging-honest fake node (5 blocks, one tx at height 1) with a
   * "monster block" at height 4: until healed, ANY block page whose
   * served items would include height 4 fails — the count probe
@@ -175,7 +188,7 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     val dir = Files.createTempDirectory("graft-stream-sync").toString
     val p = new Pipeline(spark, dir, FakeNode.fetch)
     def sync(): Unit = {
-      val q = p.streamingSyncBlocks(classOf[FakeChainFetcher].getName,
+      val q = p.streamingSync("blocks", classOf[FakeChainFetcher].getName,
         startHeight = 1, chunk = 2, maxBlocksPerBatch = 2)
       q.awaitTermination()
     }
@@ -198,10 +211,10 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     val dir = Files.createTempDirectory("graft-stream-txs").toString
     val p = new Pipeline(spark, dir, FakeNode.fetch)
     // blocks stream first: the tx stream's time enrichment reads its zone
-    p.streamingSyncBlocks(classOf[FakeChainFetcher].getName,
+    p.streamingSync("blocks", classOf[FakeChainFetcher].getName,
       startHeight = 1, chunk = 2, maxBlocksPerBatch = 2).awaitTermination()
     def syncTxs(): Unit =
-      p.streamingSyncTxs(classOf[FakeChainFetcher].getName,
+      p.streamingSync("txs", classOf[FakeChainFetcher].getName,
         startHeight = 1, chunk = 2, maxBlocksPerBatch = 2).awaitTermination()
     syncTxs()
 
@@ -230,7 +243,7 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     // chunk, so the ledger is the ONLY record of the gap.
     val dir = Files.createTempDirectory("graft-stream-quar").toString
     val p = new Pipeline(spark, dir, FakeNode.fetch)
-    val q = p.streamingSyncBlocks(classOf[FlakyChainFetcher].getName,
+    val q = p.streamingSync("blocks", classOf[FlakyChainFetcher].getName,
       startHeight = 1, chunk = 2, maxBlocksPerBatch = 2)
     q.awaitTermination()
     val zone = spark.read.parquet(s"$dir/parsed/blocks_stream")
@@ -243,6 +256,47 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     assert(heights == (1L to 5L), s"zone heights: $heights")
     val ledger = graft.ingest.ErrorHeights.read(dir, "blocks")
     assert(ledger.toSet == Set(3L, 4L), s"ledger: $ledger")
+  }
+
+  test("streaming sync: rows without a key are not collapsed by the overlap dedup") {
+    // two distinct blocks, neither with header.height, in one batch: the
+    // dedup on height must pass null keys through, as the batch parse
+    // lands every such row
+    val dir = Files.createTempDirectory("graft-stream-nullkey").toString
+    val p = new Pipeline(spark, dir, FakeNode.fetch)
+    p.streamingSync("blocks", classOf[HeightlessChainFetcher].getName,
+      startHeight = 1, chunk = 2, maxBlocksPerBatch = 2).awaitTermination()
+    val zone = spark.read.parquet(s"$dir/parsed/blocks_stream")
+    val landed = zone.filter("height IS NULL").select("proposer_address")
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(landed == Seq("P1", "P2"), s"header-less blocks landed: $landed")
+  }
+
+  test("the batch parse and the streaming sync land the same rows") {
+    def pipeline(prefix: String) = {
+      val root = Files.createTempDirectory(prefix).toString
+      (root, new Pipeline(spark, root, FakeNode.fetch))
+    }
+    val (batchRoot, batch) = pipeline("graft-land-batch")
+    Seq("blocks", "txs").foreach(batch.extractRange(_, 1, 5))
+    batch.parse()
+    val (streamRoot, stream) = pipeline("graft-land-stream")
+    Seq("blocks", "txs").foreach(stream.streamingSync(_,
+      classOf[FakeChainFetcher].getName, startHeight = 1, chunk = 2,
+      maxBlocksPerBatch = 2).awaitTermination())
+    // the header line, then every row, columns sorted by name; events'
+    // pivot columns differ per batch, so footers are merged
+    def rows(zone: String): Seq[String] = {
+      val df = spark.read.option("mergeSchema", "true").parquet(zone).drop("batch")
+      val cols = df.columns.sorted
+      cols.mkString(",") +: df.select(cols.map(df.col): _*).collect().map(_.toString).sorted.toSeq
+    }
+    Seq("blocks", "tx_result", "log_attributes", "events").foreach { t =>
+      val landed = rows(s"$batchRoot/parsed/$t")
+      val streamed = rows(s"$streamRoot/parsed/${t}_stream")
+      assert(landed.size > 1 && landed == streamed,
+        s"$t\nbatch:  ${landed.mkString("\n        ")}\nstream: ${streamed.mkString("\n        ")}")
+    }
   }
 
   test("degrade-overlap duplicates never reach the raw zone") {

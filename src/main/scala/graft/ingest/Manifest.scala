@@ -48,7 +48,7 @@ final class Manifest(directory: String) {
   }
 
   /** Append names under `dataType` (parse.py:87-95). */
-  def record(names: Seq[String], dataType: String): Unit = {
+  def record(names: Seq[String], dataType: String): Unit = Manifest.lock.synchronized {
     val cur = load()
     save(cur + (dataType -> (cur.getOrElse(dataType, Nil) ++ names)))
   }
@@ -58,7 +58,7 @@ final class Manifest(directory: String) {
     * one (only possible when the recorded parse landed nothing for the
     * refetched heights), forgetting the name makes the next parse()
     * consume the overwritten content. */
-  def forget(names: Seq[String], dataType: String): Unit = {
+  def forget(names: Seq[String], dataType: String): Unit = Manifest.lock.synchronized {
     val drop = names.toSet
     val cur = load()
     // also clear any "<dataType>:<table>" sub-keys (the parse stage's
@@ -89,4 +89,12 @@ final class Manifest(directory: String) {
     catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
       Files.move(tmp, path, StandardCopyOption.REPLACE_EXISTING) }
   }
+}
+
+object Manifest {
+  /** Serializes every read-modify-write of a manifest file in this JVM:
+    * the tx tables land concurrently and each records its own key right
+    * after its write, so two unserialized updates could each rewrite
+    * the file from the same read and lose the other's key. */
+  private val lock = new Object
 }

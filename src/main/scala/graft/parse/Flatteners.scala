@@ -1,9 +1,10 @@
 package graft.parse
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Encoders, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's parse stage (bread parse.py) as pure
   * `DataFrame => DataFrame` flatteners over raw Tendermint JSON.
@@ -23,9 +24,11 @@ import org.apache.spark.sql.types._
   * Scale notes: every flattener is narrow (project/explode) until the
   * time-enrichment join, whose blocks side is per-batch small and
   * broadcast (parse.py:219-221 analog); the events pivot's column set is
-  * resolved by a distinct scan over `combined_key` exactly like pandas'
-  * data-dependent pivot (parse.py:177-179). Writes are hive-partitioned
-  * by year/month/day so downstream scans prune partitions for free.
+  * the batch's observed `combined_key`s, collected by one single-stage
+  * job, like pandas' data-dependent pivot (parse.py:177-179), and its
+  * occurrence window and pivot aggregate share one shuffle. Writes are
+  * hive-partitioned by year/month/day so downstream scans prune
+  * partitions for free.
   */
 object Flatteners {
 
@@ -123,7 +126,21 @@ object Flatteners {
     * ordinal in (event, attribute) position order — the deterministic
     * analog of pandas cumcount (parse.py:178). */
   def parseEventsLong(raw: DataFrame): DataFrame = {
-    val exploded = raw
+    val order = Window
+      .partitionBy("hash", "height", "combined_key")
+      .orderBy("event_pos", "attr_pos")
+    // clustered on (hash, height): that one shuffle satisfies both the
+    // window's and the wide pivot's (hash, height, occurrence) grouping
+    eventAttributes(raw)
+      .repartition(col("hash"), col("height"))
+      .withColumn("occurrence", (row_number().over(order) - 1).cast(LongType))
+      .select("hash", "height", "occurrence", "combined_key", "value")
+  }
+
+  /** The decoded event attributes with their positions, before any
+    * shuffle: the rows [[parseEventsLong]] numbers. */
+  private def eventAttributes(raw: DataFrame): DataFrame =
+    raw
       .select(col("hash"), col("height").cast(LongType).as("height"),
         posexplode(col("tx_result.events")))
       .withColumnsRenamed(Map("pos" -> "event_pos", "col" -> "event"))
@@ -136,31 +153,42 @@ object Flatteners {
         decode(unbase64(col("attr.key")), "UTF-8").as("key"),
         decode(unbase64(col("attr.value")), "UTF-8").as("value"))
       .withColumn("combined_key", concat_ws("_", col("type"), col("key")))
-    val order = Window
-      .partitionBy("hash", "height", "combined_key")
-      .orderBy("event_pos", "attr_pos")
-    exploded
-      .withColumn("occurrence", (row_number().over(order) - 1).cast(LongType))
-      .select("hash", "height", "occurrence", "combined_key", "value")
-  }
 
   /** events wide table: dynamic pivot on observed `combined_key`s
     * (parse.py:179). Column set is data-dependent, same as pandas;
     * batches pivot independently and the read-side `mergeSchema` union
     * reproduces the reference's concat of differently-shaped wide
-    * frames. DIVERGENCE #8 (DIVERGENCES.md): pandas widens unboundedly,
-    * Spark's pivot distinct-scan fails loudly past
-    * `spark.sql.pivotMaxValues` (default 10k) — a type_key explosion
+    * frames.
+    *
+    * The keys come from one single-stage job (each task's distinct
+    * keys, merged on the driver) and are sorted in Spark's string order
+    * (UTF-8 bytes), so the columns are those, in the order, that
+    * `pivot("combined_key")` would resolve with its own multi-job
+    * distinct scan. DIVERGENCE #8 (DIVERGENCES.md): pandas widens
+    * unboundedly, this fails loudly past `spark.sql.pivotMaxValues`
+    * (default 10k) with Spark's own pivot error — a type_key explosion
     * becomes an analysis error, not an unusably wide table. */
-  def parseEventsWide(raw: DataFrame): DataFrame =
+  def parseEventsWide(raw: DataFrame): DataFrame = {
+    val maxValues = raw.sparkSession.conf.get(pivotMaxValues).toInt
+    val keys = eventAttributes(raw).select("combined_key").as(Encoders.STRING)
+      .mapPartitions((it: Iterator[String]) => it.toSet.iterator)(Encoders.STRING)
+      .collect().distinct
+    if (keys.length > maxValues)
+      throw new AnalysisException("_LEGACY_ERROR_TEMP_1324", Map(
+        "pivotColumn" -> "combined_key", "maxValues" -> maxValues.toString,
+        "config" -> pivotMaxValues))
+    val sorted = keys.map(UTF8String.fromString).sortWith(_.binaryCompare(_) < 0).map(_.toString)
     parseEventsLong(raw)
       .groupBy("hash", "height", "occurrence")
-      .pivot("combined_key")
+      .pivot("combined_key", sorted.toSeq)
       .agg(first("value"))
+  }
+
+  private val pivotMaxValues = "spark.sql.pivotMaxValues"
 
   /** Time-enrichment join (parse.py:219-221): pull ts/day/month/year from
     * blocks by height. The blocks side must be BOUNDED by the caller
-    * (Pipeline.land prunes it to the batch's height span) — then it is
+    * (Pipeline.landTxs prunes it to the batch's height span) — then it is
     * per-batch small → broadcast and the fact side never shuffles. Pass
     * `hintBroadcast = false` when no bound is known and AQE should pick
     * the strategy from the real size. */

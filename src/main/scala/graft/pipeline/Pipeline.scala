@@ -1,9 +1,11 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ExecutionException, Executors}
 
 import scala.collection.immutable.SeqMap
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, explode, from_json, to_timestamp}
@@ -134,8 +136,9 @@ final class Pipeline(
     * kind: `readStream.format("tendermint-rpc")` (offsets = block
     * heights, checkpointed — metadata.json retired) → page envelopes →
     * the kind's flatteners → the `<table>_stream` zones, through the
-    * same [[land]] the batch parse uses. `blocks` lands the blocks
-    * table; `txs` lands every tx table, time-enriched against the
+    * same [[landBlocks]] and [[landTxs]] the batch parse uses. `blocks`
+    * lands the blocks table; `txs` lands every tx table from one
+    * persisted, deduped raw frame, time-enriched against the
     * `blocks_stream` zone, so sync blocks first. Trigger.AvailableNow
     * drains to the tip pinned at start and stops, so each invocation
     * behaves like one `make pipeline` run with streaming's bookkeeping.
@@ -151,9 +154,9 @@ final class Pipeline(
     * works unchanged. */
   def streamingSync(kind: String, fetcherClass: String, startHeight: Long = 1L,
       chunk: Long = 1000L, maxBlocksPerBatch: Long = 10000L): StreamingQuery = {
-    val (key, tables) = kind match {
-      case "blocks" => (col("block.header.height"), Seq("blocks"))
-      case "txs"    => (col("hash"), Pipeline.txTables.keys.toSeq)
+    val key = kind match {
+      case "blocks" => col("block.header.height")
+      case "txs"    => col("hash")
     }
     val envelope = StructType(Seq(StructField("result", StructType(Seq(
       StructField(kind, ArrayType(Pipeline.rawSchema(kind))))))))
@@ -195,7 +198,9 @@ final class Pipeline(
           // dropDuplicates treats nulls as equal and would collapse them
           val raw = items.filter(col("__key").isNotNull).dropDuplicates("__key")
             .unionByName(items.filter(col("__key").isNull)).drop("__key")
-          tables.foreach(land(_, raw, span, Pipeline.StreamBatch(batchId)))
+          val sink = Pipeline.StreamBatch(batchId)
+          if (kind == "blocks") landBlocks(raw, sink)
+          else landTxs(raw, Pipeline.txTables.keys.toSeq, span, sink)(_ => ())
         } finally pages.unpersist()
       }
       .start()
@@ -225,7 +230,7 @@ final class Pipeline(
 
     val blockFiles = newFiles("blocks")
     if (blockFiles.nonEmpty) {
-      land("blocks", read("blocks", blockFiles), None, Pipeline.Append)
+      landBlocks(read("blocks", blockFiles), Pipeline.Append)
       // record immediately after a successful write: a crash between
       // table writes must not leave files half-recorded
       manifest.record(blockFiles, "blocks")
@@ -234,53 +239,76 @@ final class Pipeline(
     val txFiles = newFiles("txs")
     if (txFiles.nonEmpty) {
       // The tx batch's height span is free from the raw filenames
-      // (`{start}_{end}.json`); land prunes the enrichment's blocks
+      // (`{start}_{end}.json`); landTxs prunes the enrichment's blocks
       // side to it (see enrichmentBlocks).
       val span = Pipeline.fileHeightSpan(txFiles)
       // per-TABLE manifest keys ("txs:<table>") make the three appends
       // retry-idempotent as a group: Flow retries parse() whole, and
-      // with one umbrella record after all three writes, a crash
+      // with one umbrella record after all three writes, a failure
       // between the first land and the record would re-append the
       // already-landed tables. Each table records right after its own
       // write, so a retry resumes exactly the tables that didn't
-      // finish; the legacy umbrella "txs" record (kept for the
-      // manifest's what-is-parsed surface and old manifests) lands
-      // only after all three.
-      Pipeline.txTables.keys.foreach { table =>
-        val pending = manifest.newFiles(txFiles, s"txs:$table")
-        if (pending.nonEmpty) {
-          land(table, read("txs", pending), span, Pipeline.Append)
-          manifest.record(pending, s"txs:$table")
-        }
+      // finish — normally all three share one pending set and one
+      // read; a resumed retry reads once per distinct set. The legacy
+      // umbrella "txs" record (kept for the manifest's what-is-parsed
+      // surface and old manifests) lands only after all three.
+      val pending = Pipeline.txTables.keys.toSeq
+        .map(t => t -> manifest.newFiles(txFiles, s"txs:$t")).filter(_._2.nonEmpty)
+      pending.map(_._2).distinct.foreach { files =>
+        val tables = pending.collect { case (t, `files`) => t }
+        landTxs(read("txs", files), tables, span, Pipeline.Append)(t =>
+          manifest.record(files, s"txs:$t"))
       }
       manifest.record(txFiles, "txs")
     }
   }
 
-  /** The one writer of the parsed zone: flatten `raw` as `table`, and
-    * for a tx table time-enrich it against the blocks zone of the same
-    * sink pruned to `span`, then write it hive-partitioned into the
-    * sink. The batch parse appends to `<table>`; a stream batch
-    * overwrites `<table>_stream/batch=<id>`. */
-  private def land(table: String, raw: DataFrame, span: Option[(Long, Long)],
-      sink: Pipeline.Sink): Unit = {
-    val (suffix, dir, mode) = sink match {
-      case Pipeline.Append => ("", table, SaveMode.Append)
-      case Pipeline.StreamBatch(id) =>
-        ("_stream", s"${table}_stream/batch=$id", SaveMode.Overwrite)
-    }
-    val flat = Pipeline.txTables.get(table).fold(Flatteners.parseBlocks(raw)) { parseF =>
+  /** The blocks table from its raw items, into `sink`. */
+  private def landBlocks(raw: DataFrame, sink: Pipeline.Sink): Unit =
+    write("blocks", Flatteners.parseBlocks(raw), sink)
+
+  /** Land one raw tx batch as `tables`: the raw frame is persisted once
+    * and every table flattens from it, time-enriched against one blocks
+    * frame (the sink's blocks zone pruned to `span`). The tables land
+    * concurrently, one thread each, and `landed(table)` runs right after
+    * that table's own write. Waits for every table, then rethrows the
+    * first failure's own cause; the tables that landed stay landed.
+    *
+    * The pool is made here, per call: its threads inherit the caller's
+    * Spark local properties (the stage's job description) when they
+    * start, and end with the call. */
+  private def landTxs(raw: DataFrame, tables: Seq[String], span: Option[(Long, Long)],
+      sink: Pipeline.Sink)(landed: String => Unit): Unit = {
+    val cached = raw.persist()
+    try {
       // an unbounded span (a foreign file name in the raw dir) joins the
       // whole blocks zone: no broadcast hint, AQE picks the strategy
       // from the real size
-      Flatteners.enrichTime(parseF(raw), enrichmentBlocks(span, s"blocks$suffix"),
-        hintBroadcast = span.isDefined)
-    }
-    Flatteners.writePartitioned(flat.drop("ts"), s"$parsedRoot/$dir", mode)
+      val blocks = enrichmentBlocks(span, s"blocks${sink.suffix}")
+      val pool = Executors.newFixedThreadPool(tables.size)
+      val failures = try tables.map { t =>
+        pool.submit[Unit] { () =>
+          val flat = Pipeline.txTables(t)(cached)
+          write(t, Flatteners.enrichTime(flat, blocks, hintBroadcast = span.isDefined), sink)
+          landed(t)
+        }
+      }.flatMap(w => Try(w.get()).failed.toOption)
+      finally pool.shutdown()
+      failures.headOption.foreach {
+        case e: ExecutionException => throw e.getCause
+        case e                     => throw e
+      }
+    } finally cached.unpersist()
   }
 
+  /** The one writer of the parsed zone: `flat` hive-partitioned into the
+    * sink's dir for `table`. The batch parse appends to `<table>`; a
+    * stream batch overwrites `<table>_stream/batch=<id>`. */
+  private def write(table: String, flat: DataFrame, sink: Pipeline.Sink): Unit =
+    Flatteners.writePartitioned(flat.drop("ts"), s"$parsedRoot/${sink.dir(table)}", sink.mode)
+
   /** The schema each static parsed table reads back with: the frame
-    * [[land]] writes, hive partition columns last, as strings (partition
+    * [[write]] lands, hive partition columns last, as strings (partition
     * type inference is off). Derived by analysing the flatteners over
     * empty frames, so reading a zone needs no footer-inference job.
     * `events` has none: its pivot columns depend on the data. */
@@ -507,12 +535,17 @@ object Pipeline {
   private def rawSchema(kind: String): StructType =
     if (kind == "blocks") Flatteners.blockSchema else Flatteners.txSchema
 
-  /** Where [[Pipeline.land]] writes: the batch parse appends to
+  /** Where the parsed tables land: the batch parse appends to
     * `<table>`; stream batch `id` overwrites `<table>_stream/batch=<id>`,
-    * so a replayed batch lands in place. */
-  private sealed trait Sink
-  private case object Append extends Sink
-  private final case class StreamBatch(id: Long) extends Sink
+    * so a replayed batch lands in place. A tx table enriches against
+    * the blocks zone with the same `suffix`. */
+  private sealed abstract class Sink(val suffix: String, val mode: SaveMode) {
+    def dir(table: String): String = s"$table$suffix"
+  }
+  private case object Append extends Sink("", SaveMode.Append)
+  private final case class StreamBatch(id: Long) extends Sink("_stream", SaveMode.Overwrite) {
+    override def dir(table: String): String = s"${table}_stream/batch=$id"
+  }
 
   /** Outcome of one raw-zone extract: the landed `{start}_{end}.json`
     * path plus quarantine accounting. A run with quarantined chunks is

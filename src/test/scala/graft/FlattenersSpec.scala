@@ -161,6 +161,57 @@ class FlattenersSpec extends AnyFunSuite with SparkSpec {
     assert(Flatteners.parseEventsWide(raw).columns.length == 3 + 5)
   }
 
+  test("parseEventsWide equals Spark's own pivot: columns in order, rows") {
+    import spark.implicits._
+    // Spark's pivot("combined_key") resolves the same column set by its
+    // own distinct scan and sorts it in UTF-8 byte order: "t_Ａ" (U+FF21,
+    // EF BC A1) before "t_😀" (F0 9F 98 80), the reverse of their UTF-16
+    // order, so a JVM string sort would misorder the columns
+    def tx(hash: String, keys: String*): String = {
+      val attrs = keys.map(k => s"""{"key":"${b64(k)}","value":"${b64(s"$hash-$k")}"}""")
+      s"""{"hash":"$hash","height":"7","tx_result":{"code":0,"log":"","info":"","gas_wanted":"1","gas_used":"1","codespace":"",""" +
+        s""""events":[{"type":"t","attributes":[${attrs.mkString(",")}]}]}}"""
+    }
+    val wideKeys = spark.read.schema(Flatteners.txSchema)
+      .json(Seq(tx("U1", "😀", "Ａ", "a"), tx("U2", "Ａ", "Ａ")).toDS())
+    val noEvents = rawTxs.filter(col("hash") === "H2")
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    Seq(rawTxs, wideKeys, noEvents).foreach { raw =>
+      val mine = Flatteners.parseEventsWide(raw)
+      val reference = Flatteners.parseEventsLong(raw)
+        .groupBy("hash", "height", "occurrence").pivot("combined_key").agg(first("value"))
+      assert(mine.columns.toSeq == reference.columns.toSeq)
+      assert(mine.schema == reference.schema)
+      assert(rows(mine) == rows(reference))
+    }
+    assert(Flatteners.parseEventsWide(wideKeys).columns.toSeq ==
+      Seq("hash", "height", "occurrence", "t_a", "t_Ａ", "t_😀"))
+    assert(Flatteners.parseEventsWide(noEvents).count() == 0)
+  }
+
+  test("the events window and pivot aggregate share one (hash, height) shuffle") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val plan = Flatteners.parseEventsWide(rawTxs).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val shuffles = plan.collect { case s: ShuffleExchangeExec => s }
+    assert(shuffles.size == 1, plan.treeString)
+    val keys = shuffles.head.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.collect { case a: AttributeReference => a.name }
+      case other => fail(s"not a hash shuffle: $other")
+    }
+    assert(keys == Seq("hash", "height"), plan.treeString)
+    // the shuffle sits below the pivot aggregate, with no aggregate under it
+    assert(shuffles.head.collect { case a: BaseAggregateExec => a }.isEmpty, plan.treeString)
+    assert(plan.collect { case a: BaseAggregateExec => a }
+      .exists(_.collect { case s: ShuffleExchangeExec => s }.nonEmpty), plan.treeString)
+  }
+
   test("enrichTime + partitioned write/read roundtrip (parse.py:182-226)") {
     val blocks = Flatteners.parseBlocks(rawBlocks)
     val enriched = Flatteners.enrichTime(Flatteners.parseTxResult(rawTxs), blocks)

@@ -57,6 +57,26 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
     assert(m.load()("blocks") == Seq("100_200.json", "200_300.json"))
   }
 
+  test("manifest: concurrent records of different keys all survive") {
+    // the tx tables land concurrently and each records its own key right
+    // after its write; an unserialized read-modify-write loses keys
+    (1 to 20).foreach { round =>
+      val dir = tempDir()
+      val start = new java.util.concurrent.CyclicBarrier(3)
+      val threads = (1 to 3).map { i =>
+        new Thread(() => {
+          start.await()
+          new Manifest(dir).record(Seq(s"f$i.json"), s"txs:t$i")
+        })
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+      val m = new Manifest(dir).load()
+      assert((1 to 3).forall(i => m.get(s"txs:t$i").contains(Seq(s"f$i.json"))),
+        s"round $round lost a key: $m")
+    }
+  }
+
   // --- chain client envelope parsing (extract.py:498-514, 72-78) ---
 
   test("tip / chain floor / total_count envelope parsing") {

@@ -7,7 +7,7 @@ import java.util.Base64
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.models.{BreadModels, Model}
@@ -395,6 +395,90 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     assert(la > 0)
     // umbrella recorded: a third parse is a no-op
     assert(m.newFiles(Seq(newFile), "txs").isEmpty)
+  }
+
+  test("a failed tx table: parse rethrows its cause, the others land, a retry lands only it") {
+    def counts(root: String): Seq[Long] =
+      Seq("tx_result", "log_attributes", "events").map(t => spark.read.parquet(s"$root/parsed/$t").count())
+    val clean = Files.createTempDirectory("graft-land-clean").toString
+    val ok = new Pipeline(spark, clean, FakeNode.fetch)
+    Seq("blocks", "txs").foreach(ok.extractRange(_, 1, 5))
+    ok.parse()
+
+    val root = Files.createTempDirectory("graft-land-fail").toString
+    val pipe = new Pipeline(spark, root, FakeNode.fetch)
+    Seq("blocks", "txs").foreach(pipe.extractRange(_, 1, 5))
+    // a regular file where the log_attributes zone must go: its write fails
+    val obstruction = Paths.get(root, "parsed", "log_attributes")
+    Files.createDirectories(obstruction.getParent)
+    Files.writeString(obstruction, "not a directory")
+    val e = intercept[Throwable](pipe.parse())
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e)
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("log_attributes")), e)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    val m = new graft.ingest.Manifest(s"$root/parsed")
+    assert(m.newFiles(Seq("1_5.json"), "txs:tx_result").isEmpty)
+    assert(m.newFiles(Seq("1_5.json"), "txs:events").isEmpty)
+    assert(m.newFiles(Seq("1_5.json"), "txs:log_attributes") == Seq("1_5.json"))
+    assert(m.newFiles(Seq("1_5.json"), "txs") == Seq("1_5.json"))
+
+    Files.delete(obstruction)
+    pipe.parse()
+    assert(counts(root) == counts(clean))
+    assert(m.newFiles(Seq("1_5.json"), "txs").isEmpty)
+  }
+
+  test("the batch parse reads the raw tx JSON once per pending file set") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // raw tx scans the executions ran: a file scan in a plan runs once
+    // per execution; one inside a cached relation runs once per cache
+    val direct = new java.util.concurrent.atomic.AtomicInteger(0)
+    val caches = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+    var txDir = ""
+    def readsTxs(f: FileSourceScanExec): Boolean =
+      f.relation.location.rootPaths.exists(_.toString.contains(txDir))
+    def count(p: SparkPlan): Unit = p match {
+      case f: FileSourceScanExec => if (readsTxs(f)) direct.incrementAndGet()
+      case i: InMemoryTableScanExec =>
+        if (i.relation.cachedPlan.exists { case f: FileSourceScanExec => readsTxs(f); case _ => false })
+          caches.add(i.relation.cacheBuilder)
+      case a: AdaptiveSparkPlanExec => count(a.executedPlan)
+      case s: QueryStageExec => count(s.plan)
+      case other => other.children.foreach(count)
+    }
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = count(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = count(qe.executedPlan)
+    }
+    def scans(body: => Unit): Int = {
+      direct.set(0); caches.clear()
+      GraftBridge.waitForListenerBus(spark)
+      spark.listenerManager.register(listener)
+      try { body; GraftBridge.waitForListenerBus(spark) }
+      finally spark.listenerManager.unregister(listener)
+      direct.get + caches.size
+    }
+    def pipeline(prefix: String): (String, Pipeline) = {
+      val root = Files.createTempDirectory(prefix).toString
+      txDir = s"$root/rpc/txs"
+      (root, new Pipeline(spark, root, FakeNode.fetch))
+    }
+    val (_, clean) = pipeline("graft-land-once")
+    Seq("blocks", "txs").foreach(clean.extractRange(_, 1, 5))
+    assert(scans(clean.parse()) == 1)
+    // a resumed retry: tx_result already landed 1_3, the other two
+    // tables landed neither file, so two pending sets and two reads
+    // (both non-empty: AQE would drop an empty cached relation's scan)
+    val (root, resumed) = pipeline("graft-land-twice")
+    resumed.extractRange("blocks", 1, 5)
+    resumed.extractRange("txs", 1, 3)
+    resumed.extractRange("txs", 4, 5)
+    new graft.ingest.Manifest(s"$root/parsed").record(Seq("1_3.json"), "txs:tx_result")
+    assert(scans(resumed.parse()) == 2)
   }
 
   test("time-enrichment blocks side is pruned to the tx batch's height span") {

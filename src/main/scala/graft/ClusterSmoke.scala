@@ -77,7 +77,7 @@ object ClusterSmoke {
     val docSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
-    val src = graft.streaming.EventStream.jsonFileStream(spark, in, docSchema)
+    val src = spark.readStream.schema(docSchema).json(in)
     val state = s"file:$root/state"
     graft.streaming.EventStream
       .streamingCurate(src, state, s"$root/out", s"$root/chk")

@@ -127,8 +127,8 @@ object Fetch {
     * "Unparseable" is checked HERE, not left to the sink: a node/proxy
     * that answers 200 with a truncated or HTML body must trigger the
     * degrade exactly like a thrown fetch — counting it as a good page
-    * would advance past items that never landed (silent loss in the
-    * streaming path, a crashed parse in the batch path).
+    * would advance past items that never landed (a crashed parse when
+    * the raw zone is read).
     *
     * Progress is tracked as the index of the first UNFETCHED item; after
     * a success on page p the next index is `p * per_page` (what the page
@@ -183,9 +183,8 @@ object Fetch {
           // quarantine exactly it (the row's page/perPage pin the item
           // index for ACCOUNTING — q199's oracle counts these) and keep
           // fetching; per_page stays 1. Whether the chunk's good pages
-          // LAND is the sink's contract, not this fetcher's: the
-          // streaming path (EventStream) lands them row-wise, while the
-          // batch raw zone (Pipeline.writeRaw) is deliberately
+          // LAND is the sink's contract, not this fetcher's: the raw
+          // zone (Pipeline.writeRaw) is deliberately
           // all-or-nothing per chunk — the poison item's HEIGHT is
           // unknowable (its body is what failed to parse), so landing
           // partials would let a multi-item height that straddles a

@@ -88,11 +88,9 @@ final class WatermarkStore(directory: String) {
   * pipelines/pipeline.py:99-109). Missing file → empty.
   *
   * The ledger is a SET of heights, so both ends dedup: `append` skips
-  * heights already present (a streaming micro-batch replayed after a
-  * crash between ledger append and offset commit re-appends the same
-  * heights — idempotence here is what makes the foreachBatch sink
-  * exactly-once end to end), and `read` returns distinct values (repairs
-  * ledgers written before this invariant held). */
+  * heights already present (a retried extract or a restored gap-fill
+  * claim re-appends the same heights), and `read` returns distinct
+  * values (repairs ledgers written before this invariant held). */
 object ErrorHeights {
   // the kind-less file keeps the reference's exact layout (its extractor
   // only tracked tx heights); the pipeline uses PER-KIND ledgers
@@ -118,11 +116,11 @@ object ErrorHeights {
       .map(_.trim).filter(_.nonEmpty).map(_.toLong).distinct
   }
 
-  // append is a read-modify-write: serialize it within the JVM — the
-  // blocks and txs streaming queries run their foreachBatch bodies on
-  // concurrent driver threads and share one ledger. (foreachBatch always
-  // executes on the driver, so a JVM lock is sufficient; multiple driver
-  // PROCESSES writing one ledger are out of contract.)
+  // append is a read-modify-write: serialize it within the JVM, so
+  // concurrent driver threads sharing one ledger never lose each
+  // other's heights. Appends run on the driver only, so a JVM lock is
+  // sufficient; multiple driver PROCESSES writing one ledger are out of
+  // contract.
   def append(directory: String, heights: Seq[Long]): Unit =
     appendTo(path(directory, None), heights)
   def append(directory: String, kind: String, heights: Seq[Long]): Unit =

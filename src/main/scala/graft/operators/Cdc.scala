@@ -114,12 +114,9 @@ object Cdc {
           .otherwise("unchanged").as("status"))
   }
 
-  /** Replay-safe versioned sink for batch CDC outputs — the
-    * `batch=<id>` overwrite pattern of the streaming sinks
-    * (EventStream.runForeachBatchIdempotent, Pipeline.streamingSync)
-    * generalized to batch jobs, so upsert/compaction results are
-    * idempotent under orchestration retries WITHOUT a transactional
-    * table format: each run writes its whole result under
+  /** Replay-safe versioned sink for batch CDC outputs, so
+    * upsert/compaction results are idempotent under orchestration
+    * retries WITHOUT a transactional table format: each run writes its whole result under
     * `path/v=<version>` with overwrite semantics, so a re-run of the
     * same version lands in place (run twice ≡ run once) and a
     * half-written crash victim is simply overwritten by the retry.
@@ -135,9 +132,9 @@ object Cdc {
   def writeVersioned(df: DataFrame, path: String, version: Long,
       force: Boolean = false): String = {
     val dir = s"$path/v=$version"
-    // committed-version guard (the streaming sinks' replay rule): a
-    // version that already carries its _SUCCESS marker is NOT
-    // rewritten — deterministic replay means run-twice ≡ run-once, and
+    // committed-version guard: a version that already carries its
+    // _SUCCESS marker is NOT rewritten — deterministic replay means
+    // run-twice ≡ run-once, and
     // skipping also keeps an orchestration retry from deleting the
     // CURRENT latest version out from under a concurrent reader
     // (overwrite drops the directory before rewriting it). A

@@ -236,66 +236,6 @@ object CorpusPipeline {
       .drop("__fp")
       .write.mode("overwrite").partitionBy("shard").parquet(outDir)
 
-  /** The append form of [[shardNoveltySketch]]: fold ONE new batch into
-    * a stored novelty state (a single-row frame holding the running HLL
-    * union of every gram seen, plus exact counters) and report how much
-    * genuinely new content the batch brought. This is the state an
-    * ingest loop checkpoints between batches — KB-sized, parquet-
-    * serializable (the sketch rides as a binary column), mergeable —
-    * where exact first-seen tracking would persist the gram mass
-    * itself. Pass `state = None` for the first batch.
-    *
-    * Returns (newState, report). The report carries the batch's exact
-    * distinct-gram count alongside the sketch-estimated novelty
-    * (est_new = est_union_after - est_union_before) and the running
-    * total estimate; estimates are engine-specific (and Datasketches'
-    * HIP estimator is merge-order dependent, so re-evaluating the same
-    * union in another job can drift by a few counts), so this operator
-    * is spec-verified against the exact path under the q188 error
-    * bound rather than oracle-hashed. One gram scan per batch + 1-row
-    * unions — cost is batch-proportional by construction. */
-  /** THE novelty gram stream — one definition shared by
-    * [[noveltyAppend]] and the streaming monitor's replay path
-    * (EventStream.streamingNovelty), so the two can never silently
-    * diverge on the tokenizer/shingle/hash rule: tokenized on single
-    * spaces, docs shorter than `n` tokens dropped, n-gram shingles,
-    * md5 per gram, one row per gram occurrence (column `g`). */
-  private[graft] def gramHashes(batch: DataFrame, text: String,
-      n: Int): DataFrame =
-    batch.select(split(col(text), " ").as("__toks"))
-      .filter(size(col("__toks")) >= n)
-      .select(explode(transform(Dedup.shingles("__toks", n), g => md5(g))).as("g"))
-
-  def noveltyAppend(state: Option[DataFrame], batch: DataFrame,
-      id: String, text: String, n: Int = 4, lgK: Int = 16)
-      : (DataFrame, DataFrame) = {
-    require(n > 0)
-    val bsk = gramHashes(batch, text, n).agg(
-      hll_sketch_agg(col("g"), lit(lgK)).as("bsk"),
-      count_distinct(col("g")).as("batch_grams"))
-    val merged = state match {
-      case Some(st) => bsk.crossJoin(
-          st.select(col("sk").as("psk"), col("n_batches"), col("est_total").as("est_prev")))
-        .select(hll_union(col("psk"), col("bsk")).as("sk"),
-          col("batch_grams"), (col("n_batches") + 1).as("n_batches"),
-          col("est_prev"))
-      case None => bsk
-        .select(col("bsk").as("sk"), col("batch_grams"),
-          lit(1L).as("n_batches"), lit(0.0).as("est_prev"))
-    }
-    // hll_sketch_estimate returns LONG; keep the running totals double
-    // so batch-over-batch differences stay double-typed
-    val scored = merged.select(col("sk"), col("batch_grams"), col("n_batches"),
-      col("est_prev"),
-      hll_sketch_estimate(col("sk")).cast("double").as("est_total"))
-    val newState = scored.select("sk", "n_batches", "est_total")
-    val report = scored.select(
-      col("n_batches").as("batch_seq"), col("batch_grams"),
-      round(col("est_total") - col("est_prev"), 1).as("est_new"),
-      round(col("est_total"), 1).as("est_total"))
-    (newState, report)
-  }
-
   /** Leak-proof train/test split assignment — the q179/q180 leakage
     * arc closed at the SOURCE: instead of splitting documents by their
     * own content hash (which lets near-duplicates straddle the split),
@@ -620,10 +560,8 @@ object CorpusPipeline {
     * highest batch (fully deterministic for ANY payload schema: within
     * a batch, ties order by the remaining columns — though a
     * well-formed ledger writes one row per doc per batch).
-    * Keep-latest, like the state compactor
-    * [[graft.streaming.EventStream.compactCurateState]] folds version
-    * deltas — run it in the same maintenance window and the ledger's
-    * storage stops growing with audit history.
+    * Run it in a maintenance window and the ledger's storage stops
+    * growing with audit history.
     *
     * Scale shape: one shuffle keyed on `id`, a per-doc window over
     * ledger rows (rows per doc = number of audits that touched it —

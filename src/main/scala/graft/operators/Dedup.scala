@@ -533,10 +533,10 @@ object Dedup {
     * least-first) — the durable, crash-convergent form of
     * [[incrementalLshPairs]]. Banding parameters are read from the
     * store's own stamp, never the caller. The batch is anti-joined
-    * against the stored ids first (the `ivfIndexAbsorb` guard), so a
-    * replayed append — a client retry, a crash after the data landed —
-    * appends ZERO rows and returns zero pairs instead of duplicating
-    * index state; persist the returned pairs before relying on replay.
+    * against the stored ids first, so a replayed append — a client
+    * retry, a crash after the data landed — appends ZERO rows and
+    * returns zero pairs instead of duplicating index state; persist the
+    * returned pairs before relying on replay.
     *
     * Cost per append: the batch's signature pass + a FILE-PRUNED stored
     * -id lookup for the replay guard (the batch ids' own id-buckets
@@ -566,15 +566,11 @@ object Dedup {
 
   /** [[lshIndexAppend]]'s core over an ALREADY-INDEXED batch — (id, mh,
     * hs) rows in [[indexDocs]] shape under the STORE's own parameters.
-    * This is the face the staged-streaming path feeds
-    * ([[lshIndexAbsorb]]): the stage persisted the batch's index rows
-    * anyway, so re-running the signature kernel here would double the
-    * per-batch CPU (the [[incrementalLshPairsIndexed]] rationale,
-    * durable twin). A batch whose signature length disagrees with the
-    * store's stamped `k` refuses in-plan — banding a drifted signature
-    * would silently miss every collision past the shorter length. All
+    * A batch whose signature length disagrees with the store's stamped
+    * `k` refuses in-plan — banding a drifted signature would silently
+    * miss every collision past the shorter length. All
     * ordering/crash/replay guarantees are [[lshIndexAppend]]'s. */
-  def lshIndexAppendIndexed(spark: org.apache.spark.sql.SparkSession,
+  private def lshIndexAppendIndexed(spark: org.apache.spark.sql.SparkSession,
       table: String, newIndex: DataFrame, id: String,
       threshold: Double = 0.5,
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
@@ -770,42 +766,11 @@ object Dedup {
     org.apache.spark.sql.GraftBridge.rebind(spark, pairs)
   }
 
-  /** The store stamps a staged LSH batch's rows depend on: the
-    * signature kernel's (n, k). See [[StagedBatches]]. */
-  private[graft] val LshStageKeys = Seq("graft.lsh_n", "graft.lsh_k")
-
-  /** Fold staged streaming batches (EventStream.streamingLshStage's
-    * `stageDir/batch=<n>` dirs of pre-indexed (id, mh, hs) rows) into a
-    * durable [[lshBuildIndex]] store — the LSH twin of
-    * `Similarity.ivfIndexAbsorb`, sharing its exactly-once argument:
-    * staged rows are anti-joined against the stored ids inside
-    * [[lshIndexAppendIndexed]], so a crash between the append and the
-    * cleanup, a replayed absorb, or a half-deleted stage can never
-    * duplicate index rows — and the pair LEDGER stays convergent
-    * because the core's ledger-side anti-join drops already-reported
-    * pairs. Which dirs are read, skipped as torn, or refused as cut
-    * under other parameters is the [[StagedBatches]] contract. Absorb
-    * runs at compaction cadence, not per micro-batch, so the per-absorb
-    * fixed costs amortize exactly like the IVF family's.
-    * Returns (batches_absorbed, rows_appended, new_pairs). */
-  def lshIndexAbsorb(spark: org.apache.spark.sql.SparkSession,
-      stageDir: String, table: String, id: String,
-      threshold: Double = 0.5,
-      maxBucketSize: Int = DefaultMaxBucketSize): (Long, Long, Long) = {
-    StagedBatches.absorb(spark, stageDir, table, id,
-        StagedBatches.stamps(spark, table, LshStageKeys)) { staged =>
-      val rows = staged.join(
-        spark.table(table).select(col(id)), Seq(id), "leftanti").count()
-      (rows, lshIndexAppendIndexed(spark, table, staged, id,
-        threshold, maxBucketSize).count())
-    }.fold((0L, 0L, 0L)) { case (b, (rows, pairs)) => (b, rows, pairs) }
-  }
-
   /** Compact a durable LSH store's bucketed tables (main + `__bands`
     * twin) back to a fresh build's bounded per-bucket file count —
-    * run at the same compaction cadence as [[lshIndexAbsorb]]: every
-    * append adds files per bucket, and after thousands of micro-batches
-    * the footer-open cost creeps into every pruned read. Each table is
+    * run it on a maintenance cadence: every append adds files per
+    * bucket, and after thousands of appends the footer-open cost creeps
+    * into every pruned read. Each table is
     * one shuffle + a crash-convergent drop/rename swap
     * ([[graft.operators.Layout.compactBucketedTable]] — the parameter
     * stamps travel with the staging table, and mid-swap crash windows
@@ -821,10 +786,9 @@ object Dedup {
 
   /** The [[incrementalLshPairs]] append path when the new batch's index
     * rows are ALREADY materialized (both frames in [[indexDocs]] shape)
-    * — e.g. the streaming maintenance sink persists the batch's index
-    * rows anyway, so recomputing the CPU-bound signature pass here
-    * would double the per-batch cost. Same disjointness precondition on
-    * the two frames' ids. */
+    * — a caller that keeps the batch's index rows would double the
+    * per-batch cost by recomputing the CPU-bound signature pass here.
+    * Same disjointness precondition on the two frames' ids. */
   def incrementalLshPairsIndexed(
       oldIndex: DataFrame, newIndex: DataFrame, id: String,
       k: Int = 16, bands: Int = 4,

@@ -160,7 +160,7 @@ object Layout {
     * of a fresh build — the maintenance op every incremental store
     * eventually needs: each [[appendBucketed]] batch adds up to
     * [[MaxFilesPerBucket]] files per bucket, so a store absorbing
-    * thousands of micro-batches accretes files (and parquet footer
+    * thousands of appends accretes files (and parquet footer
     * opens on every scan) without bound. One shuffle of the table into
     * a `<table>__compact` staging twin with the SAME bucket spec (read
     * from the catalog — a drifted rewrite would silently break every
@@ -395,11 +395,11 @@ object Layout {
     *
     * Spark's AQE injects this automatically for one query when
     * `runtime.bloomFilter.enabled` fires; the explicit operator is for
-    * the cases AQE can't see: reusing one filter across MANY batch or
-    * micro-batch joins against the same dimension (stream enrichment,
-    * the backfill loop), or pre-filtering before an expensive non-join
-    * stage. The filter object is driver-built from the dim side
-    * (dim-scan cost, constant memory = the sketch) and broadcast. */
+    * the cases AQE can't see: reusing one filter across MANY batch
+    * joins against the same dimension (the backfill loop), or
+    * pre-filtering before an expensive non-join stage. The filter
+    * object is driver-built from the dim side (dim-scan cost, constant
+    * memory = the sketch) and broadcast. */
   def bloomPrunedJoin(fact: DataFrame, dim: DataFrame, key: String,
       expectedItems: Long = 1000000L, fpp: Double = 0.01,
       joinType: String = "inner"): DataFrame = {

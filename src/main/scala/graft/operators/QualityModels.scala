@@ -121,13 +121,16 @@ object QualityModels {
     val totals = broadcast(
       all.agg(count(lit(1)).as("na"), countDistinct("tok").as("v"))
         .crossJoin(tgt.agg(count(lit(1)).as("nt"))))
+    val mean = avg(log2(
+      ((col("ct") + 1) / (col("nt") + col("v")).cast("double")) /
+        ((col("ca") + 1) / (col("na") + col("v")).cast("double"))))
     all.join(broadcast(model), Seq("tok"))
       .crossJoin(totals)
       .groupBy(col(id))
+      // a negative mean that rounds to zero is -0.0, as DuckDB's ROUND
+      // gives; Spark's BigDecimal round alone drops the sign
       .agg(count(lit(1)).as("n_toks"),
-        round(avg(log2(
-          ((col("ct") + 1) / (col("nt") + col("v")).cast("double")) /
-            ((col("ca") + 1) / (col("na") + col("v")).cast("double")))), 4)
+        when(mean < 0, -round(-mean, 4)).otherwise(round(mean, 4))
           .as("log_ratio"))
       .orderBy(col(id))
   }
@@ -181,10 +184,8 @@ object QualityModels {
       source, alpha)
 
   /** [[temperatureMix]] when the per-source token counts are already
-    * materialized (a `(source, tokens)` frame) — the entry point for
-    * incrementally-maintained counts (streaming.EventStream keeps them
-    * as a versioned parquet state; the weights are recomputed from the
-    * sources-sized state without rescanning any corpus). */
+    * materialized (a `(source, tokens)` frame): the weights then cost
+    * only sources-sized work, with no corpus scan. */
   def temperatureMixFromCounts(perSource: DataFrame, source: String,
       alpha: Double): DataFrame = {
     require(alpha >= 0, s"alpha must be >= 0, got $alpha")

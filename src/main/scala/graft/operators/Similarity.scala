@@ -692,40 +692,6 @@ object Similarity {
       .orderBy("subspace")
   }
 
-  /** The store stamps an IVF stage's rows depend on — the marker
-    * [[StagedBatches]] records per staged batch: the grid, plus the
-    * codebook when the store is a codes store (stamped `graft.pq_id`). */
-  private[graft] def ivfStageStamps(spark: org.apache.spark.sql.SparkSession,
-      table: String): Seq[(String, String)] =
-    StagedBatches.stamps(spark, table, "graft.grid_id" +:
-      tableProp(spark, table, "graft.pq_id").map(_ => "graft.pq_id").toSeq)
-
-  /** Fold staged streaming batches (EventStream.streamingIvfStage's
-    * `stageDir/batch=<n>` dirs) into the persisted IVF(-PQ) index —
-    * exactly-once WITHOUT a marker ledger: staged rows are anti-joined
-    * against the index's ids before the append, so a crash between
-    * append and cleanup, a replayed absorb, or a half-deleted stage can
-    * never duplicate a vector. The staging zone is already idempotent
-    * per batch (overwrite-by-batchId), so the whole arrival path is
-    * crash-convergent end to end. Which dirs are read, skipped as torn,
-    * or refused as cut under another grid or codebook is the
-    * [[StagedBatches]] contract.
-    *
-    * Cost: one column-pruned id scan of the index per absorb (the
-    * anti-join's build side) + the staged mass — absorb runs at
-    * compaction cadence, not per micro-batch, exactly so this scan
-    * amortizes. Returns (batches_absorbed, rows_appended). */
-  def ivfIndexAbsorb(spark: org.apache.spark.sql.SparkSession,
-      stageDir: String, table: String, id: String): (Long, Long) =
-    StagedBatches.absorb(spark, stageDir, table, id,
-        ivfStageStamps(spark, table)) { staged =>
-      val fresh = staged.join(
-        spark.table(table).select(col(id)), Seq(id), "left_anti")
-      val n = fresh.count()
-      if (n > 0) Layout.appendBucketed(fresh, table)
-      n
-    }.getOrElse((0L, 0L))
-
   /** Per-cell occupancy of a persisted IVF(-PQ) index: vectors per cell
     * and each cell's ratio to the mean occupancy — the skew report that
     * tells an operator when the anchor grid has drifted from the data

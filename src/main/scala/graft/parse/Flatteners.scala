@@ -202,17 +202,14 @@ object Flatteners {
   val partitionCols: Seq[String] = Seq("year", "month", "day")
 
   /** Hive-partitioned parquet sink (parse.py:182-200), year/month/day
-    * layout — downstream scans get partition pruning. `mode` is Append
-    * for the batch parse's growing zones and Overwrite for a stream
-    * batch's own `batch=<id>` subtree.
+    * layout, appended to `dir` — downstream scans get partition pruning.
     *
     * The REBALANCE hint routes each hive partition's rows to as few
     * tasks as its volume needs (AQE splits oversized groups, coalesces
     * tiny ones): without it every write task emits one file into EVERY
     * partition it holds rows for — tasks × days small files at scale.
     * With it, a quiet day is one file and a heavy day still fans out. */
-  def writePartitioned(df: DataFrame, dir: String,
-      mode: SaveMode = SaveMode.Append): Unit =
+  def writePartitioned(df: DataFrame, dir: String): Unit =
     df.hint("rebalance", partitionCols.map(col): _*)
-      .write.mode(mode).partitionBy(partitionCols: _*).parquet(dir)
+      .write.mode(SaveMode.Append).partitionBy(partitionCols: _*).parquet(dir)
 }

@@ -7,10 +7,9 @@ import scala.collection.immutable.SeqMap
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, explode, from_json, to_timestamp}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, to_timestamp}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.ingest.{Fetch, HeightChunk, Manifest, RangePlanner, WatermarkStore}
 import graft.models.{Model, ModelRunner}
@@ -98,9 +97,7 @@ final class Pipeline(
     // Cost accepted with eyes open: while a poison ITEM persists
     // upstream, each gap-fill cycle refetches the chunk's good pages
     // and drops them again — bounded waste (one chunk per cycle),
-    // traded for never silently losing a multi-item height. The
-    // streaming path (EventStream) has no such span ledger and lands
-    // good pages row-wise instead.
+    // traded for never silently losing a multi-item height.
     val failed = results.filter(_.quarantined)
     val badChunks = failed.map(r => (r.start, r.end)).toSet
     // distinct absorbs the page-overlap duplicates a mid-chunk per-page
@@ -132,80 +129,6 @@ final class Pipeline(
     heights.size.toLong
   }
 
-  /** The reference's sync loop as ONE continuous streaming query per raw
-    * kind: `readStream.format("tendermint-rpc")` (offsets = block
-    * heights, checkpointed — metadata.json retired) → page envelopes →
-    * the kind's flatteners → the `<table>_stream` zones, through the
-    * same [[landBlocks]] and [[landTxs]] the batch parse uses. `blocks`
-    * lands the blocks table; `txs` lands every tx table from one
-    * persisted, deduped raw frame, time-enriched against the
-    * `blocks_stream` zone, so sync blocks first. Trigger.AvailableNow
-    * drains to the tip pinned at start and stops, so each invocation
-    * behaves like one `make pipeline` run with streaming's bookkeeping.
-    *
-    * Exactly-once without a transactional file log: each micro-batch
-    * overwrites its own `batch=<id>` subtree per table (the write is a
-    * deterministic function of (batchId, data) — the
-    * EventStream.runForeachBatchIdempotent pattern; the error ledger is
-    * append-idempotent), and height windows never overlap across
-    * batches, so a replayed batch lands in place instead of appending
-    * duplicates. Readers just `spark.read.parquet(zone)` — batch/year/
-    * month/day all come back as partition columns and day-level pruning
-    * works unchanged. */
-  def streamingSync(kind: String, fetcherClass: String, startHeight: Long = 1L,
-      chunk: Long = 1000L, maxBlocksPerBatch: Long = 10000L): StreamingQuery = {
-    val key = kind match {
-      case "blocks" => col("block.header.height")
-      case "txs"    => col("hash")
-    }
-    val envelope = StructType(Seq(StructField("result", StructType(Seq(
-      StructField(kind, ArrayType(Pipeline.rawSchema(kind))))))))
-    spark.readStream.format("tendermint-rpc")
-      .option("url", apiUrl).option("kind", kind)
-      .option("start", startHeight).option("chunk", chunk)
-      .option("maxBlocksPerBatch", maxBlocksPerBatch)
-      .option("perPage", perPage)
-      .option("fetcher", fetcherClass)
-      .load()
-      .writeStream
-      .option("checkpointLocation", s"$dataRoot/checkpoints/${kind}_sync")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // persist first: this body runs an action per landed table plus
-        // the page collect, and a foreachBatch frame re-executes its
-        // source per action — without the cache each would re-fetch
-        val pages = batch.persist()
-        try {
-          val spans = pages.select("start", "end", "quarantined").collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-          // quarantined pages → error-height ledger, as in writeRaw: the
-          // offset commits past them, so without the ledger the gap-fill
-          // planner could never recover those heights
-          ledger(kind, spans.toIndexedSeq.collect { case (s, e, true) => (s, e) })
-          // the batch's height window bounds the enrichment broadcast —
-          // the streaming analog of the batch path's filename-span prune
-          val span =
-            if (spans.isEmpty) None else Some((spans.map(_._1).min, spans.map(_._2).max))
-          val items = pages
-            .filter(col("quarantined") === false && col("body").isNotNull)
-            .select(explode(from_json(col("body"), envelope)
-              .getField("result").getField(kind)).as("r"))
-            .select("r.*")
-            .withColumn("__key", key)
-          // a mid-chunk degrade can re-cover already-fetched items (see
-          // writeRaw's distinct): one row per key (block height, tx
-          // hash). NULL keys (malformed rows) bypass the dedup, since
-          // dropDuplicates treats nulls as equal and would collapse them
-          val raw = items.filter(col("__key").isNotNull).dropDuplicates("__key")
-            .unionByName(items.filter(col("__key").isNull)).drop("__key")
-          val sink = Pipeline.StreamBatch(batchId)
-          if (kind == "blocks") landBlocks(raw, sink)
-          else landTxs(raw, Pipeline.txTables.keys.toSeq, span, sink)(_ => ())
-        } finally pages.unpersist()
-      }
-      .start()
-  }
-
   /** Parse stage (parse.py:202-226): manifest-filtered raw files →
     * 4 flatteners → time-enriched hive-partitioned parquet. */
   def parse(): Unit = {
@@ -230,7 +153,7 @@ final class Pipeline(
 
     val blockFiles = newFiles("blocks")
     if (blockFiles.nonEmpty) {
-      landBlocks(read("blocks", blockFiles), Pipeline.Append)
+      write("blocks", Flatteners.parseBlocks(read("blocks", blockFiles)))
       // record immediately after a successful write: a crash between
       // table writes must not leave files half-recorded
       manifest.record(blockFiles, "blocks")
@@ -256,20 +179,16 @@ final class Pipeline(
         .map(t => t -> manifest.newFiles(txFiles, s"txs:$t")).filter(_._2.nonEmpty)
       pending.map(_._2).distinct.foreach { files =>
         val tables = pending.collect { case (t, `files`) => t }
-        landTxs(read("txs", files), tables, span, Pipeline.Append)(t =>
+        landTxs(read("txs", files), tables, span)(t =>
           manifest.record(files, s"txs:$t"))
       }
       manifest.record(txFiles, "txs")
     }
   }
 
-  /** The blocks table from its raw items, into `sink`. */
-  private def landBlocks(raw: DataFrame, sink: Pipeline.Sink): Unit =
-    write("blocks", Flatteners.parseBlocks(raw), sink)
-
   /** Land one raw tx batch as `tables`: the raw frame is persisted once
     * and every table flattens from it, time-enriched against one blocks
-    * frame (the sink's blocks zone pruned to `span`). The tables land
+    * frame (the blocks zone pruned to `span`). The tables land
     * concurrently, one thread each, and `landed(table)` runs right after
     * that table's own write. Waits for every table, then rethrows the
     * first failure's own cause; the tables that landed stay landed.
@@ -277,19 +196,19 @@ final class Pipeline(
     * The pool is made here, per call: its threads inherit the caller's
     * Spark local properties (the stage's job description) when they
     * start, and end with the call. */
-  private def landTxs(raw: DataFrame, tables: Seq[String], span: Option[(Long, Long)],
-      sink: Pipeline.Sink)(landed: String => Unit): Unit = {
+  private def landTxs(raw: DataFrame, tables: Seq[String],
+      span: Option[(Long, Long)])(landed: String => Unit): Unit = {
     val cached = raw.persist()
     try {
       // an unbounded span (a foreign file name in the raw dir) joins the
       // whole blocks zone: no broadcast hint, AQE picks the strategy
       // from the real size
-      val blocks = enrichmentBlocks(span, s"blocks${sink.suffix}")
+      val blocks = enrichmentBlocks(span)
       val pool = Executors.newFixedThreadPool(tables.size)
       val failures = try tables.map { t =>
         pool.submit[Unit] { () =>
           val flat = Pipeline.txTables(t)(cached)
-          write(t, Flatteners.enrichTime(flat, blocks, hintBroadcast = span.isDefined), sink)
+          write(t, Flatteners.enrichTime(flat, blocks, hintBroadcast = span.isDefined))
           landed(t)
         }
       }.flatMap(w => Try(w.get()).failed.toOption)
@@ -301,11 +220,10 @@ final class Pipeline(
     } finally cached.unpersist()
   }
 
-  /** The one writer of the parsed zone: `flat` hive-partitioned into the
-    * sink's dir for `table`. The batch parse appends to `<table>`; a
-    * stream batch overwrites `<table>_stream/batch=<id>`. */
-  private def write(table: String, flat: DataFrame, sink: Pipeline.Sink): Unit =
-    Flatteners.writePartitioned(flat.drop("ts"), s"$parsedRoot/${sink.dir(table)}", sink.mode)
+  /** The one writer of the parsed zone: `flat` hive-partitioned and
+    * appended to `<table>`. */
+  private def write(table: String, flat: DataFrame): Unit =
+    Flatteners.writePartitioned(flat.drop("ts"), s"$parsedRoot/$table")
 
   /** The schema each static parsed table reads back with: the frame
     * [[write]] lands, hive partition columns last, as strings (partition
@@ -331,9 +249,9 @@ final class Pipeline(
     * appends stay invisible to it. Empty while the zone doesn't exist,
     * and for a zone dir with no parquet files yet (a zero-row write
     * leaves only `_SUCCESS`): nothing is inferred from footers. */
-  private def readZone(table: String, dir: String): DataFrame = {
+  private def readZone(table: String): DataFrame = {
     val schema = zoneSchemas(table)
-    val path = s"$parsedRoot/$dir"
+    val path = s"$parsedRoot/$table"
     if (Files.isDirectory(Paths.get(path))) spark.read.schema(schema).parquet(path)
     else spark.createDataFrame(java.util.List.of[Row](), schema)
   }
@@ -352,9 +270,8 @@ final class Pipeline(
     * broadcasts its blocks side, so the span bounds the broadcast to the
     * batch window and the height predicate prunes row groups.
     * Package-visible so PipelineSpec can audit the pruning. */
-  private[graft] def enrichmentBlocks(txSpan: Option[(Long, Long)],
-      zoneName: String = "blocks"): DataFrame = {
-    val zone = readZone("blocks", zoneName).withColumn("ts", to_timestamp(col("time")))
+  private[graft] def enrichmentBlocks(txSpan: Option[(Long, Long)]): DataFrame = {
+    val zone = readZone("blocks").withColumn("ts", to_timestamp(col("time")))
     txSpan.fold(zone) { case (lo, hi) => zone.filter(col("height").between(lo, hi)) }
   }
 
@@ -364,7 +281,7 @@ final class Pipeline(
     * to it: the bundled parsed models are views over these snapshots,
     * not copies of the zone (DIVERGENCES.md #9). */
   def runModels(models: Seq[Model]): Map[String, DataFrame] = {
-    Pipeline.staticTables.foreach(t => readZone(t, t).createOrReplaceTempView(t))
+    Pipeline.staticTables.foreach(t => readZone(t).createOrReplaceTempView(t))
     // events' pivot columns are data-dependent (parse.py:177-179): each
     // appended batch may carry a different column set, so the read must
     // union footers (mergeSchema) or a later batch's new event types
@@ -534,18 +451,6 @@ object Pipeline {
   /** The row schema of a raw kind's items. */
   private def rawSchema(kind: String): StructType =
     if (kind == "blocks") Flatteners.blockSchema else Flatteners.txSchema
-
-  /** Where the parsed tables land: the batch parse appends to
-    * `<table>`; stream batch `id` overwrites `<table>_stream/batch=<id>`,
-    * so a replayed batch lands in place. A tx table enriches against
-    * the blocks zone with the same `suffix`. */
-  private sealed abstract class Sink(val suffix: String, val mode: SaveMode) {
-    def dir(table: String): String = s"$table$suffix"
-  }
-  private case object Append extends Sink("", SaveMode.Append)
-  private final case class StreamBatch(id: Long) extends Sink("_stream", SaveMode.Overwrite) {
-    override def dir(table: String): String = s"${table}_stream/batch=$id"
-  }
 
   /** Outcome of one raw-zone extract: the landed `{start}_{end}.json`
     * path plus quarantine accounting. A run with quarantined chunks is

@@ -32,9 +32,9 @@ import org.apache.spark.sql.types.LongType
   *
   * At 100 TB this is the difference between a dashboard query scanning
   * the fact table and scanning a table 10^4× smaller; pairing it with
-  * `Cdc.refreshAgg` / `EventStream.runIncrementalAgg` (which maintain
-  * exactly such count+sum state incrementally) closes the loop: ingest
-  * maintains the MV, the rule routes queries to it.
+  * `Cdc.refreshAgg` (which maintains exactly such count+sum state
+  * incrementally) closes the loop: ingest maintains the MV, the rule
+  * routes queries to it.
   *
   * Scope (by design): sum/count/min/max over plain columns, grouping
   * by plain columns — min/max re-aggregate exactly (min of per-group

@@ -285,7 +285,7 @@ object AnalyticsQueries {
     * Spark's native window(ts, '1 hour', '30 minutes') — each event
     * fans to exactly two epoch-aligned windows (a narrow generate),
     * then one hash aggregate; the oracle mirrors the fan-out with
-    * time_bucket. The batch twin of the streaming windowedCounts. */
+    * time_bucket. */
   val q99 = Q(
     "q99_sliding_window",
     (s, d) =>

@@ -95,10 +95,9 @@ object TemporalQueries {
 
   /** Batch sessionization: per-user sessions split at >30min event-time
     * gaps — lag to flag session starts, running sum of flags for the
-    * session index, then one aggregate per session. The batch analog of
-    * streaming.EventStream.sessionize (same gap rule; the streaming
-    * side additionally closes sessions by watermark timeout). Durations
-    * are exact integer µs differences divided once. */
+    * session index, then one aggregate per session. A gap equal to the
+    * limit does not split (`>`, not `>=`). Durations are exact integer
+    * µs differences divided once. */
   val q62 = Q(
     "q62_sessionize",
     (s, d) => {

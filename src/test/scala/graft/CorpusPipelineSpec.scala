@@ -578,42 +578,6 @@ class CorpusPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(ex.getMessage != null)
   }
 
-  test("noveltyAppend: per-batch estimates track the exact novelty within the sketch bound") {
-    val docs = Tables.documents(spark, sf("sf0.01"))
-    // replay the q188 sharding as an append stream: 10 id-range batches
-    val mx = docs.agg(max("doc_id")).head().getLong(0)
-    def shardOf(s: Int) = docs.filter(
-      least(lit(9), floor(col("doc_id") * 10 / lit(mx + 1.0)).cast("long")) === s)
-    var state: Option[org.apache.spark.sql.DataFrame] = None
-    val reports = (0 until 10).map { s =>
-      val (ns, report) = CorpusPipeline.noveltyAppend(state, shardOf(s), "doc_id", "text")
-      // materialize the state like a checkpointing ingest loop would
-      val dir = java.nio.file.Files.createTempDirectory("novelty-state").toString
-      ns.write.mode("overwrite").parquet(dir)
-      state = Some(spark.read.parquet(dir))
-      val r = report.head()
-      assert(r.getLong(0) == s + 1) // batch_seq advances
-      (r.getLong(1), r.getDouble(2)) // (exact batch grams, est_new)
-    }
-    // fidelity contract (the q188 bound): each batch's estimated novelty
-    // lands within 10% of the batch gram count of the EXACT novelty.
-    // (HLL's HIP estimator is merge-order dependent, so estimates carry
-    // a few counts of run-to-run noise on top of the rsd — exactness is
-    // not on offer, the bound is.)
-    val exact = CorpusPipeline.shardNovelty(docs, "doc_id", "text",
-      numShards = 10, n = 4).collect()
-      .map(r => r.getLong(0) -> r.getLong(3)).toMap
-    reports.zipWithIndex.foreach { case ((grams, estNew), s) =>
-      assert(math.abs(estNew - exact(s.toLong)) <= 0.1 * grams + 5,
-        s"batch $s: est $estNew vs exact ${exact(s.toLong)} (grams $grams)")
-    }
-    // the running total tracks the full-corpus distinct gram count
-    val total = state.get.head().getDouble(2)
-    val exactTotal = exact.values.sum.toDouble
-    assert(math.abs(total - exactTotal) <= 0.02 * exactTotal,
-      s"running total $total vs exact $exactTotal")
-  }
-
   test("leakProofSplits: cluster members inherit one split and cross pairs are zero") {
     import spark.implicits._
     val docs = Seq(

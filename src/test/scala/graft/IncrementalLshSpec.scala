@@ -171,7 +171,8 @@ class IncrementalLshSpec extends SparkSpec {
     assert(spark.table(s"$db.idx").count() == rowsBefore + b0.count())
 
     // replayed append (client retry / crash after the data landed):
-    // zero new pairs, zero new rows — crash-convergent like ivfIndexAbsorb
+    // zero new pairs, zero new rows: the anti-join on stored ids makes
+    // the append crash-convergent
     val replay = pairSet(
       Dedup.lshIndexAppend(spark, s"$db.idx", b0, "doc_id", "text"))
     assert(replay.isEmpty, replay)

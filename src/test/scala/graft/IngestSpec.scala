@@ -272,4 +272,15 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
     assert(res.map(r => (r.start, r.end)).sorted.toSeq ==
       Seq((1L, 10L), (11L, 20L), (21L, 30L), (31L, 40L)))
   }
+
+  test("fetchAll: pages per chunk follow total_count") {
+    // 4 chunks of 25 heights, 25 items each at per_page 10 → 3 pages each
+    val res = Fetch.fetchAll(spark, Fetch.chunks(1, 100, 25), 10,
+      u => u, (s, e, p, pp) => s"""{"result":{"total_count":"${e - s + 1}"}}""",
+      ChainClient.parseTotalCount).collect()
+    assert(res.length == 12 && res.forall(!_.quarantined))
+    val byChunk = res.groupBy(r => (r.start, r.end))
+    assert(byChunk.keySet == Set((1L, 25L), (26L, 50L), (51L, 75L), (76L, 100L)))
+    assert(byChunk.values.forall(_.map(_.page).sorted.toSeq == Seq(1, 2, 3)))
+  }
 }

@@ -65,37 +65,13 @@ object MintNode extends Serializable {
     Base64.getEncoder.encodeToString(s.getBytes(StandardCharsets.UTF_8))
 }
 
-/** FakeNode plus a chain tip, for the streaming sync (the stream polls
+/** FakeNode plus a chain tip, for PipelineMain (which polls
   * /abci_info; FakeNode only serves search pages). */
 class FakeChainFetcher extends graft.sources.RpcFetcher {
   override def fetch(url: String): String =
     if (url.contains("abci_info"))
       """{"result":{"response":{"last_block_height":"5"}}}"""
     else FakeNode.fetch(url)
-}
-
-/** FakeChainFetcher that permanently fails real page fetches for the
-  * 3-4 height chunk (the 1-item count probe still answers), forcing the
-  * degrade → quarantine path inside a streaming batch. */
-class FlakyChainFetcher extends graft.sources.RpcFetcher {
-  private val inner = new FakeChainFetcher
-  override def fetch(url: String): String =
-    if (url.contains("height>=3") && !url.contains("page=1&per_page=1&"))
-      sys.error("oversized response")
-    else inner.fetch(url)
-}
-
-/** A two-block chain whose block headers carry no height (malformed
-  * node rows); it serves no txs. */
-class HeightlessChainFetcher extends graft.sources.RpcFetcher {
-  override def fetch(url: String): String =
-    if (url.contains("abci_info"))
-      """{"result":{"response":{"last_block_height":"2"}}}"""
-    else if (url.contains("block_search")) {
-      def block(h: Int) =
-        s"""{"block":{"header":{"chain_id":"e2e-1","time":"2023-08-0${h}T00:00:00Z","proposer_address":"P$h"},"data":{"txs":[]}}}"""
-      s"""{"result":{"total_count":"2","blocks":[${block(1)},${block(2)}]}}"""
-    } else """{"result":{"total_count":"0","txs":[]}}"""
 }
 
 /** Paging-honest fake node (5 blocks, one tx at height 1) with a
@@ -182,121 +158,6 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     // the claim was restored — a retry (or the next run) still sees the
     // heights instead of a silently emptied ledger
     assert(graft.ingest.ErrorHeights.read(root, "blocks") == Seq(2L, 3L))
-  }
-
-  test("streaming sync: rpc stream -> flatteners -> hive zone, exactly-once") {
-    val dir = Files.createTempDirectory("graft-stream-sync").toString
-    val p = new Pipeline(spark, dir, FakeNode.fetch)
-    def sync(): Unit = {
-      val q = p.streamingSync("blocks", classOf[FakeChainFetcher].getName,
-        startHeight = 1, chunk = 2, maxBlocksPerBatch = 2)
-      q.awaitTermination()
-    }
-    sync()
-    val zone = spark.read.parquet(s"$dir/parsed/blocks_stream")
-    val heights = zone.select("height").collect().map(_.getLong(0)).sorted.toSeq
-    assert(heights == (1L to 5L), s"zone heights: $heights")
-    // hive partition columns survive the batch-keyed layout and prune
-    assert(zone.columns.toSet.contains("day"))
-    assert(zone.filter(org.apache.spark.sql.functions.col("day") === "2023-08-03").count() == 1)
-    // drained in maxBlocksPerBatch=2 windows: [1,2] [3,4] [5]
-    assert(new java.io.File(s"$dir/parsed/blocks_stream").listFiles()
-      .count(_.getName.startsWith("batch=")) == 3)
-
-    sync() // tip unchanged: a second run must add nothing (exactly-once)
-    assert(spark.read.parquet(s"$dir/parsed/blocks_stream").count() == 5)
-  }
-
-  test("streaming tx sync: tx_search stream -> three zones, exactly-once, enriched") {
-    val dir = Files.createTempDirectory("graft-stream-txs").toString
-    val p = new Pipeline(spark, dir, FakeNode.fetch)
-    // blocks stream first: the tx stream's time enrichment reads its zone
-    p.streamingSync("blocks", classOf[FakeChainFetcher].getName,
-      startHeight = 1, chunk = 2, maxBlocksPerBatch = 2).awaitTermination()
-    def syncTxs(): Unit =
-      p.streamingSync("txs", classOf[FakeChainFetcher].getName,
-        startHeight = 1, chunk = 2, maxBlocksPerBatch = 2).awaitTermination()
-    syncTxs()
-
-    val txr = spark.read.parquet(s"$dir/parsed/tx_result_stream")
-    assert(txr.select("height").collect().map(_.getLong(0)).sorted.toSeq ==
-      Seq(1L, 3L, 5L)) // FakeNode: one tx at every odd height
-    // enrichment joined the per-height day strings from the blocks zone
-    assert(txr.filter("height = 3").head().getAs[String]("day") == "2023-08-03")
-    assert(txr.filter("day IS NULL").count() == 0)
-    // all three tx tables flow from the one stream
-    val la = spark.read.parquet(s"$dir/parsed/log_attributes_stream")
-    assert(la.filter("height = 1").head().getAs[String]("value") == "100uakt")
-    val ev = spark.read.parquet(s"$dir/parsed/events_stream")
-    assert(ev.filter("height = 5").head().getAs[String]("transfer_amount") == "500uakt")
-
-    syncTxs() // tip unchanged: a re-run must add nothing (exactly-once)
-    assert(spark.read.parquet(s"$dir/parsed/tx_result_stream").count() == 3)
-    assert(spark.read.option("mergeSchema", "true")
-      .parquet(s"$dir/parsed/events_stream").count() == 3)
-  }
-
-  test("streaming sync: quarantined pages land in the error ledger, not the void") {
-    // heights 3-4: count probe (page=1&per_page=1) succeeds; every real
-    // page fails → degrade to per_page 1 covers height 3, then page 2
-    // fails at per_page 1 → quarantine. The offset commits past the
-    // chunk, so the ledger is the ONLY record of the gap.
-    val dir = Files.createTempDirectory("graft-stream-quar").toString
-    val p = new Pipeline(spark, dir, FakeNode.fetch)
-    val q = p.streamingSync("blocks", classOf[FlakyChainFetcher].getName,
-      startHeight = 1, chunk = 2, maxBlocksPerBatch = 2)
-    q.awaitTermination()
-    val zone = spark.read.parquet(s"$dir/parsed/blocks_stream")
-    val heights = zone.select("height").collect().map(_.getLong(0)).sorted.toSeq
-    // FakeNode serves the full range in any page body, so the one page
-    // that survived the degrade still carries both blocks (and the
-    // height dedup keeps them single); what matters is the LEDGER:
-    // the quarantined chunk's heights are recorded for gap-fill even
-    // though the stream's offset committed past them
-    assert(heights == (1L to 5L), s"zone heights: $heights")
-    val ledger = graft.ingest.ErrorHeights.read(dir, "blocks")
-    assert(ledger.toSet == Set(3L, 4L), s"ledger: $ledger")
-  }
-
-  test("streaming sync: rows without a key are not collapsed by the overlap dedup") {
-    // two distinct blocks, neither with header.height, in one batch: the
-    // dedup on height must pass null keys through, as the batch parse
-    // lands every such row
-    val dir = Files.createTempDirectory("graft-stream-nullkey").toString
-    val p = new Pipeline(spark, dir, FakeNode.fetch)
-    p.streamingSync("blocks", classOf[HeightlessChainFetcher].getName,
-      startHeight = 1, chunk = 2, maxBlocksPerBatch = 2).awaitTermination()
-    val zone = spark.read.parquet(s"$dir/parsed/blocks_stream")
-    val landed = zone.filter("height IS NULL").select("proposer_address")
-      .collect().map(_.getString(0)).sorted.toSeq
-    assert(landed == Seq("P1", "P2"), s"header-less blocks landed: $landed")
-  }
-
-  test("the batch parse and the streaming sync land the same rows") {
-    def pipeline(prefix: String) = {
-      val root = Files.createTempDirectory(prefix).toString
-      (root, new Pipeline(spark, root, FakeNode.fetch))
-    }
-    val (batchRoot, batch) = pipeline("graft-land-batch")
-    Seq("blocks", "txs").foreach(batch.extractRange(_, 1, 5))
-    batch.parse()
-    val (streamRoot, stream) = pipeline("graft-land-stream")
-    Seq("blocks", "txs").foreach(stream.streamingSync(_,
-      classOf[FakeChainFetcher].getName, startHeight = 1, chunk = 2,
-      maxBlocksPerBatch = 2).awaitTermination())
-    // the header line, then every row, columns sorted by name; events'
-    // pivot columns differ per batch, so footers are merged
-    def rows(zone: String): Seq[String] = {
-      val df = spark.read.option("mergeSchema", "true").parquet(zone).drop("batch")
-      val cols = df.columns.sorted
-      cols.mkString(",") +: df.select(cols.map(df.col): _*).collect().map(_.toString).sorted.toSeq
-    }
-    Seq("blocks", "tx_result", "log_attributes", "events").foreach { t =>
-      val landed = rows(s"$batchRoot/parsed/$t")
-      val streamed = rows(s"$streamRoot/parsed/${t}_stream")
-      assert(landed.size > 1 && landed == streamed,
-        s"$t\nbatch:  ${landed.mkString("\n        ")}\nstream: ${streamed.mkString("\n        ")}")
-    }
   }
 
   test("degrade-overlap duplicates never reach the raw zone") {

@@ -41,6 +41,19 @@ class QualityModelsSpec extends AnyFunSuite with SparkSpec {
     assert(out(1L)._2 > 0 && out(2L)._2 < 0)
   }
 
+  test("dsirLogRatio: a tiny negative mean rounds to -0.0, not 0.0") {
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "en", "b b g d c a"),
+      (2L, "en", "f e b f d g c a e"), // mean log2 ratio ≈ -0.0000365
+      (3L, "de", "a e d")).toDF("doc_id", "lang", "text")
+    val out = QualityModels.dsirLogRatio(docs, "doc_id", "text", col("lang") === "en")
+      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    assert(bits(out(2L)) == bits(-0.0), s"log_ratio ${out(2L)}")
+    assert(out(1L) == 0.0461 && out(3L) == -0.2306)
+  }
+
   test("vocabOovRate: rank-selected vocab, per-doc OOV fraction") {
     import spark.implicits._
     // counts: b=4, a=2, c=1 → top-1 vocab = {b}

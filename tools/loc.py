@@ -17,13 +17,14 @@ import os
 import sys
 
 
-def code_lines(text):
-    """Lines of `text` that hold code once comments are removed."""
-    count = 0
+def strip_comments(text):
+    """Each line of `text` with its comments removed (string literals,
+    comment markers inside them included, are kept)."""
+    out = []
     depth = 0          # nesting depth of /* */ comments
     in_triple = False  # inside a """...""" string literal
     for line in text.splitlines():
-        has_code = False
+        kept = []
         i, n = 0, len(line)
         in_str = False
         while i < n:
@@ -43,8 +44,9 @@ def code_lines(text):
                     break
                 depth = 1
                 i += 2
+                kept.append(" ")
                 continue
-            has_code = has_code or not line[i].isspace()
+            start = i
             if in_triple:
                 if line.startswith('"""', i):
                     in_triple = False
@@ -72,9 +74,14 @@ def code_lines(text):
                 i = n if end < 0 else end + 1
             else:
                 i += 1
-        if has_code:
-            count += 1
-    return count
+            kept.append(line[start:i])
+        out.append("".join(kept))
+    return out
+
+
+def code_lines(text):
+    """Lines of `text` that hold code once comments are removed."""
+    return sum(1 for line in strip_comments(text) if line.strip())
 
 
 def scala_files(paths):

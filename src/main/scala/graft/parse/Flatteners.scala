@@ -124,15 +124,16 @@ object Flatteners {
     * attributes (parse.py:171-172), `combined_key = type + '_' + key`
     * (parse.py:177), `occurrence` = per-(hash, height, combined_key)
     * ordinal in (event, attribute) position order — the deterministic
-    * analog of pandas cumcount (parse.py:178). */
-  def parseEventsLong(raw: DataFrame): DataFrame = {
+    * analog of pandas cumcount (parse.py:178). `oneTask` numbers them in
+    * one partition, with no shuffle, for a frame written by one task. */
+  def parseEventsLong(raw: DataFrame, oneTask: Boolean = false): DataFrame = {
     val order = Window
       .partitionBy("hash", "height", "combined_key")
       .orderBy("event_pos", "attr_pos")
     // clustered on (hash, height): that one shuffle satisfies both the
     // window's and the wide pivot's (hash, height, occurrence) grouping
     eventAttributes(raw)
-      .repartition(col("hash"), col("height"))
+      .transform(a => if (oneTask) a.coalesce(1) else a.repartition(col("hash"), col("height")))
       .withColumn("occurrence", (row_number().over(order) - 1).cast(LongType))
       .select("hash", "height", "occurrence", "combined_key", "value")
   }
@@ -158,17 +159,18 @@ object Flatteners {
     * (parse.py:179). Column set is data-dependent, same as pandas;
     * batches pivot independently and the read-side `mergeSchema` union
     * reproduces the reference's concat of differently-shaped wide
-    * frames.
+    * frames. `oneTask` as in [[parseEventsLong]].
     *
     * The keys come from one single-stage job (each task's distinct
-    * keys, merged on the driver) and are sorted in Spark's string order
-    * (UTF-8 bytes), so the columns are those, in the order, that
-    * `pivot("combined_key")` would resolve with its own multi-job
-    * distinct scan. DIVERGENCE #8 (DIVERGENCES.md): pandas widens
-    * unboundedly, this fails loudly past `spark.sql.pivotMaxValues`
-    * (default 10k) with Spark's own pivot error — a type_key explosion
-    * becomes an analysis error, not an unusably wide table. */
-  def parseEventsWide(raw: DataFrame): DataFrame = {
+    * keys, merged on the driver), run when this is called, and are
+    * sorted in Spark's string order (UTF-8 bytes), so the columns are
+    * those, in the order, that `pivot("combined_key")` would resolve
+    * with its own multi-job distinct scan. DIVERGENCE #8
+    * (DIVERGENCES.md): pandas widens unboundedly, this fails loudly past
+    * `spark.sql.pivotMaxValues` (default 10k) with Spark's own pivot
+    * error — a type_key explosion becomes an analysis error, not an
+    * unusably wide table. */
+  def parseEventsWide(raw: DataFrame, oneTask: Boolean = false): DataFrame = {
     val maxValues = raw.sparkSession.conf.get(pivotMaxValues).toInt
     val keys = eventAttributes(raw).select("combined_key").as(Encoders.STRING)
       .mapPartitions((it: Iterator[String]) => it.toSet.iterator)(Encoders.STRING)
@@ -178,7 +180,7 @@ object Flatteners {
         "pivotColumn" -> "combined_key", "maxValues" -> maxValues.toString,
         "config" -> pivotMaxValues))
     val sorted = keys.map(UTF8String.fromString).sortWith(_.binaryCompare(_) < 0).map(_.toString)
-    parseEventsLong(raw)
+    parseEventsLong(raw, oneTask)
       .groupBy("hash", "height", "occurrence")
       .pivot("combined_key", sorted.toSeq)
       .agg(first("value"))
@@ -191,11 +193,14 @@ object Flatteners {
     * (Pipeline.landTxs prunes it to the batch's height span) — then it is
     * per-batch small → broadcast and the fact side never shuffles. Pass
     * `hintBroadcast = false` when no bound is known and AQE should pick
-    * the strategy from the real size. */
+    * the strategy from the real size. `oneTask` joins both sides in one
+    * partition instead, for a frame the caller writes with one task: a
+    * hash join with no exchange, and no job to build a broadcast. */
   def enrichTime(table: DataFrame, blocks: DataFrame,
-      hintBroadcast: Boolean = true): DataFrame = {
+      hintBroadcast: Boolean = true, oneTask: Boolean = false): DataFrame = {
     val b = blocks.select("height", "ts", "day", "month", "year")
-    table.join(if (hintBroadcast) broadcast(b) else b, Seq("height"), "left")
+    if (oneTask) table.coalesce(1).join(b.coalesce(1).hint("shuffle_hash"), Seq("height"), "left")
+    else table.join(if (hintBroadcast) broadcast(b) else b, Seq("height"), "left")
   }
 
   /** The hive partition columns of every parsed table, outermost first. */
@@ -208,8 +213,10 @@ object Flatteners {
     * tasks as its volume needs (AQE splits oversized groups, coalesces
     * tiny ones): without it every write task emits one file into EVERY
     * partition it holds rows for — tasks × days small files at scale.
-    * With it, a quiet day is one file and a heavy day still fans out. */
-  def writePartitioned(df: DataFrame, dir: String): Unit =
-    df.hint("rebalance", partitionCols.map(col): _*)
+    * With it, a quiet day is one file and a heavy day still fans out.
+    * `oneTask` writes a frame the caller knows is small with one task
+    * instead: the same one file per day, without the rebalance shuffle. */
+  def writePartitioned(df: DataFrame, dir: String, oneTask: Boolean = false): Unit =
+    (if (oneTask) df.coalesce(1) else df.hint("rebalance", partitionCols.map(col): _*))
       .write.mode(SaveMode.Append).partitionBy(partitionCols: _*).parquet(dir)
 }

@@ -1,14 +1,17 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{ExecutionException, Executors}
+import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
+import java.util.concurrent.{ExecutionException, Executors, Future}
 
 import scala.collection.immutable.SeqMap
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, to_timestamp}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.ingest.{Fetch, HeightChunk, Manifest, RangePlanner, WatermarkStore}
@@ -116,7 +119,10 @@ final class Pipeline(
     val dir = Paths.get(rawDir(kind))
     Files.createDirectories(dir)
     val path = dir.resolve(s"${start}_$end.json")
-    Files.writeString(path, JsonMethods.compact(JArray(items.toList)))
+    // temp + atomic rename: a crash mid-write leaves no torn file under
+    // the name parse reads (the temp name is not a `.json` file)
+    Files.move(Files.writeString(dir.resolve(s".${start}_$end.json.tmp"),
+      JsonMethods.compact(JArray(items.toList))), path, ATOMIC_MOVE, REPLACE_EXISTING)
     new WatermarkStore(rawDir(kind)).updateFromFiles()
     Pipeline.RawWrite(path.toString, chunksPlanned, badChunks.size, heightsQuarantined)
   }
@@ -146,14 +152,21 @@ final class Pipeline(
         }
       manifest.newFiles(all, kind)
     }
-    // raw files are single JSON arrays (orjson list dump) → multiLine
+    // raw files are single JSON arrays (orjson list dump) → multiLine;
+    // FAILFAST: a document that does not parse fails the stage, where the
+    // default mode would land its prefix plus an all-null row
     def read(kind: String, files: Seq[String]): DataFrame =
       spark.read.schema(Pipeline.rawSchema(kind)).option("multiLine", "true")
-        .json(files.map(f => s"${rawDir(kind)}/$f"): _*)
+        .option("mode", "FAILFAST").json(files.map(f => s"${rawDir(kind)}/$f"): _*)
+    // raw bytes that fit one AQE advisory partition: AQE would coalesce
+    // the write's rebalance to one task anyway, so write with one task
+    def oneTask(kind: String, files: Seq[String]): Boolean =
+      files.map(f => Files.size(Paths.get(rawDir(kind), f))).sum <=
+        spark.sessionState.conf.getConf(ADVISORY_PARTITION_SIZE_IN_BYTES)
 
     val blockFiles = newFiles("blocks")
     if (blockFiles.nonEmpty) {
-      write("blocks", Flatteners.parseBlocks(read("blocks", blockFiles)))
+      write("blocks", Flatteners.parseBlocks(read("blocks", blockFiles)), oneTask("blocks", blockFiles))
       // record immediately after a successful write: a crash between
       // table writes must not leave files half-recorded
       manifest.record(blockFiles, "blocks")
@@ -179,7 +192,7 @@ final class Pipeline(
         .map(t => t -> manifest.newFiles(txFiles, s"txs:$t")).filter(_._2.nonEmpty)
       pending.map(_._2).distinct.foreach { files =>
         val tables = pending.collect { case (t, `files`) => t }
-        landTxs(read("txs", files), tables, span)(t =>
+        landTxs(read("txs", files), tables, span, span.isDefined && oneTask("txs", files))(t =>
           manifest.record(files, s"txs:$t"))
       }
       manifest.record(txFiles, "txs")
@@ -188,42 +201,60 @@ final class Pipeline(
 
   /** Land one raw tx batch as `tables`: the raw frame is persisted once
     * and every table flattens from it, time-enriched against one blocks
-    * frame (the blocks zone pruned to `span`). The tables land
-    * concurrently, one thread each, and `landed(table)` runs right after
-    * that table's own write. Waits for every table, then rethrows the
-    * first failure's own cause; the tables that landed stay landed.
+    * frame (the blocks zone pruned to `span`, collected once into local
+    * rows on a pool thread). The tables are built on the caller's
+    * thread, where the events flattener's key collect is the one job
+    * that reads the raw batch: the persisted frame is built before the
+    * writes fan out over it. They land concurrently, one thread each,
+    * and `landed(table)` runs right after that table's own write. Waits
+    * for every table, then rethrows the first failure's own cause; the
+    * tables that landed stay landed.
+    *
+    * A `oneTask` batch runs each table as one job of one task: the
+    * events occurrences are numbered and the blocks joined inside the
+    * write's task, so no shuffle or broadcast job runs.
     *
     * The pool is made here, per call: its threads inherit the caller's
     * Spark local properties (the stage's job description) when they
     * start, and end with the call. */
-  private def landTxs(raw: DataFrame, tables: Seq[String],
-      span: Option[(Long, Long)])(landed: String => Unit): Unit = {
+  private def landTxs(raw: DataFrame, tables: Seq[String], span: Option[(Long, Long)],
+      oneTask: Boolean)(landed: String => Unit): Unit = {
     val cached = raw.persist()
+    val pool = Executors.newFixedThreadPool(tables.size)
+    def await[T](f: Future[T]): T = try f.get() catch { case e: ExecutionException => throw e.getCause }
+    // an unbounded span (a foreign file name in the raw dir) joins the
+    // whole blocks zone: no broadcast hint, AQE picks the strategy from
+    // the real size
+    val blocks = pool.submit[DataFrame] { () =>
+      val zone = enrichmentBlocks(span)
+      if (span.isEmpty) zone else spark.createDataFrame(zone.collect().toSeq.asJava, zone.schema)
+    }
     try {
-      // an unbounded span (a foreign file name in the raw dir) joins the
-      // whole blocks zone: no broadcast hint, AQE picks the strategy
-      // from the real size
-      val blocks = enrichmentBlocks(span)
-      val pool = Executors.newFixedThreadPool(tables.size)
-      val failures = try tables.map { t =>
+      val flats = tables.map(t => t -> Pipeline.txTables(t)(cached, oneTask))
+      val writes = flats.map { case (t, flat) =>
         pool.submit[Unit] { () =>
-          val flat = Pipeline.txTables(t)(cached)
-          write(t, Flatteners.enrichTime(flat, blocks, hintBroadcast = span.isDefined))
+          write(t, Flatteners.enrichTime(flat, await(blocks), span.isDefined, oneTask), oneTask)
           landed(t)
         }
-      }.flatMap(w => Try(w.get()).failed.toOption)
-      finally pool.shutdown()
-      failures.headOption.foreach {
-        case e: ExecutionException => throw e.getCause
-        case e                     => throw e
       }
-    } finally cached.unpersist()
+      writes.flatMap(w => Try(await(w)).failed.toOption).headOption.foreach(throw _)
+    } finally {
+      Try(blocks.get())
+      pool.shutdown()
+      cached.unpersist()
+    }
   }
 
   /** The one writer of the parsed zone: `flat` hive-partitioned and
-    * appended to `<table>`. */
-  private def write(table: String, flat: DataFrame): Unit =
-    Flatteners.writePartitioned(flat.drop("ts"), s"$parsedRoot/$table")
+    * appended to `<table>`, by one task when `oneTask`. */
+  private def write(table: String, flat: DataFrame, oneTask: Boolean): Unit = {
+    val rows = flat.drop("ts")
+    if (table == "events") eventsLanded ++= rows.columns
+    Flatteners.writePartitioned(rows, s"$parsedRoot/$table", oneTask)
+  }
+
+  /** Every column of an events batch this Pipeline landed. */
+  @volatile private var eventsLanded = Set.empty[String]
 
   /** The schema each static parsed table reads back with: the frame
     * [[write]] lands, hive partition columns last, as strings (partition
@@ -236,7 +267,7 @@ final class Pipeline(
     val blocks = Flatteners.parseBlocks(empty("blocks"))
     Pipeline.staticTables.map { t =>
       val landed = Pipeline.txTables.get(t)
-        .fold(blocks)(parseF => Flatteners.enrichTime(parseF(empty("txs")), blocks))
+        .fold(blocks)(parseF => Flatteners.enrichTime(parseF(empty("txs"), false), blocks))
       val data = landed.drop("ts").schema
         .filterNot(f => Flatteners.partitionCols.contains(f.name))
       val parts = Flatteners.partitionCols.map(StructField(_, StringType))
@@ -279,22 +310,47 @@ final class Pipeline(
     * parsed zone. Each parsed table registers as a temp view of the
     * zone's files as of this call, and `{{ source("parsed", t) }}` binds
     * to it: the bundled parsed models are views over these snapshots,
-    * not copies of the zone (DIVERGENCES.md #9). */
-  def runModels(models: Seq[Model]): Map[String, DataFrame] = {
-    Pipeline.staticTables.foreach(t => readZone(t).createOrReplaceTempView(t))
-    // events' pivot columns are data-dependent (parse.py:177-179): each
-    // appended batch may carry a different column set, so the read must
-    // union footers (mergeSchema) or a later batch's new event types
-    // silently vanish behind one file's schema. A zone whose every batch
-    // was empty has no footers to merge — it stays unregistered.
-    val events = s"$parsedRoot/events"
-    if (Files.isDirectory(Paths.get(events)))
-      try spark.read.option("mergeSchema", "true").parquet(events)
-        .createOrReplaceTempView("events")
-      catch { case _: AnalysisException => () }
-    val sources = (Pipeline.staticTables :+ "events").map(t => ("parsed", t) -> t).toMap
-    new ModelRunner(spark, sources).run(models)
+    * not copies of the zone (DIVERGENCES.md #9).
+    *
+    * The DAG is built once and then refreshed in place: a later call
+    * with the same all-`view` models relists the held source frames'
+    * files and returns new frames over the held plans — no read, no
+    * view registration, no job — as long as every source is a file
+    * relation, the session's temp views are still the ones this build
+    * registered, and no events batch landed since has a column the
+    * events view lacks. Anything else rebuilds. */
+  def runModels(models: Seq[Model]): Map[String, DataFrame] = held match {
+    case Some(h) if h.models == models && eventsLanded.subsetOf(h.sources("events").columns.toSet)
+        && h.views.forall { case (n, v) => tempView(n).exists(_ eq v) } =>
+      h.sources.values.foreach(_.queryExecution.analyzed.refresh())
+      // new frames over the held plans: an action on a frame plans its
+      // file list once, so a frame acted on before would stay stale
+      h.out.view.mapValues(GraftBridge.rebind(spark, _)).toMap
+    case _ =>
+      // events' pivot columns are data-dependent (parse.py:177-179): each
+      // appended batch may carry a different column set, so the read must
+      // union footers (mergeSchema) or a later batch's new event types
+      // silently vanish behind one file's schema. A zone whose every batch
+      // was empty has no footers to merge — it stays unregistered.
+      val events = Some(s"$parsedRoot/events").filter(p => Files.isDirectory(Paths.get(p)))
+        .flatMap(p => try Some(spark.read.option("mergeSchema", "true").parquet(p))
+          catch { case _: AnalysisException => None })
+      val sources = Pipeline.staticTables.map(t => t -> readZone(t)).toMap ++ events.map("events" -> _)
+      sources.foreach { case (t, df) => df.createOrReplaceTempView(t) }
+      val parsed = (Pipeline.staticTables :+ "events").map(t => ("parsed", t) -> t).toMap
+      val out = new ModelRunner(spark, parsed).run(models)
+      val files = sources.values.forall(_.queryExecution.analyzed.isInstanceOf[LogicalRelation])
+      held = Option.when(files && events.nonEmpty && models.forall(_.materialization == "view"))(
+        Pipeline.Held(models, sources, out,
+          (sources.keys ++ out.keys).flatMap(n => tempView(n).map(n -> _)).toMap))
+      out
   }
+
+  /** The last [[runModels]] build, while a later call may refresh it. */
+  private var held: Option[Pipeline.Held] = None
+
+  private def tempView(name: String): Option[AnyRef] =
+    spark.sessionState.catalog.getRawTempView(name)
 
   /** Gap-fill stage (Q3 — left dormant in the reference,
     * pipelines/pipeline.py:99-109/120-123; wired into the flow here per
@@ -439,11 +495,17 @@ final class Pipeline(
 }
 
 object Pipeline {
-  /** The tx-derived parsed tables in landing order, with their flatteners. */
-  private val txTables: SeqMap[String, DataFrame => DataFrame] = SeqMap(
-    "tx_result" -> (Flatteners.parseTxResult(_)),
-    "log_attributes" -> (Flatteners.parseLogAttributes(_)),
-    "events" -> (Flatteners.parseEventsWide(_)))
+  /** The tx-derived parsed tables in landing order, with their flatteners
+    * of a raw batch, given whether one task writes it. */
+  private val txTables: SeqMap[String, (DataFrame, Boolean) => DataFrame] = SeqMap(
+    "tx_result" -> ((raw, _) => Flatteners.parseTxResult(raw)),
+    "log_attributes" -> ((raw, _) => Flatteners.parseLogAttributes(raw)),
+    "events" -> (Flatteners.parseEventsWide(_, _)))
+
+  /** A [[runModels]] build: its models, the source frames it registered,
+    * its output and every temp view it left in the session. */
+  private final case class Held(models: Seq[Model], sources: Map[String, DataFrame],
+      out: Map[String, DataFrame], views: Map[String, AnyRef])
 
   /** The parsed tables whose columns are fixed by their flattener. */
   val staticTables: Seq[String] = Seq("blocks", "tx_result", "log_attributes")

@@ -450,6 +450,173 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     assert(out("blocks").count() == 5 && out("tx_result").count() == 3)
   }
 
+  /** (job description, ran inside a SQL execution) of every job `body`
+    * starts, and the descriptions of its SQL executions. */
+  private def ladder(body: => Unit): (Seq[(String, Boolean)], Seq[String]) = {
+    import org.apache.spark.scheduler.SparkListenerEvent
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
+    val sqls = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((String.valueOf(e.properties.getProperty("spark.job.description")),
+          e.properties.getProperty("spark.sql.execution.id") != null))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => sqls.add(s.description)
+        case _ => ()
+      }
+    }
+    GraftBridge.waitForListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; GraftBridge.waitForListenerBus(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    (jobs.asScala.toSeq, sqls.asScala.toSeq)
+  }
+
+  test("increment job budget: parse runs at most 8 jobs, a reused run_models none") {
+    val root = Files.createTempDirectory("graft-increment-budget").toString
+    val pipe = new Pipeline(spark, root, FakeNode.fetch)
+    val models = BreadModels.parsedModels
+    val first = pipe.run(tip = 3, chainFloor = 1, numBlocks = 2, models = models)
+    assert(first("blocks").collect().length == 3)
+    var out = Map.empty[String, DataFrame]
+    val (jobs, sqls) = ladder {
+      out = pipe.runWithReport(tip = 5, chainFloor = 1, numBlocks = 2, models = models)._1
+    }
+    val parse = jobs.filter(_._1 == "pipeline.parse_data")
+    assert(parse.nonEmpty && parse.size <= 8, parse)
+    assert(parse.forall(_._2), parse)
+    assert(!jobs.exists(_._1 == "pipeline.run_models"), jobs)
+    assert(!sqls.contains("pipeline.run_models"), sqls)
+    assert(out("blocks").collect().length == 5 && out("tx_result").count() == 3)
+    assert(first("blocks").count() == 5)
+    val (again, againSqls) = ladder(pipe.runModels(models))
+    assert(again.isEmpty && againSqls.isEmpty, (again, againSqls))
+  }
+
+  test("events widening: a batch with a new pivot column rebuilds the events view") {
+    val root = Files.createTempDirectory("graft-events-widen").toString
+    val pipe = new Pipeline(spark, root, MintNode.fetch)
+    pipe.extractRange("blocks", 1, 5)
+    pipe.extractRange("txs", 1, 3)
+    pipe.parse() // transfer_amount only
+    assert(!pipe.runModels(BreadModels.parsedModels)("events").columns.contains("mint_supply"))
+    pipe.extractRange("txs", 4, 5)
+    pipe.parse() // mint_supply only
+    val events = pipe.runModels(BreadModels.parsedModels)("events")
+    assert(Set("transfer_amount", "mint_supply").subsetOf(events.columns.toSet),
+      events.columns.mkString(", "))
+    val rows = events.collect().toSet
+    val fresh = new Pipeline(spark, root, MintNode.fetch).runModels(BreadModels.parsedModels)("events")
+    assert(fresh.columns.toSeq == events.columns.toSeq)
+    assert(fresh.collect().toSet == rows && rows.size == 3)
+  }
+
+  test("two Pipelines in one session: the views answer for the last runModels caller's zone") {
+    def zone(tip: Long): Pipeline = {
+      val pipe = new Pipeline(spark, Files.createTempDirectory("graft-two-zones").toString,
+        FakeNode.fetch)
+      Seq("blocks", "txs").foreach(pipe.extractRange(_, 1, tip))
+      pipe.parse()
+      pipe
+    }
+    val (five, three) = (zone(5), zone(3))
+    def views: (Long, Long) =
+      (spark.table("blocks").count(), spark.table("tx_result").count())
+    for ((pipe, expected) <- Seq(five -> (5L, 3L), three -> (3L, 2L), five -> (5L, 3L),
+        five -> (5L, 3L), three -> (3L, 2L))) {
+      pipe.runModels(BreadModels.parsedModels)
+      assert(views == expected)
+    }
+  }
+
+  test("a DAG with a table model sees a second run's rows") {
+    val root = Files.createTempDirectory("graft-table-model").toString
+    val pipe = new Pipeline(spark, root, FakeNode.fetch)
+    val models = BreadModels.parsedModels :+
+      Model("tx_count", """select count(*) as n from {{ ref("tx_result") }}""", "table")
+    def txCount(): Long = pipe.runModels(models)("tx_count").head().getLong(0)
+    Seq("blocks", "txs").foreach(pipe.extractRange(_, 1, 3))
+    pipe.parse()
+    assert(txCount() == 2)
+    Seq("blocks", "txs").foreach(pipe.extractRange(_, 4, 5))
+    pipe.parse()
+    assert(txCount() == 3)
+  }
+
+  test("a batch larger than the advisory partition size keeps the rebalance; files per day stay bounded") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{REBALANCE_PARTITIONS_BY_COL, ShuffleExchangeExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // every block of this chain falls on one day, in one raw file per
+    // height: five read partitions for that day
+    val root = Files.createTempDirectory("graft-large-batch").toString
+    val pipe = new Pipeline(spark, root, url => FakeNode.fetch(url).replaceAll("2023-08-0\\d", "2023-08-01"))
+    (1L to 5L).foreach(h => pipe.extractRange("blocks", h, h))
+    val rawBytes = (1 to 5).map(h => Files.size(Paths.get(root, "rpc", "blocks", s"${h}_$h.json"))).sum
+    val rebalances = new java.util.concurrent.atomic.AtomicInteger(0)
+    def count(p: SparkPlan): Unit = p match {
+      case s: ShuffleExchangeExec if s.shuffleOrigin == REBALANCE_PARTITIONS_BY_COL =>
+        rebalances.incrementAndGet(); count(s.child)
+      case a: AdaptiveSparkPlanExec => count(a.executedPlan)
+      case s: QueryStageExec => count(s.plan)
+      case other => other.children.foreach(count)
+    }
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = count(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, (rawBytes - 1).toString)
+    spark.listenerManager.register(listener)
+    try { pipe.parse(); GraftBridge.waitForListenerBus(spark) }
+    finally {
+      spark.listenerManager.unregister(listener)
+      before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    assert(rebalances.get == 1)
+    val day = Paths.get(root, "parsed", "blocks", "year=2023", "month=2023-08", "day=2023-08-01")
+    val files = Files.list(day)
+    val parquet = try files.iterator().asScala.count(_.toString.endsWith(".parquet")) finally files.close()
+    assert(parquet >= 1 && parquet < 5, s"$parquet files for one day from 5 read partitions")
+    assert(spark.read.parquet(s"$root/parsed/blocks").count() == 5)
+  }
+
+  test("a torn raw file fails the parse and lands nothing; re-extracting the range heals it") {
+    def parquetFiles(root: String, table: String): Long = {
+      val dir = Paths.get(root, "parsed", table)
+      if (!Files.isDirectory(dir)) 0L
+      else {
+        val s = Files.walk(dir)
+        try s.iterator().asScala.count(_.toString.endsWith(".parquet")).toLong finally s.close()
+      }
+    }
+    for (kind <- Seq("blocks", "txs")) {
+      val root = Files.createTempDirectory(s"graft-torn-$kind").toString
+      val pipe = new Pipeline(spark, root, FakeNode.fetch)
+      Seq("blocks", "txs").foreach(pipe.extractRange(_, 1, 5))
+      val raw = Paths.get(root, "rpc", kind, "1_5.json")
+      val body = Files.readString(raw)
+      Files.writeString(raw, body.take(body.length / 2))
+      intercept[Exception](pipe.parse())
+      val tables = if (kind == "blocks") Seq("blocks") else Seq("tx_result", "log_attributes", "events")
+      assert(tables.forall(parquetFiles(root, _) == 0), kind)
+      val m = new graft.ingest.Manifest(s"$root/parsed")
+      assert((kind +: tables.filter(_ != "blocks").map(t => s"txs:$t"))
+        .forall(k => m.newFiles(Seq("1_5.json"), k) == Seq("1_5.json")), kind)
+      pipe.extractRange(kind, 1, 5)
+      pipe.parse()
+      assert(spark.read.parquet(s"$root/parsed/blocks").select("height").as[Long](org.apache.spark.sql.Encoders.scalaLong)
+        .collect().sorted.toSeq == (1L to 5L))
+      val txr = spark.read.parquet(s"$root/parsed/tx_result")
+      assert(txr.select("height").as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().sorted.toSeq
+        == Seq(1L, 3L, 5L), kind)
+      assert(txr.filter("day IS NULL").count() == 0, kind)
+    }
+  }
+
   test("error-height ledger appends are idempotent under batch replay") {
     val root = Files.createTempDirectory("graft-ledger-replay").toString
     graft.ingest.ErrorHeights.append(root, Seq(3L, 4L))
